@@ -13,7 +13,10 @@ sides (DuckDB integer SUM/COUNT results are cast explicitly).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -37,102 +40,48 @@ def entry(spark: SparkSession) -> DataFrame:
     return table_profile(df, "lineitem")
 
 
-# The driver's correctness gate checks the FIRST 50 registry entries
-# only — order the newest / least-driver-proven queries first so each
-# round's CORRECTNESS_r{N} certifies the latest work. Names listed here
-# lead the registry (in this order); everything else follows in
-# definition order. A name that disappears from the registry is
-# silently skipped. KEEP len(_PRIORITY) <= GATE_SIZE: entries past
-# position 50 are NOT driver-certified this round (queries() warns if
-# the list overflows, so evictions are explicit, never silent).
+# The driver's correctness gate checks only the FIRST ``GATE_SIZE``
+# entries of queries(). The gate leads with the hand-listed entries the
+# latest change touched, then fills with the stalest driver stamps
+# (``CORRECTNESS_r*.json`` next to this file), so every entry cycles
+# through the gate. Everything after the gate keeps definition order.
 GATE_SIZE = 50
 
-_PRIORITY: list[str] = [
-    # --- r14 gate (50 slots, exactly full — tools/plan_rotation.py
-    # output verbatim at the r13→r14 round boundary, the same
-    # derivation tests/test_gate_hygiene.py enforces): (1) the 1
-    # promoted r13-queue entry (the funnel↔pipeline certification
-    # twin — a swap into the slot the r13
-    # minhash_xx64_parity_documents retirement freed; this round's
-    # ann_recall_embeddings retirement in turn staged
-    # km_survival_quantized_events into the queue, keeping
-    # registry+queue at the 300 ceiling). (2) The 2 forced re-certs
-    # whose r7 stamps cross the 6-round age ceiling this round.
-    # (3) The 47 stalest r8 re-certs (alphabetical within the
-    # cohort). Future gate windows are whatever
-    # tools/plan_rotation.py prints — SURVEY.md's gate paragraphs are
-    # generated from it (make survey-gates), never hand-typed.
-    # --- promoted r13 queue ---
-    "funnel_pipeline_parity_documents",
-    # --- forced: stamp past the age ceiling ---
-    "triangle_census_suppliers",
-    "waiting_suppliers_q21",
-    # --- stalest fill (r8 stamps) ---
-    "argmax_entity_supplier",
-    "argmax_order",
-    "argmax_order_per_status",
-    "asof_join_events_orders",
-    "asof_join_forward",
-    "audio_fingerprint_dedup_media",
-    "binary_stats_media",
-    "budget_select_documents",
-    "chunk_documents",
-    "components_supplier_mutual_knn",
-    "contamination_check",
-    "conversion_paths_events",
-    "corr_lineitem",
-    "cosine_topk_lsh",
-    "cube_revenue_status_priority",
-    "decode_stub_media",
-    "diff_columns_orders",
-    "dim_ablation_recall_embeddings",
-    "distinct_counts_lineitem",
-    "duplicate_count_lineitem",
-    "embedding_norms",
-    "event_disorder_events",
-    "frame_sample_media",
-    "group_agg_orders",
-    "grouped_distinct_parts",
-    "histogram_quantity",
-    "histogram_returnflag",
-    "hll_sliding_users_events",
-    "image_ahash_dedup_media",
-    "image_near_dup_media",
-    "impact_reach_supply_chain",
-    "incident_groups_events",
-    "inclusion_deps_star_schema",
-    "json_extract_events",
-    "label_centroid_stats",
-    "lead_lag_corr_events",
-    "limited_scan_topk",
-    "market_share_q8",
-    "monitor_suite_lake",
-    "null_counts_orders",
-    "scalar_string_funcs",
-    "seasonal_profile_events",
-    "slo_burn_rate_events",
-    "streaming_disorder_events",
-    "streaming_salted_distinct_events",
-    "streaming_slo_burn_events",
-    "time_weighted_value_events",
-]
+_PRIORITY: list[str] = ["km_survival_quantized_events"]
 
+
+def _last_certified(root: str) -> dict[str, int]:
+    """Newest round in which the driver certified each entry green. A
+    rows-only run (no oracle, rows recorded) is that entry's ceiling,
+    so it counts."""
+    last: dict[str, int] = {}
+    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", f).group(1))
+        with open(f) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            green = row.get("err") is None and row.get("rows_match")
+            rows_only = row.get("err") == "no_oracle"
+            if (green and row.get("hash_match", True)) or (
+                rows_only and row.get("spark_rows") is not None
+            ):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     qs = Q.SPARK_QUERIES
-    if len(_PRIORITY) > GATE_SIZE:
-        import warnings
-
-        warnings.warn(
-            f"_PRIORITY has {len(_PRIORITY)} names but the driver gate "
-            f"checks only the first {GATE_SIZE} registry entries — "
-            f"these will NOT be certified this round: "
-            f"{_PRIORITY[GATE_SIZE:]}",
-            stacklevel=2,
-        )
-    ordered = {n: qs[n] for n in _PRIORITY if n in qs}
-    ordered.update({n: f for n, f in qs.items() if n not in ordered})
+    last = _last_certified(_REPO_ROOT)
+    head = [n for n in _PRIORITY if n in qs]
+    # stalest stamp first, ties by name; never-certified entries
+    # (stamp 0) keep definition order, so no stamps at all means
+    # definition order
+    rest = sorted(
+        (n for n in qs if n not in head),
+        key=lambda n: (last.get(n, 0), n if n in last else ""),
+    )
+    ordered = {n: qs[n] for n in head + rest[: GATE_SIZE - len(head)]}
+    ordered.update(qs)
     return ordered
 
 

@@ -306,6 +306,53 @@ def timed_reps(run, reps: int, warmup: int, release) -> tuple[list[float], int]:
     return out, n
 
 
+def release_session_state(spark, baseline_tables: set[str]) -> None:
+    """Reset the session between timed reps: unpersist the LSH
+    candidate frames, clear the SQL cache, and drop every temp view
+    registered since ``baseline_tables`` was taken. Queries that
+    persist intermediates or register memory-sink tables would
+    otherwise accumulate cached blocks across the ~150 executions of
+    a full bench and slow the queries that run late in the session."""
+    from sparkobs.operators.dedup import unpersist_candidates
+
+    unpersist_candidates()
+    spark.catalog.clearCache()
+    for t in spark.catalog.listTables():
+        if t.name not in baseline_tables and t.tableType == "TEMPORARY":
+            spark.catalog.dropTempView(t.name)
+
+
+def bench_tail(names: list[str], run, release, budget: float) -> tuple[dict, list]:
+    """One warm-up + one timed rep per name through ``timed_reps``
+    (``run(name)`` executes it), until ``budget`` seconds are spent.
+    Returns ({name: sec}, skipped names). A failing query is recorded
+    as skipped, and a release that fails after it is logged, not
+    raised: one bad query must never cost the run its final record."""
+    timings: dict[str, float] = {}
+    skipped: list[str] = []
+    t0 = time.perf_counter()
+    for i, name in enumerate(names):
+        if time.perf_counter() - t0 > budget:
+            skipped += names[i:]
+            print(
+                f"# tail budget ({budget}s) exhausted — "
+                f"{len(names) - i} queries unmeasured this run",
+                file=sys.stderr,
+            )
+            break
+        try:
+            runs, _n = timed_reps(lambda: run(name), 1, 1, release)
+            timings[name] = round(runs[0], 3)
+        except Exception as exc:  # noqa: BLE001 — record, keep benching
+            skipped.append(name)
+            print(f"# tail {name} FAILED: {exc}", file=sys.stderr)
+            try:
+                release()
+            except Exception as rexc:  # noqa: BLE001
+                print(f"# tail {name}: release failed: {rexc}", file=sys.stderr)
+    return timings, skipped
+
+
 def pack_queries(timings: dict, budget: int = 1400) -> dict:
     """As many per-query p50 rows as fit ``budget`` bytes, slowest
     first (r14 verdict item 4, constrained by the driver contract):
@@ -435,18 +482,7 @@ def main() -> None:
     baseline_tables = {t.name for t in spark.catalog.listTables()}
 
     def _release_session_state():
-        # queries that persist intermediates (LSH candidate frames) or
-        # register memory-sink tables would otherwise accumulate cached
-        # blocks across the ~150 executions of a full bench, degrading
-        # the queries that run late in the session — measure each from
-        # a clean cache state
-        from sparkobs.operators.dedup import unpersist_candidates
-
-        unpersist_candidates()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables and t.tableType == "TEMPORARY":
-                spark.catalog.dropTempView(t.name)
+        release_session_state(spark, baseline_tables)
 
     missing = [n for n in HEADLINE if n not in qs]
     if missing:
@@ -484,48 +520,12 @@ def main() -> None:
     tail_skipped: list[str] = []
     if os.environ.get("SPARK_GRAFT_BENCH_TAIL", "1") != "0":
         tail_budget = float(os.environ.get("SPARK_GRAFT_BENCH_TAIL_BUDGET", "600"))
-        t_tail0 = time.perf_counter()
-        tail_names = [n for n in qs if n not in set(HEADLINE)]
-        # staged-queue entries bench in the tail too (keyed
-        # "queue:<name>"), so a staged perf claim — e.g. the sparse-
-        # cosine production tier beating the exact tier — is a
-        # recorded BENCH_full row, not an assertion
-        try:
-            from sparkobs.queries_next import R7_QUEUE
-
-            queue_fns = {f"queue:{n}": fn for n, (fn, _) in R7_QUEUE.items()}
-        except Exception:  # noqa: BLE001 — queue is optional
-            queue_fns = {}
-        qs = dict(qs, **queue_fns)
-        # queue rows lead the tail: they carry staged perf CLAIMS
-        # (e.g. pruned-vs-exact), so a budget-exhausted slow round
-        # must cut registry coverage rows (re-measured every round)
-        # before it cuts these
-        tail_names = list(queue_fns) + tail_names
-        for name in tail_names:
-            if time.perf_counter() - t_tail0 > tail_budget:
-                # += : earlier FAILED names already recorded must not
-                # be discarded by the budget cut
-                tail_skipped += tail_names[tail_names.index(name):]
-                print(
-                    f"# tail budget ({tail_budget}s) exhausted — "
-                    f"{len(tail_skipped)} queries unmeasured this run",
-                    file=sys.stderr,
-                )
-                break
-            try:
-                # one warm-up (codegen JIT) + one timed rep, with the
-                # same clean-cache-before-the-timed-rep guarantee as
-                # the headline loop (timed_reps)
-                runs, _n = timed_reps(
-                    lambda: qs[name](spark, sf_dir).count(), 1, 1,
-                    _release_session_state,
-                )
-                tail_timings[name] = round(runs[0], 3)
-            except Exception as exc:  # noqa: BLE001 — record, keep benching
-                tail_skipped.append(name)
-                print(f"# tail {name} FAILED: {exc}", file=sys.stderr)
-                _release_session_state()
+        tail_timings, tail_skipped = bench_tail(
+            [n for n in qs if n not in set(HEADLINE)],
+            lambda name: qs[name](spark, sf_dir).count(),
+            _release_session_state,
+            tail_budget,
+        )
 
     # --- DuckDB same-SQL leg, SAME session/VM/minute (the r6 verdict:
     # cross-session ratios drift with shared-VM load — 2.29x stale vs

@@ -29,7 +29,7 @@ Every quantity either IS an integer or is a single double expression
 over bit-identical operands, so the full T-iteration trajectory —
 assignments, centroids, inertia — is reproducible bit for bit on any
 engine, which is exactly what the DuckDB oracle (unrolled iterations,
-sparkobs.queries_next) checks. Ties in assignment break to the lowest
+sparkobs.queries) checks. Ties in assignment break to the lowest
 cluster id; seeds are the k lowest-id vectors (no RNG). Empty clusters
 drop (both engines aggregate over assigned rows only).
 

@@ -20,7 +20,7 @@ micro-units (1e-9 of probability mass): shares are integer divisions
 ``r // deg``, inflow sums are exact integers, and damping applies as
 ``(85 * inflow) // 100``. Every engine computes the identical rank
 trajectory, so a DuckDB oracle with unrolled iterations certifies it
-(sparkobs.queries_next). The floor divisions leak ≤ deg units of mass
+(sparkobs.queries). The floor divisions leak ≤ deg units of mass
 per node per round — irrelevant for ranking, and identically on both
 engines.
 """

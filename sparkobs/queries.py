@@ -2921,8 +2921,7 @@ def _closure_ctes() -> str:
 
 
 # TOMBSTONE (r12): near_dup_groups_documents RETIRED — swap-ledger
-# entry #1 (SURVEY §2.11), the slot staged to filter_funnel
-# (queries_next.py). It was the EXACT-tier comparison leg of the
+# entry #1 (SURVEY §2.11), the slot staged to filter_funnel. It was the EXACT-tier comparison leg of the
 # near-dup family (exact 3-gram Jaccard pairs ≥ 0.2 → min-label
 # components), a 3.0 s headline-profile top row whose certified claim
 # keeps TWO carriers without a dedicated gate slot:
@@ -5474,9 +5473,9 @@ def session_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB replay of the curation pipeline's survivor sets (raw ->
 # quality-kept -> exact-deduped -> near-dup-kept), shared verbatim by
-# the curation_funnel_documents oracle and the staged
-# funnel_pipeline_parity_documents twin (queries_next.py, r13
-# swap-ledger #2 successor) so the two certifications can never
+# the curation_funnel_documents oracle and the
+# funnel_pipeline_parity_documents twin (r13 swap-ledger #2
+# successor) so the two certifications can never
 # drift onto different pipeline semantics. Requires WITH RECURSIVE.
 _CURATION_CTES = """
     raw AS (SELECT doc_id, text FROM documents),
@@ -7842,7 +7841,7 @@ def mutual_info_events_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # TOMBSTONE (r13): minhash_xx64_parity_documents RETIRED — swap-ledger
 # entry #2 (SURVEY §2.11), the slot staged to the funnel↔pipeline
-# certification twin (queries_next.py). It certified that the
+# certification twin. It certified that the
 # production xxhash64 MinHash tier emits exactly the verified pair
 # set of the portable md5 tier (n_sym_diff = 0, driver-green r7-r12
 # at sf0.01). Its claim now has THREE carriers without a gate slot,
@@ -7979,8 +7978,8 @@ def compaction_execute_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-7 promotion — the first 50 entries of the r7 staging queue
-# (sparkobs/queries_next.py), oldest-staged first: TPC-H completion
+# Round-7 promotion — the first 50 entries of the r7 staging queue,
+# oldest-staged first: TPC-H completion
 # (Q2/Q9/Q11/Q12/Q16/Q19/Q20/Q21), the statistics/behavior wave, the
 # iterative wave (k-means/ARI/PageRank, fixed-point + unrolled
 # oracles), streaming twins, exact quantiles, BM25, attribution,
@@ -9008,9 +9007,9 @@ def related_suppliers_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # TOMBSTONE (r14): ann_recall_embeddings RETIRED — swap-ledger entry
-# #4 (SURVEY §2.11), the slot staged to the quantized Kaplan–Meier
-# entry (queries_next.py). It certified recall@5 of the IVF tier
-# against brute-force ground truth — a composition of TWO queries
+# #4 (SURVEY §2.11), the slot now held by the quantized Kaplan–Meier
+# entry (km_survival_quantized_events, below). It certified recall@5
+# of the IVF tier against brute-force ground truth — a composition of TWO queries
 # that BOTH keep their own driver witnesses (`cosine_topk` the exact
 # truth, `cosine_topk_ivf` the pruned tier), so the retirement frees
 # a gate slot AND removes a ~2 s bench row that re-paid the IVF
@@ -9090,6 +9089,82 @@ def km_survival_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "events"), "user_id", "ts", 1
         )
     )
+
+
+@query(
+    "km_survival_quantized_events",
+    oracle="""
+    WITH spans AS (
+      SELECT user_id, min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
+      FROM events GROUP BY 1),
+    e AS (SELECT max(epoch_us(ts)) AS obs_end FROM events),
+    durs AS (
+      SELECT ((t1 - t0) // 86400000000) * 86400000000 AS t,
+             CASE WHEN t1 < obs_end - 1 * 86400000000 THEN 1 ELSE 0 END AS obs
+      FROM spans CROSS JOIN e),
+    hist AS (SELECT t, count(*) AS n_t, sum(obs) AS d_t FROM durs GROUP BY 1),
+    tot AS (SELECT count(*) AS n_total FROM durs),
+    steps AS (
+      SELECT t, n_t, d_t,
+             n_total - coalesce(sum(n_t) OVER (ORDER BY t
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                       0) AS n_at_risk
+      FROM hist CROSS JOIN tot),
+    logged AS (
+      SELECT t, d_t, n_at_risk,
+             CASE WHEN n_at_risk > d_t
+                  THEN CAST(floor(ln((n_at_risk - d_t)
+                                     / CAST(n_at_risk AS DOUBLE)) * 1e8)
+                            AS BIGINT)
+             END AS lu
+      FROM steps),
+    cum AS (
+      SELECT t, d_t, n_at_risk,
+             sum(lu) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS cu
+      FROM logged)
+    SELECT CAST(t AS BIGINT) AS duration_us,
+           CAST(n_at_risk AS BIGINT) AS n_at_risk,
+           CAST(d_t AS BIGINT) AS n_deaths,
+           CASE WHEN n_at_risk > d_t THEN round(exp(cu / 1e8), 4)
+                ELSE 0.0 END AS survival
+    FROM cum WHERE d_t > 0
+    """,
+)
+def km_survival_quantized_events(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Bounded-state Kaplan–Meier over CONTINUOUS durations (r14
+    swap-ledger #4 successor; certifies the r14 ``duration_grid``
+    parameter end-to-end): per-user lifetimes enter as RAW
+    integer-microsecond spans — the input whose distinct-count
+    approaches subject count, the degenerate regime the r13 verdict's
+    watch item 3 flagged for the step-table window — and
+    ``km_survival(duration_grid=day_us)`` floor-snaps them to
+    whole-day bucket edges INSIDE the operator, capping the step
+    table (and the single global window over it) at range/grid rows
+    regardless of corpus size. Censoring matches the certified
+    ``km_survival_events`` entry (1-day horizon); durations stay in
+    microseconds (bucket lower edges, day multiples), so the curve is
+    that entry's with the time axis in µs — but computed from the
+    UNQUANTIZED durations frame through the new parameter, which is
+    exactly the claim needing certification. Oracle: full independent
+    DuckDB replay (grid snap in SQL + the integer-quantized log-space
+    cumulative product the km family uses for cross-engine
+    exactness). Reference analogue: the reference ships retention-
+    style aggregations only (sql_table_monitor.py:61-75 row-count
+    trends); the censoring-aware lifetime view is an extension."""
+    from sparkobs.operators.behavior import churn_durations, km_survival
+
+    durs = churn_durations(
+        load_table(spark, sf_dir, "events"),
+        "user_id",
+        "ts",
+        1,
+        day_quantize=False,
+    )
+    return km_survival(
+        durs, duration_grid=86_400_000_000
+    ).withColumnRenamed("duration", "duration_us")
 
 
 @query(
@@ -10315,7 +10390,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twins, BFS reach, seasonal/lead-lag/incident observability, column diff,
 # monitor_suite, zone-map prune, CUBE, sliding HLL, and the multimodal
 # dedup legs (image exact/near, audio, video). Staged + oracle-certified
-# in queries_next.py during r7; moved here verbatim (staging order) for
+# in the staging queue during r7; moved here verbatim (staging order) for
 # driver certification.
 # ---------------------------------------------------------------------------
 @query(
@@ -11795,7 +11870,7 @@ def video_framehash_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twin), the RIFF/AVI container video-dedup leg, the streaming sliding-HLL
 # twin, theta-sketch set algebra (batch + streaming twin), exact-substring
 # span removal, and the percentile SLO contract battery. Staged +
-# oracle-certified in queries_next.py during r8; moved here verbatim
+# oracle-certified in the staging queue during r8; moved here verbatim
 # (staging order) for driver certification.
 # ---------------------------------------------------------------------------
 def _kmv_est_sql(qs: tuple, sample: str = "sample", ka: str = "kk") -> str:
@@ -12863,7 +12938,7 @@ def percentile_contract_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # leg + absolute-df-cap pruned tier, identical outputs — the r8 verdict's
 # one `weak`, resolved with a measured win), and the lake-wide
 # monitor_suite percentile-SLO capstone. Staged + oracle-certified in
-# queries_next.py during r9; moved here verbatim (staging order) for
+# the staging queue during r9; moved here verbatim (staging order) for
 # driver certification.
 # ---------------------------------------------------------------------------
 
@@ -13056,10 +13131,8 @@ def monitor_suite_slo_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Phase 11 — the promoted round-10 queue (r11 gate wave): grouped
 # theta-sketch distinct-intersection (batch + streaming twin, one shared
-# oracle) and the sampled-CI AQP entry — the registry's 300th and LAST
-# net-new slot (GATE_SIZE x MAX_CERT_AGE_ROUNDS = 300; from here every
-# addition is a retire-then-stage swap). Staged + oracle-certified in
-# queries_next.py during r10; moved here verbatim (staging order) for
+# oracle) and the sampled-CI AQP entry. Staged + oracle-certified in
+# the staging queue during r10; moved here verbatim (staging order) for
 # driver certification.
 # ---------------------------------------------------------------------------
 
@@ -13322,14 +13395,9 @@ def streaming_theta_intersection_grouped_events(
 
 
 # --- sampled aggregation with confidence intervals (AQP) --------------------
-# The last net-new registry slot: GATE_SIZE (50) x MAX_CERT_AGE_ROUNDS
-# (6) caps the sustainable registry at 300 entries, and the registry +
-# queue stands at 299 — this entry takes it to exactly 300. Anything
-# after this is a SWAP (retire-with-tombstone, then stage), a policy
-# the r9 sparse-cosine retirement already exercised. Operator:
-# sampling.sampled_agg_ci (Horvitz-Thompson count/sum estimators over
-# the deterministic hash_sample predicate); unit tests in
-# tests/test_r10_ops.py cover the one_in=1 exact degeneracy,
+# Operator: sampling.sampled_agg_ci (Horvitz-Thompson count/sum
+# estimators over the deterministic hash_sample predicate); unit tests
+# in tests/test_r10_ops.py cover the one_in=1 exact degeneracy,
 # partitioning invariance, and CI coverage of the true totals.
 
 _ACI_HASH = "md5(CAST(o_orderkey AS VARCHAR))"
@@ -13370,9 +13438,9 @@ def sampled_agg_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- join-side sampled aggregation with confidence intervals (AQP) ----------
-# Promoted from the r11 staged queue (queries_next.py) into the r12
-# gate — the swap slot freed by the r11 sparse_cosine_powerlaw_exact
-# retirement (tombstone above). Operator:
+# Promoted from the r11 staged queue into the r12 gate — the swap slot
+# freed by the r11 sparse_cosine_powerlaw_exact retirement (tombstone
+# above). Operator:
 # sampling.sampled_join_agg_ci — coordinated key-UNIVERSE sampling
 # over a join: independent per-side samples keep only 1/one_in^2 of
 # joined pairs (pair starvation), so BOTH sides filter by the SAME

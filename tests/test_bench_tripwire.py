@@ -170,7 +170,9 @@ def test_bench_loops_route_through_timed_reps():
 
     import bench
 
-    src = inspect.getsource(bench.main)
+    main_src = inspect.getsource(bench.main)
+    assert "bench_tail(" in main_src, "bench.main no longer runs bench_tail"
+    src = main_src + inspect.getsource(bench.bench_tail)
     assert src.count("timed_reps(") >= 2, (
         "bench.main must time both the headline and the tail loop "
         "via timed_reps (clean cache before every timed rep)"
@@ -178,6 +180,35 @@ def test_bench_loops_route_through_timed_reps():
     assert "time.perf_counter()" not in src.split("timed_reps(")[0].split(
         "for name in HEADLINE"
     )[-1], "headline loop times inline instead of via timed_reps"
+
+
+def test_tail_loop_survives_a_failing_release(capsys):
+    """A query that raises sends the tail loop down its except path,
+    which releases session state once more. If that release raises
+    too (a dropTempView race, say), the loop must log it and go on:
+    an exception escaping here would abort bench.main before the
+    final JSON line prints, losing the round's whole record."""
+    import bench
+
+    broken = {"on": False}
+
+    def run(name):
+        if name == "bad":
+            broken["on"] = True
+            raise RuntimeError("query failed")
+        return 1
+
+    def release():
+        if broken["on"]:
+            broken["on"] = False
+            raise RuntimeError("release failed")
+
+    timings, skipped = bench.bench_tail(["a", "bad", "b"], run, release, 60.0)
+    assert sorted(timings) == ["a", "b"]
+    assert skipped == ["bad"]
+    err = capsys.readouterr().err
+    assert "bad FAILED: query failed" in err
+    assert "release failed" in err
 
 
 def test_pack_queries_fits_the_driver_tail_and_leads_with_slowest():

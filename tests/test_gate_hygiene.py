@@ -1,44 +1,20 @@
 """Gate bookkeeping as an enforced invariant, not comments.
 
 The driver certifies only the FIRST ``GATE_SIZE`` registry entries per
-round. ``_PRIORITY`` in ``__spark_entry__.py`` rotates waves through
-that window; round 4 showed the failure mode — entries whose gated run
-errored (or that never entered the window) quietly accumulating as
-"locally green, never driver-proven". These tests fail the build when
-the rotation leaves certifiable debt outside the gate.
+round. ``queries()`` in ``__spark_entry__.py`` leads with the
+hand-listed ``_PRIORITY`` names, then fills the gate stalest stamp
+first. These tests pin that rule and fail the build when a
+never-certified entry sits outside the gate.
 
 No SparkSession needed: pure registry + JSON bookkeeping.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _certified_green() -> set[str]:
-    """Names that got a green row in ANY driver CORRECTNESS round. A
-    recorded rows-only row (err None, rows_match None — the driver ran
-    the query, no oracle exists) is that entry's certification
-    CEILING, so it counts: rows-only-by-design entries must pass the
-    gate once, not occupy a slot forever."""
-    ok = set()
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        with open(f) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
-                ok.add(name)  # recorded rows-only run
-            elif (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("hash_match", True)
-            ):
-                ok.add(name)
-    return ok
 
 
 def _registry():
@@ -66,322 +42,6 @@ def test_priority_names_exist_in_registry():
     assert not ghosts, f"_PRIORITY names not in the registry: {ghosts}"
 
 
-# an entry's last driver certification may be at most this many rounds
-# old before the rotation MUST re-gate it (r7 verdict item 6: 20
-# entries silently carried r2 stamps into round 8 — age debt is now a
-# test failure, not a memory). Calibration is CAPACITY-honest: the
-# gate certifies 50 entries per round and the registry holds ~285, so
-# the minimum achievable steady-state max age is ceil(285/50) = 6
-# rounds — a tighter bound would go red even under perfect rotation
-# (and specifically the moment the driver records the current round's
-# CORRECTNESS file, bumping every un-gated entry's age by one). The
-# ratchet therefore trips one round after a neglected rotation, never
-# during a healthy one.
-MAX_CERT_AGE_ROUNDS = 6
-
-
-def _last_certified_round(
-    exclude_round: int | None = None,
-) -> tuple[dict[str, int], int]:
-    """(last green driver round per entry, current build round). The
-    current round is one past the newest CORRECTNESS file — the round
-    whose gate is being assembled now. ``exclude_round`` drops that
-    round's artifact from the stamp scan (callers reconstructing the
-    stamps a gate was built FROM, e.g. tools/survey_gates.py at a
-    round boundary) — it still counts toward the current round."""
-    import re
-
-    last: dict[str, int] = {}
-    newest = 0
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        newest = max(newest, rnd)
-        if rnd == exclude_round:
-            continue
-        with open(f) as fh:
-            rows = json.load(fh)
-        for name, row in rows.items():
-            ok = (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("hash_match", True)
-            ) or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if ok:
-                last[name] = max(last.get(name, 0), rnd)
-    return last, newest + 1
-
-
-def test_no_registry_entry_staler_than_max_cert_age():
-    """Certification-age rotation is enforced: every registry entry
-    must either sit in the gate window that will be stamped THIS
-    round or carry a driver certification younger than
-    MAX_CERT_AGE_ROUNDS. Keeps the stalest-first rotation honest —
-    without it, entries certified once in an early round drift
-    arbitrarily far from their last driver witness.
-
-    Round-boundary aware (the r9/r10/r11 blind spot, one rung higher
-    each time: this was the last hygiene test still comparing against
-    the live ``_PRIORITY`` unconditionally): when the newest
-    CORRECTNESS file certifies exactly the live gate, the live gate
-    is LAST round's — the gate that will be stamped this round is the
-    PENDING one, derived via ``_planned_gate`` (the same derivation
-    the boundary fixtures and ``tools/plan_rotation.py`` share). An
-    entry that just crossed the age ceiling but sits in that planned
-    gate is about to be stamped, not rotation debt."""
-    entrymod, Q = _registry()
-    last, current = _last_certified_round()
-    gate = set(list(entrymod.queries())[: entrymod.GATE_SIZE])
-    if gate <= _newest_round_names():
-        gate = set(
-            _planned_gate(
-                _stamps_for(last), _queue_names(), current, entrymod.GATE_SIZE
-            )
-        )
-    threshold = current - MAX_CERT_AGE_ROUNDS
-    stale = sorted(
-        n
-        for n in Q.SPARK_QUERIES
-        if n not in gate and last.get(n, 0) < threshold
-    )
-    assert not stale, (
-        f"registry entries last driver-certified before r{threshold} "
-        f"and outside the round-{current} gate window: {stale} — rotate "
-        "them into _PRIORITY (stalest first)"
-    )
-
-
-def _newest_round_names() -> set[str]:
-    """All names recorded (green or not) in the newest CORRECTNESS
-    file — i.e. the gate the driver most recently executed. Newest by
-    the NUMERIC round in the filename: lexicographic sort only works
-    while every round number has equally many digits (r99 would sort
-    after r100)."""
-    import re
-
-    files = sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda f: int(re.search(r"r(\d+)", os.path.basename(f)).group(1)),
-    )
-    if not files:
-        return set()
-    with open(files[-1]) as fh:
-        return set(json.load(fh))
-
-
-def _simulate_rotation(
-    stamps: dict[str, int],
-    queue: list[str],
-    start: int,
-    gate_size: int,
-    horizon: int = 8,
-) -> None:
-    """Greedy stalest-first rotation simulation: at each round, the
-    staged queue promotes in full, everything past the age ceiling is
-    forced in, and remaining slots fill with the stalest stamps.
-    AssertionError when any round is FORCED past ``gate_size``.
-    Mutates its ``stamps`` copy; callers pass a throwaway dict."""
-    for r in range(start, start + horizon):
-        threshold = r - MAX_CERT_AGE_ROUNDS
-        forced = [n for n, s in stamps.items() if s < threshold]
-        need = len(forced) + len([n for n in queue if n not in set(forced)])
-        assert need <= gate_size, (
-            f"round r{r} would be forced to certify {need} entries "
-            f"({len(queue)} promoted queue + {len(forced)} past the "
-            f"age ceiling) but the gate holds {gate_size} — "
-            "the queue has outgrown what future gates can absorb; "
-            "stage less or retire entries"
-        )
-        filler = sorted(
-            (n for n in stamps if n not in set(forced) and n not in set(queue)),
-            key=lambda n: stamps[n],
-        )[: gate_size - need]
-        for n in queue:
-            stamps[n] = r
-        for n in forced + filler:
-            stamps[n] = r
-        queue = []
-
-
-def _planned_gate(
-    stamps: dict[str, int],
-    queue: list[str],
-    rnd: int,
-    gate_size: int,
-) -> list[str]:
-    """The gate the greedy rotation builds for round ``rnd``: staged
-    queue in staging order, then everything past the age ceiling (or
-    never certified), then stalest-stamp fill — the SAME derivation
-    ``_simulate_rotation`` steps through and ``tools/plan_rotation.py``
-    prints, factored so neither can drift from the other."""
-    threshold = rnd - MAX_CERT_AGE_ROUNDS
-    forced = sorted(
-        n for n, s in stamps.items() if s < threshold and n not in set(queue)
-    )
-    fill_budget = gate_size - len(queue) - len(forced)
-    assert fill_budget >= 0, (
-        f"round r{rnd} gate infeasible: queue ({len(queue)}) + forced "
-        f"({len(forced)}) exceed the gate ({gate_size})"
-    )
-    filler = sorted(
-        (n for n in stamps if n not in set(queue) and n not in set(forced)),
-        key=lambda n: (stamps[n], n),
-    )[:fill_budget]
-    return list(queue) + forced + filler
-
-
-def _advance_one_driver_round(
-    last: dict[str, int],
-    current: int,
-    newest_names: set[str],
-    queue: list[str],
-    *,
-    force_planned: bool = False,
-) -> tuple[dict[str, int], int, set[str], list[str]]:
-    """Synthesize one full round: the builder (re)builds the round-
-    ``current`` gate, then the driver lands CORRECTNESS_r{current}
-    certifying it. Returns (last', current + 1, that gate, queue').
-
-    The round-``current`` gate depends on the tree state (the r10
-    verdict's recurrence of the r9 bug): MID-ROUND, ``_PRIORITY`` is
-    already that gate; at a ROUND BOUNDARY (the newest CORRECTNESS
-    file certifies exactly the live ``_PRIORITY``), the live gate is
-    LAST round's — re-stamping it would model the driver certifying
-    the same gate twice with no rotation between, silently skipping
-    the pending promotion. There the round-``current`` gate is the
-    PENDING one, derived via ``_planned_gate``. Callers chaining
-    advances pass ``force_planned=True`` from the second advance on —
-    the live ``_PRIORITY`` can be the round gate at most once."""
-    entrymod, _ = _registry()
-    gate = set(list(entrymod.queries())[: entrymod.GATE_SIZE])
-    if force_planned or gate <= newest_names:
-        gate = set(
-            _planned_gate(_stamps_for(last), queue, current, entrymod.GATE_SIZE)
-        )
-    new_last = dict(last)
-    for n in gate:
-        new_last[n] = current
-    return new_last, current + 1, gate, [n for n in queue if n not in gate]
-
-
-def _rotation_state(last: dict[str, int], current: int,
-                    newest_names: set[str]):
-    """(stamps, queue, start) for the rotation simulation, round-
-    boundary aware. Two tree states exist (r9 verdict item 1):
-
-    MID-ROUND — the builder already rebuilt ``_PRIORITY`` for
-    ``current`` (the gate differs from what the newest CORRECTNESS
-    file certified): the driver will stamp the current gate members
-    at round end, so stamp them ``current`` and simulate from
-    ``current + 1`` with the still-staged queue (minus anything the
-    gate already carries).
-
-    ROUND BOUNDARY — the driver just dropped CORRECTNESS_r{current-1}
-    certifying exactly the current gate (rotation for ``current`` not
-    rebuilt yet): re-stamping the old gate would skip the real
-    ``current`` rotation and shove its queue + forced work into
-    ``current + 1`` (the bug this test shipped with in r9). Instead
-    simulate the PENDING promotion: start the greedy rotation at
-    ``current`` itself with the raw stamps."""
-    entrymod, Q = _registry()
-    gate = set(list(entrymod.queries())[: entrymod.GATE_SIZE])
-    from sparkobs.queries_next import R7_QUEUE
-
-    queue = list(R7_QUEUE)
-    stamps = {n: last.get(n, 0) for n in Q.SPARK_QUERIES}
-    if gate <= newest_names:
-        return stamps, queue, current
-    for n in gate:
-        stamps[n] = current
-    return stamps, [n for n in queue if n not in gate], current + 1
-
-
-def test_rotation_stays_feasible_for_future_rounds():
-    """Staging discipline as a failing test, not a planning note (r9:
-    the r10/r11 squeeze was enforced only by prose): simulate the next
-    8 rounds of greedy stalest-first rotation — round-boundary aware
-    per ``_rotation_state`` — and assert no future round is FORCED to
-    certify more than GATE_SIZE entries (its queue plus everything
-    past the age ceiling). Catches over-staging the moment it is
-    committed, two rounds before the age-ceiling test would trip."""
-    entrymod, _ = _registry()
-    last, current = _last_certified_round()
-    stamps, queue, start = _rotation_state(last, current, _newest_round_names())
-    _simulate_rotation(stamps, queue, start, entrymod.GATE_SIZE)
-
-
-def _queue_names() -> list[str]:
-    from sparkobs.queries_next import R7_QUEUE
-
-    return list(R7_QUEUE)
-
-
-def _stamps_for(last: dict[str, int]) -> dict[str, int]:
-    """Simulation stamps: every registry entry plus every LIVE name
-    the (possibly synthesized) history has certified — promoted queue
-    entries live in ``last`` before they appear in the registry.
-    RETIRED names are filtered out (r12): a tombstoned entry's old
-    stamp keeps aging in the CORRECTNESS history, and left in the
-    simulation it would eventually be 'forced' into a planned gate,
-    wasting a slot and displacing the 50th real entry — the
-    boundary-planning analogue of the ghost-name guard
-    ``test_priority_names_exist_in_registry`` enforces for the live
-    gate."""
-    _, Q = _registry()
-    from sparkobs.queries_next import R7_QUEUE
-
-    known = set(Q.SPARK_QUERIES) | set(R7_QUEUE)
-    stamps = {n: last.get(n, 0) for n in Q.SPARK_QUERIES}
-    stamps.update(
-        {n: last[n] for n in last if n not in stamps and n in known}
-    )
-    return stamps
-
-
-def test_rotation_feasible_after_driver_records_this_round():
-    """The round-boundary fixture the r9 verdict asked for, rebuilt
-    round-boundary AWARE per the r10 verdict: synthesize the driver
-    landing CORRECTNESS_r{current} — certifying the live gate in a
-    mid-round tree, or the PENDING promotion (queue + forced +
-    stalest fill) when the tree is already at a boundary (the r10
-    failure: pretend-stamping the already-certified gate modeled the
-    driver certifying it twice and skipped the real rotation) — then
-    assert the remaining rotation stays feasible. This is the exact
-    tree state the driver evaluates at the next round's start."""
-    entrymod, _ = _registry()
-    last, current = _last_certified_round()
-    b_last, b_current, b_gate, b_queue = _advance_one_driver_round(
-        last, current, _newest_round_names(), _queue_names()
-    )
-    assert all(b_last[n] == current for n in b_gate)
-    _simulate_rotation(
-        _stamps_for(b_last), b_queue, b_current, entrymod.GATE_SIZE
-    )
-
-
-def test_rotation_feasible_after_two_driver_rounds():
-    """Advance TWO synthesized driver rounds so BOTH tree states are
-    always exercised, whichever one the real tree is in: from a
-    mid-round tree the first advance lands the live gate and the
-    second plans a promotion; from a boundary tree both advances plan.
-    This is the 'exercise the boundary state BEFORE the round ends'
-    mechanism the r10 verdict asked for — over-staging or a skipped
-    rotation goes red at commit time, not when the driver's artifact
-    lands."""
-    entrymod, _ = _registry()
-    last, current = _last_certified_round()
-    state = (last, current, _newest_round_names(), _queue_names())
-    state = _advance_one_driver_round(*state)
-    state = _advance_one_driver_round(*state, force_planned=True)
-    b_last, b_current, _, b_queue = state
-    assert not b_queue, "two rounds must fully drain the 3-entry queue"
-    _simulate_rotation(
-        _stamps_for(b_last), b_queue, b_current, entrymod.GATE_SIZE
-    )
-
-
 def test_no_uncertified_entry_left_outside_the_gate():
     """Every registry entry that has never been driver-certified green
     must sit inside the current gate window (so this round certifies
@@ -389,7 +49,7 @@ def test_no_uncertified_entry_left_outside_the_gate():
     retire it. Entries without an oracle are held to the same bar:
     the driver still records a rows-only row for them."""
     entrymod, Q = _registry()
-    green = _certified_green()
+    green = set(entrymod._last_certified(REPO))
     gate = set(list(entrymod.queries())[: entrymod.GATE_SIZE])
     debt = [
         n
@@ -403,80 +63,48 @@ def test_no_uncertified_entry_left_outside_the_gate():
     )
 
 
-def test_plan_rotation_tool_emits_a_full_feasible_gate():
-    """tools/plan_rotation.py must emit exactly GATE_SIZE registry (or
-    staged-queue) names, leading with the queue in staging order — the
-    same derivation these tests enforce, so a drifted tool is a red
-    build, not a bad paste."""
-    import subprocess
+def _write_round(root, rnd: int, rows: dict) -> None:
+    with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json"), "w") as fh:
+        json.dump(rows, fh)
 
+
+def test_gate_order_is_hand_list_then_stalest(tmp_path, monkeypatch):
+    """The ordering rule over synthetic CORRECTNESS files: hand-listed
+    names, then never-certified names (definition order), then the
+    oldest stamps with ties broken by name; the gate holds at most
+    GATE_SIZE registry names and queries() returns every registry
+    entry exactly once."""
     entrymod, Q = _registry()
-    out = subprocess.run(
-        [os.sys.executable, os.path.join(REPO, "tools", "plan_rotation.py")],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    names = [
-        line.strip().strip('",')
-        for line in out.stdout.splitlines()
-        if line.strip().startswith('"')
+    # defined in DESCENDING name order, so definition order and name
+    # order disagree and the test can tell them apart
+    registry = {f"q{i:02d}": object() for i in reversed(range(70))}
+    monkeypatch.setattr(Q, "SPARK_QUERIES", registry)
+    monkeypatch.setattr(entrymod, "_PRIORITY", ["q05", "gone", "q60"])
+    monkeypatch.setattr(entrymod, "_REPO_ROOT", str(tmp_path))
+
+    # no CORRECTNESS files: hand list, then definition order
+    assert list(entrymod.queries()) == ["q05", "q60"] + [
+        n for n in registry if n not in ("q05", "q60")
     ]
-    assert len(names) == entrymod.GATE_SIZE
-    from sparkobs.queries_next import R7_QUEUE
 
-    known = set(Q.SPARK_QUERIES) | set(R7_QUEUE)
-    assert set(names) <= known
-    assert names[: len(R7_QUEUE)] == list(R7_QUEUE)
-    assert len(set(names)) == len(names)
+    green = {"err": None, "rows_match": True, "hash_match": True}
+    r1 = {n: green for n in registry if n not in ("q10", "q40")}
+    r1["q20"] = {"err": "boom", "rows_match": None}  # failed: stamp 0
+    _write_round(tmp_path, 1, r1)
+    r2 = {f"q{i:02d}": green for i in range(30) if i not in (10, 20)}
+    r2["q31"] = {"err": "no_oracle", "spark_rows": 5}  # rows-only counts
+    r2["q07"] = {"err": None, "rows_match": True, "hash_match": False}
+    _write_round(tmp_path, 2, r2)
 
-
-def test_plan_rotation_tool_prints_nonnegative_headroom():
-    """The planner must make the rotation-headroom arithmetic explicit
-    (r12 verdict item 5: 299/6 rounds = 49.83 of 50 slots — every
-    promotion spends the horizon's slack) and fail LOUDLY at planning
-    time when registry + pending queue exceed the
-    GATE_SIZE × MAX_CERT_AGE_ROUNDS ceiling, so an over-staging
-    mistake surfaces when it is staged, not when a future gate is
-    infeasible."""
-    import re
-    import subprocess
-
-    entrymod, Q = _registry()
-    # check=False: the over-staged condition this test exists to catch
-    # makes the planner EXIT 1 — with check=True that surfaced as an
-    # opaque CalledProcessError before the informative assertions ran
-    out = subprocess.run(
-        [os.sys.executable, os.path.join(REPO, "tools", "plan_rotation.py")],
-        capture_output=True,
-        text=True,
-        check=False,
-    )
-    m = re.search(r"# rotation headroom: (-?\d+) slot", out.stderr)
-    assert m, f"planner printed no headroom line:\n{out.stderr}"
-    headroom = int(m.group(1))
-    population = len(set(Q.SPARK_QUERIES) | set(_queue_names()))
-    expected = entrymod.GATE_SIZE * MAX_CERT_AGE_ROUNDS - population
-    assert headroom == expected
-    assert headroom >= 0 and out.returncode == 0, (
-        f"registry+queue ({population}) over-staged past the rotation "
-        f"ceiling ({entrymod.GATE_SIZE * MAX_CERT_AGE_ROUNDS}); planner "
-        f"exited {out.returncode}:\n{out.stderr}"
-    )
-
-
-def test_stamps_for_filters_retired_names():
-    """A tombstoned entry's stamps live on in the CORRECTNESS history;
-    the simulation must not let that ghost age into a 'forced' slot of
-    a future planned gate (r12: sparse_cosine_powerlaw_exact, retired
-    r11, would have been force-planned from round 17 on)."""
-    entrymod, Q = _registry()
-    last, _ = _last_certified_round()
-    ghost = "sparse_cosine_powerlaw_exact"
-    assert ghost in last, "history should still record the retired entry"
-    assert ghost not in Q.SPARK_QUERIES
-    stamps = _stamps_for(last)
-    assert ghost not in stamps
-    synthetic = dict(last)
-    synthetic["never_existed_query"] = 3
-    assert "never_existed_query" not in _stamps_for(synthetic)
+    head, never = ["q05", "q60"], ["q40", "q20", "q10"]
+    stamp2 = sorted(set(r2) - {"q05", "q07"})
+    stamp1 = sorted(set(registry) - set(head) - set(never) - set(stamp2))
+    expected = head + never + stamp1 + stamp2
+    names = list(entrymod.queries())
+    gate = names[: entrymod.GATE_SIZE]
+    assert gate == expected[: entrymod.GATE_SIZE]
+    assert len(gate) == entrymod.GATE_SIZE
+    assert set(gate) <= set(registry)
+    assert sorted(names) == sorted(registry) and len(names) == len(registry)
+    # past the gate: definition order
+    assert names[entrymod.GATE_SIZE:] == [n for n in registry if n not in gate]

@@ -24,14 +24,6 @@ from sparkobs.plans import (
 SF = "/root/testdata/sf0.001"
 
 
-def _q(name):
-    """Resolve a query callable whether it has been promoted into the
-    registry (queries.py) or still sits in the staging queue."""
-    from sparkobs.queries_next import R7_QUEUE
-
-    return Q.SPARK_QUERIES[name] if name in Q.SPARK_QUERIES else R7_QUEUE[name][0]
-
-
 def test_pricing_summary_pushdown_and_pruning(spark):
     df = Q.SPARK_QUERIES["pricing_summary"](spark, SF)
     assert_pushdown(df, "l_shipdate")
@@ -382,31 +374,6 @@ def test_gate_window_plan_hygiene(spark):
     assert not offenders, "; ".join(offenders)
 
 
-def test_queue_plan_hygiene(spark):
-    """The same anti-pattern screen over the STAGED queue, so a
-    row-at-a-time UDF or cartesian product is caught when an entry is
-    staged, not when it reaches a gate. Streaming twins are skipped
-    (their build step executes a stream); entries that localCheckpoint
-    during plan construction simply pay that build here."""
-    from sparkobs.plans import physical_plan
-    from sparkobs.queries_next import R7_QUEUE
-
-    offenders = []
-    for name, (fn, _oracle) in R7_QUEUE.items():
-        if name.startswith("streaming_"):
-            continue
-        try:
-            p = physical_plan(fn(spark, "/root/testdata/sf0.001"))
-        except Exception as e:  # noqa: BLE001
-            offenders.append(f"{name}: plan build failed: {e}")
-            continue
-        if "BatchEvalPython" in p:
-            offenders.append(f"{name}: row-at-a-time Python UDF")
-        if "CartesianProduct" in p:
-            offenders.append(f"{name}: cartesian product")
-    assert not offenders, "; ".join(offenders)
-
-
 def test_iterative_wave_plan_discipline(spark):
     from sparkobs.plans import (
         assert_no_cartesian,
@@ -414,7 +381,6 @@ def test_iterative_wave_plan_discipline(spark):
         physical_plan,
         scans,
     )
-    from sparkobs.queries_next import R7_QUEUE
 
     # k-means: at the dense tier (any test SF) the final assignment
     # comes from the numpy superstep mirror, so the FINAL plan is
@@ -423,7 +389,7 @@ def test_iterative_wave_plan_discipline(spark):
     # answered a question the dense kernel already held); the k-row
     # centroid-ss table still broadcasts and the stats agg is
     # partial+final
-    km = _q("kmeans_embeddings")(spark, SF)
+    km = Q.SPARK_QUERIES["kmeans_embeddings"](spark, SF)
     assert len(scans(km)) == 0
     p = physical_plan(km)
     assert "BroadcastExchange" in p and "CartesianProduct" not in p
@@ -431,16 +397,15 @@ def test_iterative_wave_plan_discipline(spark):
 
     # PageRank: rank/edge state is checkpointed (no parquet rescans in
     # the final plan) and nothing degenerates into a cartesian product
-    pr = _q("pagerank_copurchase")(spark, SF)
+    pr = Q.SPARK_QUERIES["pagerank_copurchase"](spark, SF)
     assert len(scans(pr)) == 0  # everything beyond checkpoints
     assert_no_cartesian(pr)
 
 
 def test_ols_single_scan_three_columns_one_exchange(spark):
     from sparkobs.plans import count_exchanges, scans
-    from sparkobs.queries_next import R7_QUEUE
 
-    ols = _q("ols_pricing_lineitem")(spark, SF)
+    ols = Q.SPARK_QUERIES["ols_pricing_lineitem"](spark, SF)
     sc = scans(ols)
     # one pass over lineitem reading only the three regression columns
     assert len(sc) == 1
@@ -476,19 +441,18 @@ def test_ann_recall_semi_join_no_cartesian(spark):
 
 def test_r6_late_wave_plans_scale_worthy(spark):
     from sparkobs.plans import assert_no_cartesian, physical_plan
-    from sparkobs.queries_next import R7_QUEUE
 
     # BFS reachability: frontier joins are equi joins, never a
     # cartesian expansion of the co-purchase graph
-    assert_no_cartesian(_q("impact_reach_supply_chain")(spark, SF))
+    assert_no_cartesian(Q.SPARK_QUERIES["impact_reach_supply_chain"](spark, SF))
     # lead-lag: the 13-row lag spine rides a BROADCAST onto the
     # bucket table; the shifted join is an equi join on the bucket key
-    p = physical_plan(_q("lead_lag_corr_events")(spark, SF))
+    p = physical_plan(Q.SPARK_QUERIES["lead_lag_corr_events"](spark, SF))
     assert "BroadcastExchange" in p or "BroadcastNestedLoopJoin" in p
     assert "CartesianProduct" not in p
     # SLO burn: the error predicate evaluates inside the first
     # aggregate's scan-side project (no separate pass), one plan
-    p = physical_plan(_q("slo_burn_rate_events")(spark, SF))
+    p = physical_plan(Q.SPARK_QUERIES["slo_burn_rate_events"](spark, SF))
     assert "CartesianProduct" not in p
 
 
@@ -527,7 +491,7 @@ def test_cube_single_expand_one_shuffle(spark):
     agg pair — 2^k grouping sets from one pass, never k scans."""
     from sparkobs.plans import count_exchanges, physical_plan, scans
 
-    df = _q("cube_revenue_status_priority")(spark, SF)
+    df = Q.SPARK_QUERIES["cube_revenue_status_priority"](spark, SF)
     p = physical_plan(df)
     assert "Expand" in p
     assert len(scans(df)) == 1

@@ -1,7 +1,7 @@
 
 
 """Hand-value unit tests for the round-7 operator wave (statistics,
-series diagnostics, behavioral shapes) — the queue's oracle tests pin
+series diagnostics, behavioral shapes) — the oracle sweep pins
 cross-engine parity; these pin the MATH on inputs small enough to
 check by hand."""
 
@@ -10,14 +10,6 @@ from datetime import datetime
 import pytest
 
 import sparkobs.queries as Q
-
-
-def _q(name):
-    """Resolve a query callable whether it has been promoted into the
-    registry (queries.py) or still sits in the staging queue."""
-    from sparkobs.queries_next import R7_QUEUE
-
-    return Q.SPARK_QUERIES[name] if name in Q.SPARK_QUERIES else R7_QUEUE[name][0]
 
 
 def test_spearman_perfect_and_inverse_monotone(spark):
@@ -203,31 +195,30 @@ def test_rfm_scores_order_and_segments(spark):
 
 def test_r7_olap_plan_discipline(spark):
     from sparkobs.plans import count_exchanges, physical_plan
-    from sparkobs.queries_next import R7_QUEUE
 
     SF = "/root/testdata/sf0.001"
 
     # Q9: three broadcast dimension legs, no cartesian anywhere
-    p9 = physical_plan(_q("product_profit_q9")(spark, SF))
+    p9 = physical_plan(Q.SPARK_QUERIES["product_profit_q9"](spark, SF))
     assert p9.count("BroadcastHashJoin") >= 3
     assert "CartesianProduct" not in p9
     # Q16: the supplier denylist compiles to a broadcast anti join
-    p16 = physical_plan(_q("supplier_variety_q16")(spark, SF))
+    p16 = physical_plan(Q.SPARK_QUERIES["supplier_variety_q16"](spark, SF))
     assert "LeftAnti" in p16
     # Q19: disjunctive predicates stay a single broadcast join pass
-    p19 = physical_plan(_q("disjunctive_revenue_q19")(spark, SF))
+    p19 = physical_plan(Q.SPARK_QUERIES["disjunctive_revenue_q19"](spark, SF))
     assert "BroadcastHashJoin" in p19 and "CartesianProduct" not in p19
     # Q2: ONE (part, supplier) aggregate serves min + membership via a
     # window — no second lineitem scan subtree
     from sparkobs.plans import scans
 
-    assert len(scans(_q("min_price_supplier_q2")(spark, SF))) == 2
+    assert len(scans(Q.SPARK_QUERIES["min_price_supplier_q2"](spark, SF))) == 2
     # Spearman: ranks come from value tables via the distributed
     # running sum — windows are __pid-partitioned, never a global sort
     # of the raw data (the only SinglePartition exchange allowed is
     # the final 1-row statistic aggregation)
     psp = physical_plan(
-        _q("spearman_quantity_price_lineitem")(spark, SF)
+        Q.SPARK_QUERIES["spearman_quantity_price_lineitem"](spark, SF)
     )
     assert "hashpartitioning(__pid" in psp  # the distributed-rank exchange
 
@@ -791,7 +782,6 @@ def test_mutual_topk_edges_keeps_only_reciprocal_pairs(spark):
 
 def test_late_r6_wave_plan_discipline(spark):
     from sparkobs.plans import physical_plan, scans
-    from sparkobs.queries_next import R7_QUEUE
 
     SF = "/root/testdata/sf0.001"
 
@@ -801,7 +791,7 @@ def test_late_r6_wave_plan_discipline(spark):
     # the hist pass moved from its own checkpoint job into the
     # broadcast subtree — same three source passes per execution,
     # fewer jobs); the picked join broadcasts, nothing sort-merges
-    dq = _q("exact_quantiles_lineitem")(spark, SF)
+    dq = Q.SPARK_QUERIES["exact_quantiles_lineitem"](spark, SF)
     pq = physical_plan(dq)
     assert len(scans(dq)) == 2
     assert "SortMergeJoin" not in pq
@@ -809,20 +799,20 @@ def test_late_r6_wave_plan_discipline(spark):
 
     # BM25: stats are a checkpointed 1-row broadcast, so the lazy
     # plan is ONE corpus scan and no shuffle join of the corpus
-    db = _q("bm25_search_documents")(spark, SF)
+    db = Q.SPARK_QUERIES["bm25_search_documents"](spark, SF)
     assert len(scans(db)) == 1
     assert "SortMergeJoin" not in physical_plan(db)
 
     # salted distinct: two hash aggregations, no Expand rewrite (the
     # within-(group, salt) distinct is a plain two-level agg)
     ps = physical_plan(
-        _q("salted_distinct_customers_orders")(spark, SF)
+        Q.SPARK_QUERIES["salted_distinct_customers_orders"](spark, SF)
     )
     assert ps.count("HashAggregate") >= 4  # partial+final at each level
     assert "CartesianProduct" not in ps
 
     # attribution: one window pass, no cartesian, no self-join scans
-    da = _q("attribution_linear_events")(spark, SF)
+    da = Q.SPARK_QUERIES["attribution_linear_events"](spark, SF)
     assert len(scans(da)) == 1
     assert "CartesianProduct" not in physical_plan(da)
 
@@ -832,13 +822,13 @@ def test_late_r6_wave_plan_discipline(spark):
     # dropped their checkpoints, which were pure extra jobs
     # (materialize + re-read) with no reuse to buy — so the lazy plan
     # holds exactly those two pruned key scans
-    di = _q("inclusion_deps_star_schema")(spark, SF)
+    di = Q.SPARK_QUERIES["inclusion_deps_star_schema"](spark, SF)
     assert len(scans(di)) == 2
 
     # disorder: the prefix-max exchange is __pid-partitioned (the
     # distributed primitive), not a single global-order window over
     # the data
-    pd_ = physical_plan(_q("event_disorder_events")(spark, SF))
+    pd_ = physical_plan(Q.SPARK_QUERIES["event_disorder_events"](spark, SF))
     assert "hashpartitioning(__pid" in pd_
 
 

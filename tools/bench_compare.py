@@ -15,8 +15,8 @@ records exist (including inside a verdict review).
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 
 
 def load(path: str) -> dict:
@@ -32,18 +32,13 @@ def load(path: str) -> dict:
     return d
 
 
-def main() -> int:
-    argv = sys.argv[1:]
-    top = 8
-    if "--top" in argv:
-        i = argv.index("--top")
-        top = int(argv[i + 1])
-        argv = argv[:i] + argv[i + 2 :]
-    args = [a for a in argv if not a.startswith("--")]
-    if len(args) != 2:
-        print(__doc__, file=sys.stderr)
-        return 2
-    old, new = load(args[0]), load(args[1])
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description="Compare two bench records.")
+    ap.add_argument("old", help="older record (BENCH_full.json shape)")
+    ap.add_argument("new", help="newer record")
+    ap.add_argument("--top", type=int, default=8, help="movers to list each way")
+    args = ap.parse_args(argv)
+    old, new, top = load(args.old), load(args.new), args.top
     oq, nq = old["queries"], new["queries"]
     common = sorted(set(oq) & set(nq))
     only_old = sorted(set(oq) - set(nq))

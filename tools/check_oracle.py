@@ -7,11 +7,11 @@ with repr after per-cell normalization). Run me before every commit:
 
     python tools/check_oracle.py [sf_dir] [name_filter ...]
     python tools/check_oracle.py [sf_dir] --gate   # only the driver's 50-entry window
-    python tools/check_oracle.py [sf_dir] --queue  # the staged queries_next queue
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -19,7 +19,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -45,15 +45,17 @@ def canon(rows, colnames):
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = sys.argv[1:] if argv is None else argv
-    # --gate works in ANY position (including as the sole argument) —
-    # strip it before positional parsing so it is never mistaken for
-    # the sf_dir operand
-    gate_only = "--gate" in args
-    queue_only = "--queue" in args
-    args = [a for a in args if a not in ("--gate", "--queue")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    filters = args[1:]
+    ap = argparse.ArgumentParser(
+        description="Compare registry queries against their DuckDB oracles."
+    )
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("filters", nargs="*", help="run only names containing one of these")
+    ap.add_argument(
+        "--gate", action="store_true", help="only the driver's first GATE_SIZE entries"
+    )
+    # intermixed: --gate may sit anywhere, even between the positionals
+    args = ap.parse_intermixed_args(argv)
+    sf_dir, filters = args.sf_dir, args.filters
 
     import __spark_entry__ as entrymod
 
@@ -73,27 +75,13 @@ def main(argv: list[str] | None = None) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    if queue_only:
-        # the staged next-round queue (sparkobs/queries_next.py),
-        # swept with the same comparison it will face after promotion
-        from sparkobs.queries_next import R7_QUEUE
-
-        from sparkobs.io import oracle_substitute
-
-        qs = {n: fn for n, (fn, _) in R7_QUEUE.items()}
-        oracles = {
-            n: oracle_substitute(o, sf_dir)
-            for n, (_, o) in R7_QUEUE.items()
-            if o is not None
-        }
-    else:
-        qs = entrymod.queries()
-        # --gate: restrict to exactly the driver's certification
-        # window (the first GATE_SIZE registry entries) — what
-        # CORRECTNESS_r{N} will actually check this round
-        if gate_only:
-            qs = dict(list(qs.items())[: entrymod.GATE_SIZE])
-        oracles = entrymod.oracle_sql(os.path.realpath(sf_dir))
+    qs = entrymod.queries()
+    # --gate: restrict to exactly the driver's certification window
+    # (the first GATE_SIZE registry entries) — what CORRECTNESS_r{N}
+    # will actually check this round
+    if args.gate:
+        qs = dict(list(qs.items())[: entrymod.GATE_SIZE])
+    oracles = entrymod.oracle_sql(os.path.realpath(sf_dir))
     failed, passed, rows_only = [], [], []
     for name, fn in qs.items():
         if filters and not any(f in name for f in filters):

@@ -21,6 +21,7 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -36,26 +37,25 @@ def _api(base: str, path: str):
         return json.load(r)
 
 
-def main() -> int:
-    argv = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    plans_dir = None
-    suffix = "before"
-    names: list[str] = []
-    top = 0
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a == "--sf":
-            sf_dir = argv[i + 1]; i += 2
-        elif a == "--plans":
-            plans_dir = argv[i + 1]; i += 2
-        elif a == "--suffix":
-            suffix = argv[i + 1]; i += 2
-        elif a == "--top":
-            top = int(argv[i + 1]); i += 2
-        else:
-            names.append(a); i += 1
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Per-query executed metrics from the Spark UI REST API."
+    )
+    ap.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
+    ap.add_argument("--plans", metavar="OUTDIR", help="write each final plan here")
+    ap.add_argument("--suffix", default="before", help="plan file-name suffix")
+    ap.add_argument(
+        "--top", type=int, default=0, metavar="N",
+        help="add the N slowest queries from BENCH_full.json",
+    )
+    ap.add_argument("names", nargs="*", help="registry query names")
+    args = ap.parse_args(argv)
+    if args.top < 0 or not (args.names or args.top):
+        ap.error("name at least one query or pass --top N (N >= 1)")
+    sf_dir, plans_dir, suffix = args.sf, args.plans, args.suffix
+    names, top = list(args.names), args.top
 
     import __spark_entry__ as entrymod
     from sparkobs.session import get_spark

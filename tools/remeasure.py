@@ -6,8 +6,9 @@ noise from cause — bench.py's tail loop records reps=1, which cannot.
 This runs each named registry query in the shared session, one warm-up
 rep then ``--reps`` timed reps (default 5), releasing session state
 (SQL cache + LSH candidate persists + temp views) before every timed
-rep — the same clean-cache discipline as bench.timed_reps — and prints
-per-query p50 / min / max / all reps.
+rep — through bench.timed_reps and bench.release_session_state, the
+bench's own clean-cache discipline — and prints per-query p50 / min /
+max / all reps.
 
 Usage:
     python tools/remeasure.py [--sf DIR] [--reps N] name ...
@@ -15,31 +16,33 @@ Usage:
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> int:
-    argv = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    reps = 5
-    names: list[str] = []
-    i = 0
-    while i < len(argv):
-        if argv[i] == "--sf":
-            sf_dir = argv[i + 1]; i += 2
-        elif argv[i] == "--reps":
-            reps = int(argv[i + 1]); i += 2
-        else:
-            names.append(argv[i]); i += 1
-    if not names:
-        print("usage: remeasure.py [--sf DIR] [--reps N] name ...")
-        return 2
+def _positive_int(text: str) -> int:
+    if not text.isdigit() or int(text) < 1:
+        raise argparse.ArgumentTypeError(f"expected a positive integer, got {text!r}")
+    return int(text)
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Isolated per-query re-measure: p50/spread of N timed reps."
+    )
+    ap.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
+    ap.add_argument("--reps", type=_positive_int, default=5)
+    ap.add_argument("names", nargs="+", help="registry query names")
+    args = ap.parse_args(argv)
+    sf_dir, reps, names = args.sf, args.reps, args.names
 
     import __spark_entry__ as entrymod
+    from bench import release_session_state, timed_reps
     from sparkobs.session import get_spark
 
     spark = get_spark("sparkobs-remeasure")
@@ -57,29 +60,17 @@ def main() -> int:
 
     baseline_tables = {t.name for t in spark.catalog.listTables()}
 
-    def release():
-        from sparkobs.operators.dedup import unpersist_candidates
-
-        unpersist_candidates()
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.name not in baseline_tables and t.tableType == "TEMPORARY":
-                spark.catalog.dropTempView(t.name)
-
     for name in names:
         if name not in qs:
             print(f"{name}: NOT IN REGISTRY")
             continue
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"remeasure:{name}")
-        fn(spark, sf_dir).count()  # warm-up (codegen JIT)
-        runs = []
-        for _ in range(reps):
-            release()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        release()
+        # one warm-up rep (codegen JIT), then clean-cache timed reps
+        runs, _n = timed_reps(
+            lambda: fn(spark, sf_dir).count(), reps, 1,
+            lambda: release_session_state(spark, baseline_tables),
+        )
         runs.sort()
         p50 = runs[len(runs) // 2]
         print(

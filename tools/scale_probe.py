@@ -136,7 +136,6 @@ FACT_QUERIES = (
     "market_share_q8",
     "small_qty_revenue_q17",
     "large_orders_q18",
-    # staged (queries_next) entries resolve via the R7 queue fallback:
     # pagerank's edge distinct scans the 10x facts while the node set
     # saturates — the realistic "graph derived from growing facts" mode
     "pagerank_copurchase",
@@ -182,8 +181,7 @@ FACT_QUERIES = (
     # agg — the scan deepens 10x, the shuffle stays ~1/one_in of it
     # pre-aggregated to |groups| partials
     "sampled_agg_ci_orders",
-    # join-side AQP (r11 queue entry, resolved via the R7_QUEUE
-    # fallback): BOTH scans are hash-filtered row-locally before the
+    # join-side AQP: BOTH scans are hash-filtered row-locally before the
     # join, so the 10x mirror deepens each side's scan while the join
     # and both aggs carry ~1/one_in of the rows — the scan saving
     # multiplies across the two legs
@@ -1167,14 +1165,8 @@ def main() -> int:
         fact_dir = stage_fact_sf_dir(spark)
         print(f"\n| fact query | 1× lineitem | {COPIES}× lineitem | ratio |")
         print("|---|---|---|---|")
-        from sparkobs.queries_next import R7_QUEUE
-
         for name in fact_names:
-            fn = (
-                Q.SPARK_QUERIES[name]
-                if name in Q.SPARK_QUERIES
-                else R7_QUEUE[name][0]
-            )
+            fn = Q.SPARK_QUERIES[name]
             t1 = time_df(lambda: fn(spark, SF_DIR))
             tN = time_df(lambda: fn(spark, fact_dir))
             ratio = tN / max(t1, 1e-9)
