@@ -8,6 +8,9 @@ prune columns, and (for parquet) answer count-star from footers.
 
 from __future__ import annotations
 
+import weakref
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -265,6 +268,60 @@ def oracle_substitute(sql: str, sf_dir: str) -> str:
     )
 
 
+#: SQL confs that Parquet schema inference reads: a change to any of
+#: them can change the inferred schema of unchanged files.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: session -> {path: (validation key, inferred schema)}; one entry per
+#: path, dropped with the session
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _leaf_files(spark: SparkSession, path: str) -> tuple:
+    """``(path, length, modification time)`` of every leaf file under
+    ``path``, listed through the path's Hadoop FileSystem (no Spark
+    job)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = []
+    pending = [hpath]
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            if st.isDirectory():
+                pending.append(st.getPath())
+            else:
+                out.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the footer-inference job when
+    this session already inferred the schema of these exact files under
+    the same inference confs; see :func:`load_table` for the contract."""
+    try:
+        files = _leaf_files(spark, path)
+    except Py4JJavaError:
+        # missing path and the like: let the plain read raise its error
+        return spark.read.parquet(path)
+    key = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Full/partial table scan (OP-01): lazy parquet read.
 
@@ -272,6 +329,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     — but lazy: a downstream ``.select``/``.filter`` reaches the parquet
     scan as column pruning / predicate pushdown instead of materializing
     the whole table like the reference's cursor fetch.
+
+    Schema memo: the first read of a path in a session infers its
+    schema from the Parquet footers, which costs one Spark job; later
+    reads pass the remembered schema and launch none, the way a
+    metastore-backed table supplies its schema. The memo holds metadata
+    only, never rows, and at most one schema per (session, path). It is
+    valid while the ``(path, length, modification time)`` of every leaf
+    file under the path and the SQL confs that schema inference reads
+    (``_INFERENCE_CONFS``) are unchanged; otherwise the read infers
+    again and replaces the entry. Like a metastore schema it survives
+    ``clearCache`` and ``bench.release_session_state``. Limitation:
+    a rewrite that keeps each file's length and modification time is
+    not detected, the same as a Spark catalog table before
+    ``REFRESH TABLE``.
     """
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS), which Spark rejects
@@ -279,7 +350,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # conf) so the loader works under ANY session — including the
         # driver harness's vanilla SparkSession, not just ours.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos → microsecond TIMESTAMP_NTZ, built via timestampadd from
         # the epoch so the wall-clock value is independent of the

@@ -18,6 +18,7 @@ Scale notes (100 TB design, SURVEY.md §4):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +61,38 @@ def get_spark(app_name: str = "sparkobs", extra_conf: dict | None = None) -> Spa
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: SparkContexts whose Python workers were sent the package
+_SHIPPED: weakref.WeakSet = weakref.WeakSet()
+
+
+def ship_to_workers(spark: SparkSession) -> None:
+    """Make ``sparkobs`` importable on the Python workers of ``spark``'s
+    SparkContext, once per context. Arrow kernels pickle sparkobs
+    functions by reference, and a worker started outside the checkout
+    with no PYTHONPATH to it cannot import them. The package's sources
+    are zipped into a per-process scratch directory and added with
+    ``addPyFile``, which launches no Spark job. A worker started in the
+    checkout keeps importing from it: its working directory comes first
+    on its ``sys.path``, ahead of shipped files."""
+    import zipfile
+
+    from sparkobs.io import scratch_dir
+
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
+        return
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    out = scratch_dir("sparkobs_pyfiles", "zip")
+    os.makedirs(out, exist_ok=True)
+    archive = os.path.join(out, "sparkobs.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        for dirpath, dirnames, filenames in os.walk(pkg):
+            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+            for f in filenames:
+                if f.endswith(".py"):
+                    src = os.path.join(dirpath, f)
+                    zf.write(src, os.path.relpath(src, os.path.dirname(pkg)))
+    sc.addPyFile(archive)
+    _SHIPPED.add(sc)

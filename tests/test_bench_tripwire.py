@@ -8,6 +8,9 @@ the last accepted round's table (refresh it deliberately via
 flags any query whose current p50 exceeds 3× its baseline p50, above
 a 0.5 s floor and with both runs' recorded spreads added as the noise
 allowance — i.e. only regressions too large to be shared-VM jitter.
+Two records whose ``calibration.spark_fixed_agg`` differ by more than
+2x (or that lack one) are not compared at all: the host itself ran
+that much slower or faster.
 
 Round 5 showed why this must be spread-aware and floor-ed: clearing
 cached blocks between queries tripled some sub-second readings while
@@ -29,6 +32,9 @@ BASELINE = os.path.join(REPO, "BENCH_baseline.json")
 FLOOR_SEC = 0.5
 #: flag only p50 blowups past this factor (spread-adjusted)
 FACTOR = 3.0
+#: records whose spark calibration differs by more than this factor
+#: were taken in different host states and are not compared
+CAL_FACTOR = 2.0
 
 
 def _load(path):
@@ -54,17 +60,25 @@ def test_headline_names_all_exist_in_registry():
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate HEADLINE names"
 
 
-@pytest.mark.skipif(
-    not (os.path.exists(CURRENT) and os.path.exists(BASELINE)),
-    reason="needs both BENCH_full.json (run `python bench.py`) and "
-    "BENCH_baseline.json (frozen via `make bench-baseline`)",
-)
-def test_no_unexplained_per_query_regression():
-    cur, base = _load(CURRENT), _load(BASELINE)
+def check_no_unexplained_regression(cur: dict, base: dict) -> None:
+    """Compare two bench records per query; skip when they are not
+    comparable (another scale factor, a missing calibration, or a
+    calibration more than ``CAL_FACTOR``x apart: the host ran that
+    much slower or faster, so a per-query blowup is no evidence of a
+    code change) and fail on any unexplained regression."""
     if cur.get("sf") != base.get("sf"):
         pytest.skip(
             f"current bench ran at sf={cur.get('sf')} but the baseline "
             f"is sf={base.get('sf')} — not comparable"
+        )
+    c_cal = (cur.get("calibration") or {}).get("spark_fixed_agg")
+    b_cal = (base.get("calibration") or {}).get("spark_fixed_agg")
+    if not (c_cal and b_cal):
+        pytest.skip("a bench record has no calibration.spark_fixed_agg — not comparable")
+    if not 1 / CAL_FACTOR <= c_cal / b_cal <= CAL_FACTOR:
+        pytest.skip(
+            f"calibration.spark_fixed_agg {c_cal}s vs baseline {b_cal}s "
+            f"differs by more than {CAL_FACTOR:g}x — a drift window, not comparable"
         )
     cq, bq = cur["queries"], base["queries"]
     cs, bs = cur.get("spread", {}), base.get("spread", {})
@@ -81,6 +95,42 @@ def test_no_unexplained_per_query_regression():
         "(investigate, then either fix or refresh the baseline with "
         "`make bench-baseline`): " + "; ".join(offenders)
     )
+
+
+@pytest.mark.skipif(
+    not (os.path.exists(CURRENT) and os.path.exists(BASELINE)),
+    reason="needs both BENCH_full.json (run `python bench.py`) and "
+    "BENCH_baseline.json (frozen via `make bench-baseline`)",
+)
+def test_no_unexplained_per_query_regression():
+    check_no_unexplained_regression(_load(CURRENT), _load(BASELINE))
+
+
+def _record(cal, **p50):
+    return {
+        "sf": 0.1,
+        "calibration": None if cal is None else {"spark_fixed_agg": cal},
+        "queries": p50,
+        "spread": {n: 0.05 for n in p50},
+    }
+
+
+def test_tripwire_skips_a_drift_window_record():
+    base = _record(0.34, q_slow=2.0, q_fast=0.6)
+    for cur in (
+        _record(0.34 * 2.5, q_slow=7.0, q_fast=0.6),  # host 2.5x slower
+        _record(0.34 / 2.5, q_slow=7.0, q_fast=0.6),  # host 2.5x faster
+        _record(None, q_slow=7.0, q_fast=0.6),  # no calibration
+    ):
+        with pytest.raises(pytest.skip.Exception):
+            check_no_unexplained_regression(cur, base)
+
+
+def test_tripwire_fails_a_3x_regression_under_equal_calibration():
+    base = _record(0.34, q_slow=2.0, q_fast=0.6)
+    check_no_unexplained_regression(_record(0.36, q_slow=2.4, q_fast=0.7), base)
+    with pytest.raises(AssertionError, match="q_slow: 2.000s -> 6.500s"):
+        check_no_unexplained_regression(_record(0.34, q_slow=6.5, q_fast=0.6), base)
 
 
 def test_drift_band_trigger_matches_policy():

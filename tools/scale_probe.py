@@ -28,6 +28,8 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from sparkobs.io import load_table  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 COPIES = int(os.environ.get("SPARKOBS_PROBE_COPIES", "10"))
 # Document staging mode:
@@ -51,7 +53,7 @@ def stage_10x(spark):
     from pyspark.sql import functions as F
 
     key = hashlib.sha256(
-        f"{os.path.realpath(SF_DIR)}:{COPIES}:{DOCS_MODE}:v4".encode()
+        f"{os.path.realpath(SF_DIR)}:{COPIES}:{DOCS_MODE}:v5".encode()
     ).hexdigest()[:16]
     base = os.path.join(tempfile.gettempdir(), f"sparkobs_probe_{key}")
     docs_dir = os.path.join(base, "documents")
@@ -59,7 +61,7 @@ def stage_10x(spark):
     emb_dir = os.path.join(base, "embeddings")
     if not os.path.exists(os.path.join(ev_dir, "_SUCCESS")):
         shutil.rmtree(base, ignore_errors=True)
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        docs = load_table(spark, SF_DIR, "documents")
         tagged = None
         for i in range(COPIES):
             if DOCS_MODE == "natural" and i:
@@ -85,7 +87,7 @@ def stage_10x(spark):
             )
             tagged = c if tagged is None else tagged.unionByName(c)
         tagged.write.mode("overwrite").parquet(docs_dir)
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+        ev = load_table(spark, SF_DIR, "events")
         bigev = None
         for i in range(COPIES):
             c = ev.withColumn(
@@ -99,7 +101,7 @@ def stage_10x(spark):
         # points at natural near-dup density instead of every vector
         # gaining 9 identical twins (the adversarial all-dup mode,
         # measured separately for minhash in SCALE.md)
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        emb = load_table(spark, SF_DIR, "embeddings")
         dim = len(emb.select("embedding").head()["embedding"])
         bigemb = None
         for i in range(COPIES):
@@ -208,8 +210,8 @@ def stage_fact_sf_dir(spark) -> str:
     if not os.path.exists(marker):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base)
-        l = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+        l = load_table(spark, SF_DIR, "lineitem")
+        o = load_table(spark, SF_DIR, "orders")
         bigl = bigo = None
         for i in range(COPIES):
             off = i * 10_000_000_000
@@ -1137,9 +1139,9 @@ def main() -> int:
     spark = get_spark("scale-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    docs1 = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    ev1 = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    emb1 = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    docs1 = load_table(spark, SF_DIR, "documents")
+    ev1 = load_table(spark, SF_DIR, "events")
+    emb1 = load_table(spark, SF_DIR, "embeddings")
     docs_dir, ev_dir, emb_dir = stage_10x(spark)
     docs10 = spark.read.parquet(docs_dir)
     ev10 = spark.read.parquet(ev_dir)
