@@ -50,10 +50,11 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
-    "shape_summary_all",
-    "monitor_suite_lake",
-    "window_tumbling_hourly",
-    "large_orders_q18",
+    "near_dup_groups_lsh",
+    "minhash_lsh_pairs",
+    "minhash_lsh_pairs_xx64",
+    "streaming_near_dup_candidates",
+    "streaming_incremental_band_index",
 ]
 
 

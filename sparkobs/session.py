@@ -34,16 +34,17 @@ def get_spark(app_name: str = "sparkobs", extra_conf: dict | None = None) -> Spa
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce the output partitioning of persisted plans
-        # too (default false): the dedup/LSH operators pin small
-        # candidate/sketch frames with persist(), and without this
-        # every cached frame materializes — and every later read
-        # schedules — the full static shuffle width regardless of
-        # size. Scale-adaptive, not a local tweak: coalescing follows
+        # too (default false): operators pin small edge/sketch frames
+        # with persist() (the component loop's edge caches, streaming
+        # band indexes), and without this every cached frame
+        # materializes — and every later read schedules — the full
+        # static shuffle width regardless of size. Scale-adaptive,
+        # not a local tweak: coalescing follows
         # advisoryPartitionSizeInBytes, so corpus-sized caches keep
         # large partitions at any scale while kB-sized ones collapse
-        # to a few tasks (guide §2.2). Measured at sf0.1:
-        # near_dup_groups_lsh 7.9->4.5 s, minhash_lsh_pairs
-        # 2.2->1.2 s, canonical_dedup 4.7->3.5 s (r14).
+        # to a few tasks (guide §2.2). Measured at sf0.1 when the LSH
+        # tier still pinned its candidates: near_dup_groups_lsh
+        # 7.9->4.5 s, canonical_dedup 4.7->3.5 s (r14).
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",

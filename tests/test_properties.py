@@ -1463,10 +1463,7 @@ def test_minhash_tier_pair_set_equality_deterministic_regime(
     recall is hash-dependent (see
     test_minhash_md5_km_correlation_recall_gap_sf0001); inside it,
     any divergence is a real banding/verify bug in one tier."""
-    from sparkobs.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_candidates,
-    )
+    from sparkobs.operators.dedup import minhash_lsh_pairs
 
     texts = [
         " ".join(f"w{i}_{k}" for k in range(ln))
@@ -1482,13 +1479,10 @@ def test_minhash_tier_pair_set_equality_deterministic_regime(
         if ta == tb
     }
     kw = dict(n=3, num_hashes=32, bands=8, threshold=0.2)
-    try:
-        got = {}
-        for tier in ("md5", "xx64"):
-            rows = minhash_lsh_pairs(df, hash_fn=tier, **kw).collect()
-            got[tier] = {(r.id_a, r.id_b) for r in rows}
-            assert all(r.jaccard == 1.0 for r in rows), tier
-    finally:
-        unpersist_candidates()
+    got = {}
+    for tier in ("md5", "xx64"):
+        rows = minhash_lsh_pairs(df, hash_fn=tier, **kw).collect()
+        got[tier] = {(r.id_a, r.id_b) for r in rows}
+        assert all(r.jaccard == 1.0 for r in rows), tier
     assert got["md5"] == expected
     assert got["xx64"] == expected

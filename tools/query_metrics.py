@@ -77,8 +77,6 @@ def main(argv: list[str] | None = None) -> int:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def _release():
-        from sparkobs.operators.dedup import unpersist_candidates
-        unpersist_candidates()
         spark.catalog.clearCache()
 
     print(f"# sf_dir={sf_dir} ui={base}")
