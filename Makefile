@@ -5,8 +5,11 @@
 
 .PHONY: test sweep gate bench bench-baseline smoke verify
 
+# the tier-1 command ROADMAP.md names, so `make test` / `make verify`
+# run the same suite configuration as the gate
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 sweep:
 	python tools/check_oracle.py

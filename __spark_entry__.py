@@ -50,11 +50,14 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
-    "near_dup_groups_lsh",
-    "minhash_lsh_pairs",
-    "minhash_lsh_pairs_xx64",
     "streaming_near_dup_candidates",
     "streaming_incremental_band_index",
+    "streaming_cms_events",
+    "streaming_kmv_quantiles_events",
+    "streaming_hll_sliding_users_events",
+    "streaming_theta_intersection_events",
+    "streaming_theta_intersection_grouped_events",
+    "streaming_monitor_health_events",
 ]
 
 

@@ -1349,6 +1349,45 @@ def _stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     )
 
 
+def _fresh_scratch(prefix: str, sf_dir: str) -> str:
+    """Empty per-process scratch directory for one streaming twin's
+    output over ``sf_dir`` (see :func:`sparkobs.io.scratch_dir`):
+    repeated runs reuse one path, concurrent drivers never share it."""
+    import hashlib
+    import os
+    import shutil
+
+    from sparkobs.io import scratch_dir
+
+    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
+    out = scratch_dir(prefix, key)
+    shutil.rmtree(out, ignore_errors=True)
+    return out
+
+
+def _drain_event_partials(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    partial: Callable[[DataFrame], DataFrame],
+) -> str:
+    """Shared drain of the mergeable-sketch streaming twins: the 4-file
+    events stage streams one file per micro-batch, each batch appends
+    ``partial(batch)`` to a parquet state directory, and that directory
+    is returned for the twin to merge and certify."""
+    from sparkobs.streaming.monitors import drain, stream_events
+
+    stage_dir = _stage_events(spark, sf_dir, n_files=4)
+    state_dir = _fresh_scratch(prefix, sf_dir)
+
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
+        partial(batch_df).write.mode("append").parquet(state_dir)
+
+    stream = stream_events(spark, stage_dir, files_per_trigger=1)
+    drain(stream.writeStream.foreachBatch(ingest), prefix)
+    return state_dir
+
+
 @query(
     "streaming_tumbling_events",
     oracle="""
@@ -1367,8 +1406,8 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage_dir = _stage_events(spark, sf_dir)
     out = streaming_tumbling(stream_events(spark, stage_dir), "1 hour")
-    tbl = run_to_memory(out, "tumbling_stream", output_mode="complete", unique=True,
-                        shuffle_partitions=4, no_data_batch=False)
+    tbl = run_to_memory(out, "tumbling_stream", output_mode="complete",
+                        shuffle_partitions=4)
     return spark.table(tbl).select("window_start", "n_events", "sum_value")
 
 
@@ -1411,8 +1450,7 @@ def streaming_cdc_latest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow width now wins — under the old Python-state form sp=4
     # measured SLOWER (worker parallelism mattered); re-measured after
     # the built-in agg swap: 2.8 -> 1.5 s at sp=8
-    tbl = run_to_memory(out, "cdc_stream", output_mode="update", unique=True,
-                        shuffle_partitions=8)
+    tbl = run_to_memory(out, "cdc_stream", output_mode="update", shuffle_partitions=8)
     return spark.table(tbl)
 
 
@@ -1442,8 +1480,8 @@ def streaming_jsonl_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFra
     out = streaming_tumbling(
         stream_jsonl(spark, stage_dir, EVENTS_SCHEMA), "1 hour"
     )
-    tbl = run_to_memory(out, "jsonl_stream", output_mode="complete", unique=True,
-                        shuffle_partitions=4, no_data_batch=False)
+    tbl = run_to_memory(out, "jsonl_stream", output_mode="complete",
+                        shuffle_partitions=4)
     return spark.table(tbl).select("window_start", "n_events", "sum_value")
 
 
@@ -1453,16 +1491,13 @@ def _stage_events_split(spark: SparkSession, sf_dir: str) -> str:
     forced mtime ordering so maxFilesPerTrigger=1 always yields batch 1
     = evens, batch 2 = odds (the file source processes oldest-first)."""
     import glob as _glob
-    import hashlib
     import os
     import tempfile
     import time
 
-    src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
-    mtime = int(os.stat(src).st_mtime_ns) if os.path.exists(src) else 0
-    key = hashlib.sha256(f"{src}:{mtime}:split2".encode()).hexdigest()[:16]
     from sparkobs.io import ensure_stage
 
+    key = _stage_key(sf_dir, "events", "split2")
     stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_stream_{key}")
 
     def _build(tmp: str) -> None:
@@ -1510,8 +1545,7 @@ def streaming_count_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage_dir = _stage_events_split(spark, sf_dir)
     out = stateful_count_drift(stream_events(spark, stage_dir, files_per_trigger=1))
-    tbl = run_to_memory(out, "drift_stream", output_mode="update", unique=True,
-                        shuffle_partitions=2)
+    tbl = run_to_memory(out, "drift_stream", output_mode="update", shuffle_partitions=2)
     return spark.table(tbl)
 
 
@@ -2359,8 +2393,8 @@ def streaming_session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage_dir = _stage_events(spark, sf_dir)
     out = streaming_session(stream_events(spark, stage_dir), "30 minutes")
-    tbl = run_to_memory(out, "session_stream", output_mode="complete", unique=True,
-                        shuffle_partitions=4, no_data_batch=False)
+    tbl = run_to_memory(out, "session_stream", output_mode="complete",
+                        shuffle_partitions=4)
     return spark.table(tbl).select("user_id", "session_start", "n_events")
 
 
@@ -2663,8 +2697,8 @@ def streaming_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(_to_ntz("w.start").alias("window_start"), "n_events")
     )
-    tbl = run_to_memory(out, "sliding_stream", output_mode="complete", unique=True,
-                        shuffle_partitions=4, no_data_batch=False)
+    tbl = run_to_memory(out, "sliding_stream", output_mode="complete",
+                        shuffle_partitions=4)
     return spark.table(tbl)
 
 
@@ -3847,17 +3881,12 @@ def _stage_documents(
     puts them in different files (= different micro-batches), which is
     what cross-batch incremental-index tests need. Both assignments are
     deterministic."""
-    import hashlib
     import os
     import tempfile
 
-    src = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
-    mtime = int(os.stat(src).st_mtime_ns) if os.path.exists(src) else 0
-    key = hashlib.sha256(
-        f"{src}:{mtime}:{n_files}:{spread}".encode()
-    ).hexdigest()[:16]
     from sparkobs.io import ensure_stage
 
+    key = _stage_key(sf_dir, "documents", f"{n_files}:{spread}")
     stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_docstream_{key}")
 
     def _build(tmp: str) -> None:
@@ -3895,7 +3924,7 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.md5("text").alias("fp"))
         .dropDuplicates(["fp"])
     )
-    tbl = run_to_memory(stream, "dedup_stream", output_mode="append", unique=True,
+    tbl = run_to_memory(stream, "dedup_stream", output_mode="append",
                         shuffle_partitions=4)
     return spark.table(tbl)
 
@@ -4225,11 +4254,7 @@ def streaming_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import functions as F
 
     from sparkobs.operators.dedup import minhash_banded
-
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from sparkobs.streaming.monitors import drain
 
     stage_dir = _stage_documents(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
@@ -4242,34 +4267,16 @@ def streaming_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
         .persist()
     )
     index.count()
-
-    from sparkobs.io import scratch_dir
-
-    # deterministic per-(sf_dir, pid) output dir, recreated per
-    # invocation: repeated runs reuse one path instead of leaking a
-    # mkdtemp each; the pid key keeps concurrent drivers from
-    # clobbering each other's in-flight output (r9 verdict item 4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    out_dir = scratch_dir("sparkobs_snd", key)
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _fresh_scratch("sparkobs_snd", sf_dir)
 
     def enrich(batch_df, batch_id):
         _snd_batch_cands(batch_df, index).write.mode("append").parquet(out_dir)
 
-    q = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(enrich)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = spark.readStream.schema(
+        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ).parquet(stage_dir)
     try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("streaming_near_dup did not drain in 300s")
-        q.stop()
+        drain(stream.writeStream.foreachBatch(enrich), "streaming_near_dup")
     finally:
         index.unpersist()
     return spark.read.parquet(out_dir).distinct()
@@ -4317,23 +4324,15 @@ def streaming_incremental_band_index(spark: SparkSession, sf_dir: str) -> DataFr
     oracle replays. At 100 TB the index is a bucket-partitioned table
     and each micro-batch joins only its colliding buckets; the append
     becomes a partition-local upsert."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
 
     from sparkobs.operators.dedup import minhash_banded
-
-    from sparkobs.io import scratch_dir
+    from sparkobs.streaming.monitors import drain
 
     stage_dir = _stage_documents(spark, sf_dir, n_files=4, spread=True)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    base = scratch_dir("sparkobs_sibi", key)
+    base = _fresh_scratch("sparkobs_sibi", sf_dir)
     index_dir = os.path.join(base, "index")
     out_dir = os.path.join(base, "cands")
-    shutil.rmtree(base, ignore_errors=True)
 
     band_schema = "id bigint, band int, bucket bigint"
     spark.createDataFrame([], band_schema).write.parquet(index_dir)
@@ -4352,34 +4351,24 @@ def streaming_incremental_band_index(spark: SparkSession, sf_dir: str) -> DataFr
         banded.write.mode("append").parquet(index_dir)
         banded.unpersist()
 
-    # scope a narrow shuffle width over the drain (the run_to_memory
-    # shuffle_partitions lever, inlined for the foreachBatch path):
-    # each micro-batch joins ~1/4 of the staged fixture — 32-wide
-    # exchanges per batch are pure scheduling overhead here (measured
-    # 6.0 → 4.2 s at sf0.1). Chosen for the bounded 4-file
-    # certification stage; the 100 TB shape is the bucket-partitioned
-    # index join described above, which wants full width.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string, n_chars bigint"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-            .writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .start()
+    stream = (
+        spark.readStream.schema(
+            "doc_id bigint, text string, lang string, source string, n_chars bigint"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming_incremental_band_index did not drain in 300s"
-            )
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+    )
+    # narrow shuffle width: each micro-batch joins ~1/4 of the staged
+    # fixture — 32-wide exchanges per batch are pure scheduling
+    # overhead here (measured 6.0 → 4.2 s at sf0.1). Chosen for the
+    # bounded 4-file certification stage; the 100 TB shape is the
+    # bucket-partitioned index join described above, which wants full
+    # width.
+    drain(
+        stream.writeStream.foreachBatch(ingest),
+        "streaming_incremental_band_index",
+        shuffle_partitions=4,
+    )
     return spark.read.schema("id_a bigint, id_b bigint").parquet(out_dir).distinct()
 
 
@@ -5099,39 +5088,11 @@ def streaming_cms_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably identical to one-shot batch sketching (the oracle
     replays exactly that), so estimates match a batch build
     value-for-value."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from sparkobs.operators.profile import cms_estimate
-    from sparkobs.streaming.monitors import EVENTS_SCHEMA
 
-    from sparkobs.io import scratch_dir
-
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    state_dir = os.path.join(scratch_dir("sparkobs_scms", key), "cells")
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-
-    def ingest(batch_df, batch_id):
-        _scms_partial(batch_df).write.mode("append").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_cms_events did not drain in 300s")
-    q.stop()
-
+    state_dir = _drain_event_partials(spark, sf_dir, "sparkobs_scms", _scms_partial)
     merged = (
         spark.read.schema("d int, w bigint, cnt bigint")
         .parquet(state_dir)
@@ -5239,7 +5200,7 @@ def streaming_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_type") == "purchase"
     )
     j = stream_stream_join_within(left, right, key_col="user_id", within="1 hour")
-    name = run_to_memory(j, "ssj_click_purchase", output_mode="append", unique=True,
+    name = run_to_memory(j, "ssj_click_purchase", output_mode="append",
                           shuffle_partitions=4)
     return spark.table(name)
 
@@ -7116,8 +7077,8 @@ def streaming_monitor_health_events(spark: SparkSession, sf_dir: str) -> DataFra
         )
     )
     tbl = run_to_memory(
-        hourly, "monitor_health_stream", output_mode="complete", unique=True,
-        shuffle_partitions=4, no_data_batch=False,
+        hourly, "monitor_health_stream", output_mode="complete",
+        shuffle_partitions=4,
     )
     series = spark.table(tbl).select(
         "key",
@@ -9683,7 +9644,6 @@ def streaming_kmeans_assign_embeddings(
     import tempfile
 
     from sparkobs.operators.cluster import C_SUBSCALE, VQ_SCALE, _fit
-    from sparkobs.queries import _stage_key
     from sparkobs.streaming.monitors import run_to_memory
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -9727,9 +9687,7 @@ def streaming_kmeans_assign_embeddings(
     out = stream.select(
         "vec_id", best["cluster"].alias("cluster"), best["dist"].alias("dist")
     )
-    tbl = run_to_memory(
-        out, "kmeans_serve_stream", output_mode="append", unique=True
-    )
+    tbl = run_to_memory(out, "kmeans_serve_stream", output_mode="append")
     return spark.table(tbl)
 
 
@@ -9769,7 +9727,6 @@ def streaming_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-microsecond gap shave that aligns Spark's session merge with the
     ``gap >= 600 s`` batch rule lives in
     streaming.monitors.streaming_debounce."""
-    from sparkobs.queries import _stage_events
     from sparkobs.streaming.monitors import (
         run_to_memory,
         stream_events,
@@ -9782,8 +9739,8 @@ def streaming_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"],
         gap_seconds=600,
     )
-    tbl = run_to_memory(out, "debounce_stream", output_mode="complete", unique=True,
-                        shuffle_partitions=4, no_data_batch=False)
+    tbl = run_to_memory(out, "debounce_stream", output_mode="complete",
+                        shuffle_partitions=4)
     return spark.table(tbl).select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
@@ -9824,7 +9781,6 @@ def streaming_ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bin-table-sized batch follow-up over the drained cells (shared
     tail: profile.ks_from_cells)."""
     from sparkobs.operators.profile import ks_from_cells
-    from sparkobs.queries import _stage_events
     from sparkobs.streaming.monitors import (
         run_to_memory,
         stream_events,
@@ -9836,8 +9792,8 @@ def streaming_ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events(spark, stage_dir), lo=0.0, hi=600.0, n_bins=100
     )
     tbl = run_to_memory(
-        cells_stream, "ks_cells_stream", output_mode="complete", unique=True,
-        shuffle_partitions=2, no_data_batch=False,
+        cells_stream, "ks_cells_stream", output_mode="complete",
+        shuffle_partitions=2,
     )
     cells = (
         spark.table(tbl)
@@ -10217,7 +10173,6 @@ def streaming_freshness_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     staleness/SLA verdict is a constant-time batch follow-up on the
     drained row against the replayable as-of instant
     (streaming/monitors.streaming_freshness)."""
-    from sparkobs.queries import _stage_events
     from sparkobs.streaming.monitors import (
         run_to_memory,
         stream_events,
@@ -10227,8 +10182,8 @@ def streaming_freshness_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_dir = _stage_events(spark, sf_dir)
     out = streaming_freshness(stream_events(spark, stage_dir))
     tbl = run_to_memory(
-        out, "freshness_stream", output_mode="complete", unique=True,
-        shuffle_partitions=2, no_data_batch=False,
+        out, "freshness_stream", output_mode="complete",
+        shuffle_partitions=2,
     )
     # TIMESTAMP_NTZ arithmetic (naive-as-UTC): unix_micros over a
     # session-tz TIMESTAMP diverges by the DST offset gap between the
@@ -10817,8 +10772,6 @@ def _stage_events_arrival_ordered(
     import shutil
     import tempfile
 
-    from sparkobs.queries import _stage_key, load_table
-
     from sparkobs.io import ensure_stage
 
     key = _stage_key(sf_dir, "events", f"arrival{n_files}")
@@ -10914,7 +10867,7 @@ def streaming_disorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events(spark, stage_dir, files_per_trigger=1)
     )
     tbl = run_to_memory(
-        out, "disorder_stream", output_mode="update", unique=True,
+        out, "disorder_stream", output_mode="update",
         shuffle_partitions=2,
     )
     last = (
@@ -10953,7 +10906,6 @@ def streaming_salted_distinct_events(
     count-distinct oracle. The salt is the SAME pmod(xxhash64) the
     batch operator uses, so cell partials are comparable across the
     two modes."""
-    from sparkobs.queries import _stage_events
     from sparkobs.streaming.monitors import (
         run_to_memory,
         stateful_salted_distinct,
@@ -10965,7 +10917,7 @@ def streaming_salted_distinct_events(
         stream_events(spark, stage_dir, files_per_trigger=1)
     )
     tbl = run_to_memory(
-        out, "salted_distinct_stream", output_mode="update", unique=True,
+        out, "salted_distinct_stream", output_mode="update",
         shuffle_partitions=4,
     )
     per_cell = (
@@ -11184,7 +11136,6 @@ def streaming_slo_burn_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     per open window); the drained integer frame gets the identical
     batch-side burn/cumulative derivation as slo_burn_rate_events and
     certifies against the SAME oracle."""
-    from sparkobs.queries import _stage_events
     from sparkobs.streaming.monitors import (
         run_to_memory,
         stream_events,
@@ -11196,8 +11147,8 @@ def streaming_slo_burn_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events(spark, stage_dir), F.col("event_type") == "error"
     )
     tbl = run_to_memory(
-        out, "slo_burn_stream", output_mode="complete", unique=True,
-        shuffle_partitions=4, no_data_batch=False,
+        out, "slo_burn_stream", output_mode="complete",
+        shuffle_partitions=4,
     )
     from sparkobs.operators.checks import slo_burn_derive
 
@@ -12190,42 +12141,13 @@ def streaming_kmv_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFram
     estimates match the batch oracle value for value. State is
     ≤ k rows per batch, merged once at read — the bounded-state
     percentile monitor over an unbounded stream."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from sparkobs.operators.profile import (
         kmv_quantile_certify,
         kmv_quantile_estimate,
         kmv_quantile_merge,
     )
-    from sparkobs.queries import _stage_events
-    from sparkobs.streaming.monitors import EVENTS_SCHEMA
 
-    from sparkobs.io import scratch_dir
-
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    state_dir = os.path.join(scratch_dir("sparkobs_skmv", key), "rows")
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-
-    def ingest(batch_df, batch_id):
-        _skmv_partial(batch_df).write.mode("append").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("streaming_kmv_quantiles_events did not drain in 300s")
-    q.stop()
-
+    state_dir = _drain_event_partials(spark, sf_dir, "sparkobs_skmv", _skmv_partial)
     merged = kmv_quantile_merge(
         [spark.read.schema("h long, value double").parquet(state_dir)], k=1024
     )
@@ -12394,42 +12316,11 @@ def streaming_hll_sliding_users_events(
     batch pipeline value for value. One oracle certifies both (the
     slo_burn pattern). State is ≤ days × m register rows per batch —
     bounded by geometry, never by stream length."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from sparkobs.operators.profile import (
         hll_sliding_from_daily_registers,
     )
-    from sparkobs.queries import _stage_events
-    from sparkobs.streaming.monitors import EVENTS_SCHEMA
 
-    from sparkobs.io import scratch_dir
-
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    state_dir = os.path.join(scratch_dir("sparkobs_shlls", key), "regs")
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-
-    def ingest(batch_df, batch_id):
-        _shll_partial(batch_df).write.mode("append").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming_hll_sliding_users_events did not drain in 300s"
-        )
-    q.stop()
-
+    state_dir = _drain_event_partials(spark, sf_dir, "sparkobs_shlls", _shll_partial)
     regs = (
         spark.read.parquet(state_dir)
         .groupBy("__d", "bucket")
@@ -12745,39 +12636,9 @@ def streaming_theta_intersection_events(
     value-hash identity. The drained state therefore reproduces the
     one-shot batch sketches bit for bit and the SAME oracle certifies
     both. State: ≤ k rows per (batch, side)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from sparkobs.queries import _stage_events
-    from sparkobs.streaming.monitors import EVENTS_SCHEMA
-
-    from sparkobs.io import scratch_dir
-
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    state_dir = os.path.join(scratch_dir("sparkobs_stheta", key), "hashes")
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-
-    def ingest(batch_df, batch_id):
-        _stheta_partial(batch_df).write.mode("append").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+    state_dir = _drain_event_partials(
+        spark, sf_dir, "sparkobs_stheta", _stheta_partial
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming_theta_intersection_events did not drain in 300s"
-        )
-    q.stop()
-
     state = spark.read.schema("side string, h long").parquet(state_dir)
     ska = (
         state.where(F.col("side") == "a").select("h").distinct()
@@ -13345,39 +13206,11 @@ def streaming_theta_intersection_grouped_events(
     identity. The drained state reproduces the one-shot grouped
     sketches bit for bit and the SAME oracle certifies both. State:
     ≤ k rows per (batch, side, group)."""
-    import hashlib
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
-    from sparkobs.io import scratch_dir
-    from sparkobs.queries import _stage_events
-    from sparkobs.streaming.monitors import EVENTS_SCHEMA
-
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    state_dir = os.path.join(scratch_dir("sparkobs_stgtheta", key), "hashes")
-    shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
-
-    def ingest(batch_df, batch_id):
-        _stg_partial(batch_df).write.mode("append").parquet(state_dir)
-
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
+    state_dir = _drain_event_partials(
+        spark, sf_dir, "sparkobs_stgtheta", _stg_partial
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming_theta_intersection_grouped_events did not drain in 300s"
-        )
-    q.stop()
-
     state = spark.read.schema("side string, seg int, h long").parquet(state_dir)
     w = Window.partitionBy("seg").orderBy("h")
 

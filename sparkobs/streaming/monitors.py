@@ -20,9 +20,12 @@ retry/timeout machinery approximates by hand.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
@@ -210,101 +213,100 @@ def stateful_count_drift(events: DataFrame, key_col: str = "event_type") -> Data
     )
 
 
-def run_to_memory(
-    stream_df: DataFrame,
+_DRAIN_TIMEOUT_S = 300
+
+
+def drain(
+    writer: DataStreamWriter,
     name: str,
-    output_mode: str = "complete",
-    timeout_s: int = 300,
-    unique: bool = False,
+    output_mode: str = "append",
     shuffle_partitions: int | None = None,
-    no_data_batch: bool | None = None,
 ) -> str:
-    """Drain all available input through the stream (availableNow
-    trigger, OP-53's drain-and-stop form) into an in-memory table and
-    return the table name to read.
+    """Drain all available input through a configured stream writer
+    (sink set, trigger not) — availableNow, OP-53's drain-and-stop
+    form — and return the query name it ran under: ``name`` plus a
+    unique suffix, so repeated or concurrent drains in one long-lived
+    session never collide on a query name, memory-sink table or
+    checkpoint.
 
-    Drain is VERIFIED, not assumed: a timeout raises (the old behavior
-    silently ``stop()``-ed an in-flight drain, leaving a partial memory
-    table — a flake under full-suite load), and the query must have
-    reported progress before the sink is considered readable.
-    ``unique=True`` suffixes the sink name so concurrent/repeated runs
-    in one long-lived session never collide on the memory-sink table.
+    The drain is VERIFIED, not assumed: a timeout raises (a silently
+    ``stop()``-ed in-flight drain leaves a partial sink — a flake
+    under full-suite load), and so does a query that terminates
+    without progress, i.e. without running a single micro-batch (an
+    empty source reports an idle progress event but never writes the
+    sink). The query is always stopped.
 
-    ``shuffle_partitions`` (r11, the streaming-fixed-cost lever):
-    stateful operators inherit the session's shuffle-partition count
-    for their STATE exchange, fixed at stream start — 32 scheduled
-    (mostly Python-worker) state tasks PER MICRO-BATCH for a stream
-    whose state is one key (the drift/disorder diagnostics) or a
-    handful of groups is pure fixed overhead, measured ~2× the whole
-    query wall at sf0.1 (4.1 s → 2.15 s at 2 partitions). Pass a
-    small count for few-key stateful streams; the session value is
-    restored after the drain (the conf is read at query start, so
-    the scope covers exactly this stream). Partition count never
-    changes VALUES — state is key-addressed — so certification
-    semantics are untouched; leave None for streams whose state
-    cardinality actually scales (they want the full width).
+    Two confs are scoped to exactly this drain (both are read at
+    query start) and restored afterwards, on failure too:
 
-    ``no_data_batch=False`` (r12, streaming-fixed-cost lever 2):
-    availableNow appends a trailing NO-DATA micro-batch after the
-    last data batch — a full round of state tasks that exists to
-    advance the watermark (append-mode window finalization) and fire
-    stateful timeouts (update-mode flushes). For a COMPLETE-mode
-    aggregation it is value-neutral by construction: complete mode
-    evicts no state and re-emits the entire result table every
-    batch, so the trailing batch re-emits an identical table
-    (measured ~0.15-0.3 s of pure state-task scheduling per stream).
-    Pass False ONLY for complete-mode aggregations; leave None
-    (engine default, the batch runs) for every append-mode stream —
-    watermark finalization NEEDS it — and every
-    applyInPandasWithState stream whose timeouts flush on it. Scoped
-    to this drain exactly like ``shuffle_partitions``.
+    - ``shuffle_partitions``: stateful operators inherit the session's
+      shuffle-partition count for their STATE exchange, fixed at
+      stream start; 32 scheduled state tasks per micro-batch for a
+      stream whose state is one key or a handful of groups is pure
+      fixed overhead (measured ~2x the whole query wall at sf0.1,
+      4.1 s -> 2.15 s at 2 partitions). Pass a small count for
+      few-key streams; leave None where state cardinality scales.
+      Partition count never changes values (state is key-addressed).
+    - the trailing no-data micro-batch is suppressed in complete mode
+      only: complete mode evicts no state and re-emits the whole
+      result table every batch, so that batch re-emits an identical
+      table (~0.15-0.3 s of state tasks per stream). Append and update
+      streams keep the engine default, because watermark finalization
+      and stateful timeouts need it.
     """
-    if unique:
-        import uuid
-
-        name = f"{name}_{uuid.uuid4().hex[:8]}"
-    spark = stream_df.sparkSession
-    prev_sp = None
-    prev_ndb = None
+    name = f"{name}_{uuid.uuid4().hex[:8]}"
+    scoped = {}
     if shuffle_partitions is not None:
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if no_data_batch is not None:
-        prev_ndb = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled"
-        )
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled",
-            str(no_data_batch).lower(),
-        )
+        scoped["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if output_mode == "complete":
+        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    conf = writer._spark.conf  # the writer's own session (no public accessor)
+    prev = {k: conf.get(k) for k in scoped}
+    for k, v in scoped.items():
+        conf.set(k, v)
     try:
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
+            writer.queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
         try:
-            if not q.awaitTermination(timeout_s):
+            if not q.awaitTermination(_DRAIN_TIMEOUT_S):
                 raise RuntimeError(
-                    f"stream '{name}' did not drain within {timeout_s}s — "
-                    "memory sink would be partial; refusing to read it"
+                    f"stream '{name}' did not drain within {_DRAIN_TIMEOUT_S}s"
+                    " — its sink would be partial; refusing to read it"
                 )
-            if q.lastProgress is None:
+            if not any("addBatch" in p.durationMs for p in q.recentProgress):
                 raise RuntimeError(
                     f"stream '{name}' terminated without reporting progress"
                 )
         finally:
             q.stop()
     finally:
-        if prev_sp is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        if prev_ndb is not None:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-            )
+        for k, v in prev.items():
+            conf.set(k, v)
     return name
+
+
+def run_to_memory(
+    stream_df: DataFrame,
+    name: str,
+    output_mode: str = "complete",
+    shuffle_partitions: int | None = None,
+) -> str:
+    """Drain ``stream_df`` into an in-memory table and return the table
+    name to read. The drain contract is :func:`drain`'s: verified
+    (raises on timeout or on a drain that reported no progress),
+    conf-scoped (``shuffle_partitions`` and the no-data-batch conf are
+    restored afterwards), trailing no-data batch suppressed only in
+    complete mode, table name made unique per call."""
+    return drain(
+        stream_df.writeStream.format("memory"),
+        name,
+        output_mode,
+        shuffle_partitions,
+    )
 
 
 def stateful_latest(events: DataFrame, key_col: str = "user_id") -> DataFrame:

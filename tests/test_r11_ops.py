@@ -180,23 +180,76 @@ def test_sampled_join_agg_ci_null_keys_and_values(spark):
     assert out["b"]["est_count"] == 1
 
 
-def test_run_to_memory_scopes_and_restores_shuffle_partitions(spark):
-    """The streaming fixed-cost lever must be SCOPED: the session's
-    shuffle-partition conf is restored after the drain — and on
-    failure — so a narrow-state stream never leaks its width into
-    subsequent batch plans."""
-    import pytest
+_DRAIN_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
 
-    from sparkobs.streaming.monitors import run_to_memory
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    events = spark.createDataFrame(
-        [(1, "a")], "id long, v string"
-    )
-    # a non-streaming frame fails at writeStream — the finally path
-    with pytest.raises(Exception):
-        run_to_memory(events, "x", shuffle_partitions=2)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+@pytest.mark.parametrize("via", ["run_to_memory", "drain"])
+def test_drain_scopes_and_restores_confs(spark, tmp_path, via):
+    """The streaming fixed-cost levers must be SCOPED: the session's
+    shuffle-partition and no-data-batch confs are restored after the
+    drain — and on failure — so a narrow-state stream never leaks its
+    width or its suppressed no-data batch into later plans."""
+    from pyspark.errors import AnalysisException
+
+    from sparkobs.streaming.monitors import drain, run_to_memory
+
+    def run(stream_df):
+        if via == "drain":
+            writer = stream_df.writeStream.format("memory")
+            return drain(writer, "x", "complete", shuffle_partitions=2)
+        return run_to_memory(stream_df, "x", "complete", shuffle_partitions=2)
+
+    before = {k: spark.conf.get(k) for k in _DRAIN_CONFS}
+    assert before["spark.sql.shuffle.partitions"] != "2"
+    src = str(tmp_path / "src")
+    rows = [(1, "a"), (2, "a"), (3, "b")]
+    spark.createDataFrame(rows, "id long, v string").write.parquet(src)
+    stream = spark.readStream.schema("id long, v string").parquet(src)
+    # complete mode without an aggregation fails at query start, after
+    # the confs are set — the finally path
+    with pytest.raises(AnalysisException):
+        run(stream)
+    assert {k: spark.conf.get(k) for k in _DRAIN_CONFS} == before
+    tbl = run(stream.groupBy("v").count())
+    assert sorted(spark.table(tbl).collect()) == [("a", 2), ("b", 1)]
+    assert {k: spark.conf.get(k) for k in _DRAIN_CONFS} == before
+
+
+def test_foreach_batch_drain_refuses_a_drain_without_progress(spark, tmp_path):
+    """The progress check covers foreachBatch drains too: an
+    availableNow stream over an empty directory runs no micro-batch,
+    so its sink was never written and the drain must raise."""
+    from sparkobs.streaming.monitors import drain
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    stream = spark.readStream.schema("id long").parquet(str(empty))
+    with pytest.raises(RuntimeError, match="terminated without reporting progress"):
+        drain(stream.writeStream.foreachBatch(lambda df, batch_id: None), "empty")
+
+
+def test_only_the_drain_routine_starts_available_now_streams():
+    """Spark-free source check: every availableNow drain in the package
+    goes through ``streaming.monitors.drain``, so each one is verified
+    and conf-scoped. A hand-rolled start/await/stop elsewhere would skip
+    the progress check."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sparkobs"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if rel != "streaming/monitors.py" and (
+            "awaitTermination(" in src or "trigger(availableNow" in src
+        ):
+            offenders.append(rel)
+    assert offenders == []
+    monitors = (root / "streaming" / "monitors.py").read_text()
+    assert monitors.count("awaitTermination(") == 1
 
 
 def test_compaction_assign_tiers_agree(spark):

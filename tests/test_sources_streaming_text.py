@@ -185,7 +185,7 @@ def test_streaming_two_batch_drift(spark, sf_dir, tmp_path):
     # second file → second micro-batch (maxFilesPerTrigger=1)
     ev.limit(200).coalesce(1).write.mode("append").parquet(stage)
     out = stateful_count_drift(stream_events(spark, stage, files_per_trigger=1))
-    tbl = run_to_memory(out, "drift_test", output_mode="update", unique=True)
+    tbl = run_to_memory(out, "drift_test", output_mode="update")
     rows = spark.table(tbl).collect()
     # state visible: at least one entity reports a non-null prev_count
     assert any(r.prev_count is not None and r.delta == r.batch_count - r.prev_count for r in rows)
@@ -202,7 +202,6 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir, tmp_path):
         streaming_tumbling(stream_events(spark, stage), "1 hour"),
         "tumbling_test",
         output_mode="complete",
-        unique=True,
     )
     streamed = {
         r.window_start: r.n_events for r in spark.table(tbl).collect()
@@ -717,7 +716,7 @@ def test_streaming_debounce_gap_boundary_matches_batch_rule(spark, tmp_path_fact
         "event_type string, value double, props string"
     ).parquet(src)
     out = streaming_debounce(stream, ["user_id", "event_type"], gap_seconds=600)
-    tbl = run_to_memory(out, "debounce_boundary", output_mode="complete", unique=True)
+    tbl = run_to_memory(out, "debounce_boundary", output_mode="complete")
     kept = sorted(r["event_id"] for r in spark.table(tbl).collect())
     assert kept == [1, 2, 3]
 
@@ -737,7 +736,7 @@ def test_streaming_binned_counts_state_is_geometry_bounded(spark, sf_dir):
     cells = streaming_binned_counts(
         stream_events(spark, stage), lo=0.0, hi=600.0, n_bins=25
     )
-    tbl = run_to_memory(cells, "ks_bound", output_mode="complete", unique=True)
+    tbl = run_to_memory(cells, "ks_bound", output_mode="complete")
     got = spark.table(tbl).collect()
     assert len(got) <= 2 * 25
     n_nonnull = (
