@@ -306,6 +306,21 @@ def timed_reps(run, reps: int, warmup: int, release) -> tuple[list[float], int]:
     return out, n
 
 
+def warm_session(spark) -> None:
+    """Warm the JVM/session so the first timed query doesn't pay startup,
+    and warm the Python/Arrow worker path (first mapInPandas in a
+    session pays worker + Arrow init, measured up to ~30 s when it
+    lands after a long chain of JVM-heavy stages)."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+
+    def _ident(batches):
+        yield from batches
+
+    spark.range(1000).selectExpr("id", "cast(id as double) x").repartition(8).mapInPandas(
+        _ident, "id long, x double"
+    ).count()
+
+
 def release_session_state(spark, baseline_tables: set[str]) -> None:
     """Reset the session between timed reps: clear the SQL cache and
     drop every temp view registered since ``baseline_tables`` was
@@ -419,20 +434,7 @@ def main() -> None:
 
     spark = get_spark("sparkobs-bench")
     qs = entrymod.queries()
-
-    # warm the JVM/session so the first timed query doesn't pay startup,
-    # and warm the Python/Arrow worker path (first mapInPandas in a
-    # session pays worker + Arrow init, measured up to ~30 s when it
-    # lands after a long chain of JVM-heavy stages)
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _ident(batches):
-        for b in batches:
-            yield b
-
-    spark.range(1000).selectExpr("id", "cast(id as double) x").repartition(8).mapInPandas(
-        _ident, "id long, x double"
-    ).count()
+    warm_session(spark)
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "2")))

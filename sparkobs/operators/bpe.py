@@ -75,8 +75,10 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-#: driver rounds of the most recent :func:`bpe_train` call — probe
-#: instrumentation (scale_probe asserts batching cuts this ~B×).
+#: driver rounds of the most recent :func:`bpe_train` call — batching
+#: instrumentation (tests/test_corpus_ops.py::
+#: test_bpe_train_batched_disjoint_pairs_match_sequential asserts
+#: batching cuts this ~B×).
 LAST_TRAIN_ROUNDS = 0
 
 
@@ -140,8 +142,10 @@ def _dense_bpe_train(
     Tier equality is pinned by a hypothesis property
     (tests/test_properties.py::test_bpe_train_tiers_agree) and the
     registry's DuckDB oracles certify the same merge tables. Sets
-    ``LAST_TRAIN_ROUNDS`` identically (the scale probe's batching
-    assertion sees the same counter either way)."""
+    ``LAST_TRAIN_ROUNDS`` identically (the batching assertion in
+    tests/test_corpus_ops.py::
+    test_bpe_train_batched_disjoint_pairs_match_sequential sees the
+    same counter either way)."""
     global LAST_TRAIN_ROUNDS
     rows = words.select("freq", "sym").collect()
     freqs = [int(r["freq"]) for r in rows]

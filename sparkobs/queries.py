@@ -12852,9 +12852,10 @@ def _powerlaw_vec_ctes(dim: int = _PL_DIM) -> str:
 # no slot: (1) the identical-outputs guarantee is unit/property-tested
 # on the same power-law corpus (tests/test_r9_ops.py — pruned == exact
 # pair for pair, cosine for cosine, plus cap-sweep containment on a
-# second corpus), and (2) the pruned-vs-exact wall-clock gap is a
-# SCALE.md probe (tools/scale_probe.py sparse_cos_powerlaw_exact_leg)
-# re-measured on demand rather than every round. The exact TIER stays
+# second corpus, tests/test_r9_ops.py::
+# test_pruned_tier_equals_exact_tier_row_for_row), and (2) the
+# pruned-vs-exact wall-clock gap is no longer probed; SCALE.md keeps
+# its last measurements as history. The exact TIER stays
 # a supported sparse_cosine_pairs configuration (max_df=None);
 # sparse_cosine_powerlaw_pruned below remains its registered,
 # oracle-certified production form, sharing the same CTE chain.

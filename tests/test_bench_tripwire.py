@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -215,7 +216,8 @@ def test_bench_loops_route_through_timed_reps():
     headline loop and the tail loop must take their timings from
     timed_reps (the function the test above pins) — a future edit
     that reverts to inline timing silently reopens the warm-up
-    rep-cache channel."""
+    rep-cache channel. The timing tools (remeasure, scale_probe) read
+    no clock of their own either."""
     import inspect
 
     import bench
@@ -230,6 +232,14 @@ def test_bench_loops_route_through_timed_reps():
     assert "time.perf_counter()" not in src.split("timed_reps(")[0].split(
         "for name in HEADLINE"
     )[-1], "headline loop times inline instead of via timed_reps"
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    for tool in ("remeasure.py", "scale_probe.py"):
+        with open(os.path.join(tools, tool)) as fh:
+            tool_src = fh.read()
+        assert "timed_reps(" in tool_src, f"{tool} no longer times via timed_reps"
+        assert not re.search(r"\btime\.(perf_counter|time|monotonic)\(", tool_src), (
+            f"{tool} times inline instead of via timed_reps"
+        )
 
 
 def test_tail_loop_survives_a_failing_release(capsys):

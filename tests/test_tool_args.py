@@ -25,6 +25,9 @@ TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         ("bench_compare.py", ["only_one.json"]),
         ("bench_compare.py", ["a.json", "b.json", "--top", "x"]),
         ("check_oracle.py", ["--queue"]),
+        ("scale_probe.py", []),
+        ("scale_probe.py", ["--copies", "0", "q"]),
+        ("scale_probe.py", ["--copies", "x", "q"]),
     ],
 )
 def test_bad_arguments_exit_2_with_usage(tool, args):

@@ -42,21 +42,12 @@ def main(argv: list[str] | None = None) -> int:
     sf_dir, reps, names = args.sf, args.reps, args.names
 
     import __spark_entry__ as entrymod
-    from bench import release_session_state, timed_reps
+    from bench import release_session_state, timed_reps, warm_session
     from sparkobs.session import get_spark
 
     spark = get_spark("sparkobs-remeasure")
     qs = entrymod.queries()
-    # warm the JVM + Python/Arrow worker path (same as bench.py)
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _ident(batches):
-        for b in batches:
-            yield b
-
-    spark.range(1000).selectExpr("id", "cast(id as double) x").repartition(
-        8
-    ).mapInPandas(_ident, "id long, x double").count()
+    warm_session(spark)
 
     baseline_tables = {t.name for t in spark.catalog.listTables()}
 
