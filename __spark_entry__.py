@@ -58,6 +58,10 @@ _PRIORITY: list[str] = [
     "streaming_theta_intersection_events",
     "streaming_theta_intersection_grouped_events",
     "streaming_monitor_health_events",
+    "bucket_monitor_metrics",
+    "listing_key_metrics",
+    "storage_capacity_stats",
+    "jdbc_roundtrip_nation",
 ]
 
 

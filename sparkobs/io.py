@@ -14,6 +14,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkobs.session import jvm_class
+
 # External-source (warehouse) tier — re-exported here so io is the one
 # place that names every source kind: parquet scans (load_table), temp
 # views (register_views), and JDBC pulls with partitioned reads +
@@ -288,7 +290,7 @@ def _leaf_files(spark: SparkSession, path: str) -> tuple:
     """``(path, length, modification time)`` of every leaf file under
     ``path``, listed through the path's Hadoop FileSystem (no Spark
     job)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     out = []
     pending = [hpath]

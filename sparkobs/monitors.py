@@ -143,9 +143,12 @@ def monitor_suite(
     Shape: per table, freshness is the one-max aggregate of
     checks.freshness_check, the contract suite is run_checks' one
     shared aggregation pass, and each percentile contract is one
-    map-side top-k + k-row aggregate — all unioned lazily into a
-    single job. Output: (table_name, check_type, column, metric_value,
-    passed) — metric_value is staleness seconds for freshness rows and
+    map-side top-k + k-row aggregate — all unioned lazily into one
+    DataFrame and one action. AQE runs each shuffle stage of that
+    action as its own job: ``monitor_suite_lake`` (two tables, a
+    freshness and a contract aggregate each) runs 5 jobs. Output:
+    (table_name, check_type, column, metric_value, passed) —
+    metric_value is staleness seconds for freshness rows and
     the violation count for contract rows (exact integers in double
     form), and the KMV estimate for percentile rows (the identical
     sample value any engine picks — certifiable unrounded, see

@@ -43,9 +43,14 @@ def table_shapes(dfs: dict[str, DataFrame]) -> DataFrame:
     """(table_name, row_count, col_count) per table (OP-04/06/23).
 
     Row counts are per-table count-star aggregates union-ed into one
-    DataFrame — each count is answered from parquet footers (DSv2
-    count-star pushdown), the Spark analog of the reference's
-    metadata-only counts (snowflake_table_monitor.py:57-62).
+    DataFrame. No count is pushed down: parquet reads through the V1
+    file source (it is in ``spark.sql.sources.useV1SourceList``) and
+    ``spark.sql.parquet.aggregatePushdown`` is off, so each table is a
+    column-less scan (``ReadSchema: struct<>``, no column data
+    decoded) under a partial/final count with its own single-partition
+    Exchange; under AQE every such shuffle is a job, and the 10-table
+    ``shape_summary_all`` runs 11 jobs. The reference's counts are
+    metadata-only (snowflake_table_monitor.py:57-62).
     """
     parts = [
         df.agg(

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkobs.io import load_table
+from sparkobs.session import jvm_class
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -2800,7 +2801,7 @@ def _stage_derby_nation(spark: SparkSession, sf_dir: str) -> str:
         # the same files when the published path is first connected.
         # Derby signals successful shutdown via SQLException 08006.
         try:
-            spark._sc._jvm.java.sql.DriverManager.getConnection(
+            jvm_class(spark, "java.sql.DriverManager").getConnection(
                 f"jdbc:derby:{tmp};shutdown=true"
             )
         except Exception:  # noqa: BLE001 — 08006 IS the success signal

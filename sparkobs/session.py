@@ -13,6 +13,12 @@ Scale notes (100 TB design, SURVEY.md §4):
   cost, not pickled rows.
 - UTC session timezone: timestamp semantics identical to the DuckDB
   oracle and stable across clusters.
+- Codegen cache of ``CODEGEN_CACHE_ENTRIES`` classes (Spark keeps
+  100): one monitor cycle generates more than 100 distinct classes,
+  so with the default every repeated cycle recompiles most of its own
+  code with Janino. The cache lives in the driver JVM and holds
+  generated code, not data, so the constant does not grow with data
+  or cluster size.
 """
 
 from __future__ import annotations
@@ -21,6 +27,13 @@ import os
 import weakref
 
 from pyspark.sql import SparkSession
+
+#: generated classes the driver JVM keeps compiled. One cycle of the
+#: five perfbench ``monitor_stream_sf001`` queries compiles ~120
+#: classes cold; at Spark's 100 every warm cycle recompiled 111-113
+#: of them (sf0.01, 4 cores), at 1000 none. Measured cost: peak RSS
+#: of that workload 1,790 -> 1,806 MB (median of 10 runs, +0.9%).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "sparkobs", extra_conf: dict | None = None) -> SparkSession:
@@ -49,6 +62,7 @@ def get_spark(app_name: str = "sparkobs", extra_conf: dict | None = None) -> Spa
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # testdata's events.parquet stores TIMESTAMP(NANOS); Spark has no
@@ -97,3 +111,23 @@ def ship_to_workers(spark: SparkSession) -> None:
                     zf.write(src, os.path.relpath(src, os.path.dirname(pkg)))
     sc.addPyFile(archive)
     _SHIPPED.add(sc)
+
+
+#: py4j gateway client -> {class name: JavaClass}
+_CLASSES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def jvm_class(spark: SparkSession, fqn: str):
+    """The JVM class ``fqn`` (e.g. ``"org.apache.hadoop.fs.Path"``) of
+    ``spark``'s gateway, resolved once per gateway. Spelling it as a
+    py4j package walk (one ``spark._jvm`` attribute per name segment)
+    costs a gateway round trip per segment on every call, and the JVM
+    answers each package segment with a failed class lookup over every
+    jar on the classpath."""
+    from py4j.java_gateway import JavaClass
+
+    client = spark.sparkContext._gateway._gateway_client
+    classes = _CLASSES.setdefault(client, {})
+    if fqn not in classes:
+        classes[fqn] = JavaClass(fqn, client)
+    return classes[fqn]

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkobs.session import jvm_class
+
 LISTING_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType(), False),
@@ -41,10 +43,9 @@ def list_files(spark: SparkSession, root: str, recursive: bool = True) -> DataFr
     content touched. Equivalent of the boto3 listing loop at
     s3_bucket_monitor.py:70-74, but returning a queryable DataFrame.
     """
-    jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
     conf = jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
+    jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(root)
     fs = jpath.getFileSystem(conf)
     it = fs.listFiles(jpath, recursive)
     rows = []
@@ -221,9 +222,8 @@ def fs_status(spark: SparkSession, root: str) -> DataFrame:
     """
     cap = used = rem = pct = None
     try:
-        jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(root)
+        jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(root)
         st = jpath.getFileSystem(conf).getStatus(jpath)
         cap, used, rem = st.getCapacity(), st.getUsed(), st.getRemaining()
         if cap and cap > 0:
@@ -412,8 +412,7 @@ def compaction_execute(
                 norm_p = _re.sub("^[a-z0-9+.-]+:/+", "/", p)
                 return int(hashlib.md5(norm_p.encode()).hexdigest()[:15], 16)
 
-            jvm = spark.sparkContext._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(cand)
+            jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(cand)
             fs = jpath.getFileSystem(
                 spark.sparkContext._jsc.hadoopConfiguration()
             )

@@ -214,6 +214,10 @@ def stateful_count_drift(events: DataFrame, key_col: str = "event_type") -> Data
 
 
 _DRAIN_TIMEOUT_S = 300
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def drain(
@@ -236,9 +240,27 @@ def drain(
     empty source reports an idle progress event but never writes the
     sink). The query is always stopped.
 
-    Two confs are scoped to exactly this drain (both are read at
-    query start) and restored afterwards, on failure too:
+    These confs are scoped to exactly this drain (all are read at
+    query start) and restored afterwards — or unset again if they were
+    unset — on failure too:
 
+    - the checkpoint file manager, always: the FileSystem-based one.
+      Spark's default writes offsets, commits, source logs and state
+      deltas through Hadoop's FileContext, and without a native
+      libhadoop the local FileContext forks a ``readlink`` child
+      process for every link-status call (112 per warm drain of
+      ``streaming_monitor_health_events`` at sf0.01). The
+      FileSystem-based manager writes the same files through
+      ``FileSystem.create``/``rename`` and forks no ``readlink``,
+      under any session, including one that carries none of
+      :func:`sparkobs.session.get_spark`'s confs. (The ``chmod``
+      children of the local FileSystem's mkdirs and checksummed
+      creates stay until a native libhadoop is present.) Its rename
+      is not atomic (exists-then-rename), which is safe here: no drain
+      sets a ``checkpointLocation``, so each one writes a fresh
+      temporary checkpoint under its uuid-suffixed query name and is
+      that checkpoint's only writer. Checkpoint checksums keep their
+      default (on).
     - ``shuffle_partitions``: stateful operators inherit the session's
       shuffle-partition count for their STATE exchange, fixed at
       stream start; 32 scheduled state tasks per micro-batch for a
@@ -255,13 +277,15 @@ def drain(
       and stateful timeouts need it.
     """
     name = f"{name}_{uuid.uuid4().hex[:8]}"
-    scoped = {}
+    scoped = {
+        "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER
+    }
     if shuffle_partitions is not None:
         scoped["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if output_mode == "complete":
         scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     conf = writer._spark.conf  # the writer's own session (no public accessor)
-    prev = {k: conf.get(k) for k in scoped}
+    prev = {k: conf.get(k, None) for k in scoped}  # None: not set
     for k, v in scoped.items():
         conf.set(k, v)
     try:
@@ -285,7 +309,10 @@ def drain(
             q.stop()
     finally:
         for k, v in prev.items():
-            conf.set(k, v)
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
     return name
 
 
@@ -298,9 +325,10 @@ def run_to_memory(
     """Drain ``stream_df`` into an in-memory table and return the table
     name to read. The drain contract is :func:`drain`'s: verified
     (raises on timeout or on a drain that reported no progress),
-    conf-scoped (``shuffle_partitions`` and the no-data-batch conf are
-    restored afterwards), trailing no-data batch suppressed only in
-    complete mode, table name made unique per call."""
+    conf-scoped (the checkpoint manager, ``shuffle_partitions`` and the
+    no-data-batch conf are restored afterwards), trailing no-data
+    batch suppressed only in complete mode, table name made unique per
+    call."""
     return drain(
         stream_df.writeStream.format("memory"),
         name,

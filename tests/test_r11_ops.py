@@ -180,18 +180,22 @@ def test_sampled_join_agg_ci_null_keys_and_values(spark):
     assert out["b"]["est_count"] == 1
 
 
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 _DRAIN_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.noDataMicroBatches.enabled",
+    _CHECKPOINT_MANAGER,
 )
 
 
 @pytest.mark.parametrize("via", ["run_to_memory", "drain"])
 def test_drain_scopes_and_restores_confs(spark, tmp_path, via):
     """The streaming fixed-cost levers must be SCOPED: the session's
-    shuffle-partition and no-data-batch confs are restored after the
-    drain — and on failure — so a narrow-state stream never leaks its
-    width or its suppressed no-data batch into later plans."""
+    shuffle-partition, no-data-batch and checkpoint-manager confs are
+    restored after the drain — and on failure — so a narrow-state
+    stream never leaks its width, its suppressed no-data batch or its
+    checkpoint manager into later plans. The manager has no default:
+    unset before the drain, it is unset again after it."""
     from pyspark.errors import AnalysisException
 
     from sparkobs.streaming.monitors import drain, run_to_memory
@@ -202,8 +206,9 @@ def test_drain_scopes_and_restores_confs(spark, tmp_path, via):
             return drain(writer, "x", "complete", shuffle_partitions=2)
         return run_to_memory(stream_df, "x", "complete", shuffle_partitions=2)
 
-    before = {k: spark.conf.get(k) for k in _DRAIN_CONFS}
+    before = {k: spark.conf.get(k, None) for k in _DRAIN_CONFS}
     assert before["spark.sql.shuffle.partitions"] != "2"
+    assert before[_CHECKPOINT_MANAGER] is None
     src = str(tmp_path / "src")
     rows = [(1, "a"), (2, "a"), (3, "b")]
     spark.createDataFrame(rows, "id long, v string").write.parquet(src)
@@ -212,10 +217,87 @@ def test_drain_scopes_and_restores_confs(spark, tmp_path, via):
     # the confs are set — the finally path
     with pytest.raises(AnalysisException):
         run(stream)
-    assert {k: spark.conf.get(k) for k in _DRAIN_CONFS} == before
+    assert {k: spark.conf.get(k, None) for k in _DRAIN_CONFS} == before
     tbl = run(stream.groupBy("v").count())
     assert sorted(spark.table(tbl).collect()) == [("a", 2), ("b", 1)]
-    assert {k: spark.conf.get(k) for k in _DRAIN_CONFS} == before
+    assert {k: spark.conf.get(k, None) for k in _DRAIN_CONFS} == before
+
+
+def test_drain_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """A drain's micro-batches run with the FileSystem-based checkpoint
+    manager (no ``readlink`` child process per checkpoint file), and
+    the session's own conf is left as it was."""
+    from sparkobs.streaming.monitors import drain
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1,), (2,)], "id long").write.parquet(src)
+    seen = []
+
+    def record(df, batch_id):
+        seen.append(df.sparkSession.conf.get(_CHECKPOINT_MANAGER, None))
+
+    stream = spark.readStream.schema("id long").parquet(src)
+    drain(stream.writeStream.foreachBatch(record), "ckpt_manager")
+    assert seen == [
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ]
+    assert spark.conf.get(_CHECKPOINT_MANAGER, None) is None
+
+
+#: the queries of perfbench's ``monitor_stream_sf001`` cycle
+_MONITOR_CYCLE = (
+    "shape_summary_all",
+    "monitor_suite_lake",
+    "bucket_monitor_metrics",
+    "streaming_monitor_health_events",
+    "jsonl_roundtrip_events",
+)
+
+
+def test_a_repeated_monitor_cycle_compiles_no_classes(spark, sf_dir):
+    """One monitor cycle generates more classes than Spark's default
+    codegen cache keeps (100). The session's cache holds a whole cycle,
+    so running the cycle again compiles nothing with Janino."""
+    from sparkobs.queries import SPARK_QUERIES
+    from sparkobs.session import jvm_class
+
+    compiles = jvm_class(
+        spark, "org.apache.spark.metrics.source.CodegenMetrics"
+    ).METRIC_COMPILATION_TIME()
+
+    def cycle():
+        n = compiles.getCount()
+        for name in _MONITOR_CYCLE:
+            SPARK_QUERIES[name](spark, sf_dir).collect()
+        return compiles.getCount() - n
+
+    cycle()
+    assert cycle() == 0
+
+
+def test_jvm_classes_resolve_without_package_walks():
+    """Spark-free source check: no module spells a JVM class as a py4j
+    package walk (``jvm.org.…`` / ``jvm.java.…``), which costs a gateway
+    round trip and a failed classpath-wide class lookup per package
+    segment on every call. Classes come from the one cached resolver,
+    ``session.jvm_class``."""
+    import pathlib
+    import re
+
+    walk = re.compile(r"\b_?jvm\.(org|java|javax|scala|com)\.")
+    root = pathlib.Path(__file__).resolve().parents[1] / "sparkobs"
+    offenders = []
+    resolvers = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        if walk.search(src):
+            offenders.append(rel)
+        if "JavaClass(" in src:
+            resolvers.append(rel)
+    assert offenders == []
+    assert resolvers == ["session.py"]
 
 
 def test_foreach_batch_drain_refuses_a_drain_without_progress(spark, tmp_path):
