@@ -50,6 +50,23 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
+    "pagerank_copurchase",
+    "pagerank_weighted_copurchase",
+    "pagerank_personalized_copurchase",
+    "components_supplier_mutual_knn",
+    "impact_reach_supply_chain",
+    "kmeans_embeddings",
+    "kmeans_ari_embeddings",
+    "streaming_kmeans_assign_embeddings",
+    "bpe_merges_documents",
+    "bpe_tokenize_documents",
+    "bpe_merges_batched_documents",
+    "bpe_batched_parity_documents",
+    "compaction_plan_sf_dir",
+    "compaction_execute_documents",
+    "cosine_topk",
+    "dim_ablation_recall_embeddings",
+    "embedding_near_dup_pairs",
     "streaming_near_dup_candidates",
     "streaming_incremental_band_index",
     "streaming_cms_events",

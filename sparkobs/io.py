@@ -477,3 +477,21 @@ def pin_corpus_frame(df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.DISK_ONLY)
     df.count()
     return df
+
+
+def collect_at_most(df: DataFrame, n: int) -> "pandas.DataFrame | None":
+    """The whole of ``df`` as a pandas frame when it has at most ``n``
+    rows, else None — the one size decision of every dense driver
+    tier and of the brute-force cosine corpus guard.
+
+    One Arrow job, ``limit(n + 1)``: the same rows decide and fetch,
+    so no separate ``count()`` runs first, and the driver holds at
+    most n+1 rows even when ``df`` is 100 TB. None means "past the
+    cap": the caller takes its distributed tier (or, for an input
+    guard, raises). ``n <= 0`` returns None without a job, which is
+    how a test forces the distributed tier (patch the caller's cap
+    constant to 0)."""
+    if n <= 0:
+        return None
+    pdf = df.limit(n + 1).toPandas()
+    return pdf if len(pdf) <= n else None

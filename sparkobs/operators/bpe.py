@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkobs.io import collect_at_most
 from sparkobs.operators.text import tokens_nonempty
 
 #: chars → canonical symbol string; per-element substring references
@@ -109,21 +110,20 @@ def _select_disjoint(top_rows, budget: int) -> list[tuple]:
     return picked
 
 
-#: dense-dispatch bound for :func:`bpe_train` (r12, seventh density
-#: dispatch): at or below this many DISTINCT WORDS (counted against
-#: the eager word-frequency checkpoint — the corpus itself is never
-#: the bound), the merge rounds run driver-side. Byte budget: 64k
+#: dense-dispatch bound for :func:`bpe_train`: at or below this many
+#: DISTINCT WORDS (the word-frequency table — the corpus itself is
+#: never the bound), the merge rounds run driver-side. Byte budget: 64k
 #: words × ~200 B (freq + canonical sym string) ≈ 13 MB collected
 #: once; per-round work is a C-speed str.replace scan over ≤13 MB.
 DENSE_BPE_MAX_WORDS = 65536
 
 
 def _dense_bpe_train(
-    spark, words: DataFrame, n_merges: int, batch_size: int
+    pdf, spark, n_merges: int, batch_size: int
 ) -> DataFrame:
     """The dense tier of :func:`bpe_train`: identical merge rounds
-    driver-side over one bounded collect of the word-frequency table.
-    Replays the distributed semantics EXACTLY, sharing
+    driver-side over ``pdf``, the collected (freq, sym) word-frequency
+    table. Replays the distributed semantics EXACTLY, sharing
     :func:`_select_disjoint`:
 
     - pair counts are exact integer sums over adjacent symbol pairs of
@@ -147,9 +147,8 @@ def _dense_bpe_train(
     test_bpe_train_batched_disjoint_pairs_match_sequential sees the
     same counter either way)."""
     global LAST_TRAIN_ROUNDS
-    rows = words.select("freq", "sym").collect()
-    freqs = [int(r["freq"]) for r in rows]
-    syms = [r["sym"] for r in rows]
+    freqs = pdf["freq"].tolist()
+    syms = pdf["sym"].tolist()
     merges: list[tuple] = []
     rounds = 0
     while len(merges) < n_merges:
@@ -183,7 +182,6 @@ def bpe_train(
     n_merges: int = 8,
     text_col: str = "text",
     batch_size: int = 1,
-    dense_max_words: int = DENSE_BPE_MAX_WORDS,
     words: DataFrame | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the merge
@@ -207,17 +205,8 @@ def bpe_train(
     Stops early if the vocabulary runs out of adjacent pairs (every
     word fused to one symbol).
 
-    Density dispatch (r12, seventh instance): the training loop's
-    working set is the DISTINCT-WORD table, which is vocabulary-sized
-    regardless of corpus size — at ≤``dense_max_words`` rows (counted
-    against the eager checkpoint; a 100 TB corpus with a bounded
-    vocabulary still qualifies, which is precisely the point) the
-    merge rounds run driver-side via :func:`_dense_bpe_train`,
-    bit-identical by shared selection code + shared replace semantics
-    (hypothesis-property-tested). Each distributed round costs a
-    pair-count hash agg + TakeOrdered + checkpoint (~0.3 s of
-    scheduling at ANY table size); past the bound that loop runs
-    unchanged.
+    Dense dispatch: ≤ ``DENSE_BPE_MAX_WORDS`` distinct words run the
+    rounds in :func:`_dense_bpe_train` (:func:`sparkobs.io.collect_at_most`).
 
     ``words`` (r14 optimization round): callers that train MULTIPLE
     vocabularies over ONE corpus (the batched-parity certification
@@ -234,8 +223,9 @@ def bpe_train(
     spark = df.sparkSession
     if words is None:
         words = word_frequencies(df, text_col).localCheckpoint(eager=True)
-    if dense_max_words and words.count() <= dense_max_words:
-        return _dense_bpe_train(spark, words, n_merges, batch_size)
+    pdf = collect_at_most(words.select("freq", "sym"), DENSE_BPE_MAX_WORDS)
+    if pdf is not None:
+        return _dense_bpe_train(pdf, spark, n_merges, batch_size)
     merges: list[tuple] = []
     rounds = 0
     while len(merges) < n_merges:

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkobs.io import collect_at_most
+
 VQ_SCALE = 1000      # vector grid: 1e-3
 C_SUBSCALE = 100     # centroid grid: 1e-5 (vector grid / 100)
 
@@ -126,7 +128,6 @@ def _fit(
     vec_col: str,
     k: int,
     iters: int,
-    dense_max_cells: int = DENSE_KM_MAX_CELLS,
 ) -> tuple[DataFrame, DataFrame, "object"]:
     """Shared fit loop: quantize, seed from the k lowest ids, run
     ``iters`` assign→update rounds. Returns (q, final centroids,
@@ -138,14 +139,17 @@ def _fit(
     callers that need the final assignment skip that whole
     crossJoin + per-id window subtree (one exchange of n×k rows).
     Lazy (a callable, not a frame) so fit-only callers like the
-    streaming scorer pay nothing for it."""
+    streaming scorer pay nothing for it.
+
+    Dense dispatch: ≤ ``DENSE_KM_MAX_CELLS // dim`` rows run the
+    rounds in numpy (:func:`sparkobs.io.collect_at_most`)."""
     q = quantize_vectors(df, id_col, vec_col)
-    if dense_max_cells:
-        n_rows = df.count()
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = (first["d"] if first else 0) or 0
-        if 0 < n_rows * dim <= dense_max_cells:
-            return q, *_dense_kmeans_centroids(q, k, iters)
+    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim = (first["d"] if first else 0) or 0
+    if dim > 0:
+        pdf = collect_at_most(q, DENSE_KM_MAX_CELLS // dim)
+        if pdf is not None:
+            return q, *_dense_kmeans_centroids(pdf, q.sparkSession, k, iters)
     seeds = q.orderBy("id").limit(k)
     # row_number over the k-row seed table only (repo convention:
     # global windows run over key/seed tables, never raw rows)
@@ -159,18 +163,17 @@ def _fit(
 
 
 def _dense_kmeans_centroids(
-    q: DataFrame, k: int, iters: int
+    pdf, spark, k: int, iters: int
 ) -> tuple[DataFrame, "object"]:
     """The dense tier of :func:`_fit`: the Lloyd rounds in numpy int64
-    over one bounded collect of the (already Spark-quantized) grid.
-    Mirrors the distributed loop op for op — seeds = the k lowest-id
+    over ``pdf``, the collected (id, q) rows of the already
+    Spark-quantized grid. Mirrors the distributed loop op for op — seeds = the k lowest-id
     rows (cluster = id rank), distance = Σ(q·100 − cq)² in exact
     int64 (same BIGINT headroom contract as the module docstring),
     argmin ties → lowest cluster id (np.argmin returns the first
     minimum over ascending cluster order), update = floor(s·100.0/n)
     with the identical float64 operand order, empty clusters drop
-    with their original ids preserved. Caller proves the bound before
-    the collect.
+    with their original ids preserved.
 
     Returns (centroids frame, assign_frame) where ``assign_frame``
     lazily builds the final per-row (id, cluster, dist) assignment —
@@ -182,8 +185,6 @@ def _dense_kmeans_centroids(
     import numpy as np
     import pandas as pd
 
-    spark = q.sparkSession
-    pdf = q.toPandas()
     ids = pdf["id"].to_numpy()
     order = np.argsort(ids)
     ids_sorted = ids[order]
@@ -250,12 +251,11 @@ def kmeans_assign(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
-    dense_max_cells: int = DENSE_KM_MAX_CELLS,
 ) -> DataFrame:
     """The fit's final per-row assignment: (id, cluster, dist) —
     the membership view of :func:`kmeans_fit` for downstream
     evaluation (purity, ARI) and per-cluster processing."""
-    q, cents, dense_assign = _fit(df, id_col, vec_col, k, iters, dense_max_cells)
+    q, cents, dense_assign = _fit(df, id_col, vec_col, k, iters)
     if dense_assign is not None:
         return dense_assign()
     return _assign(q, cents).select("id", "cluster", "dist")
@@ -330,7 +330,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
-    dense_max_cells: int = DENSE_KM_MAX_CELLS,
 ) -> DataFrame:
     """Lloyd k-means: ``iters`` assign→update rounds from the k
     lowest-id seed vectors, then a final assignment pass for the
@@ -340,7 +339,7 @@ def kmeans_fit(
     units (÷ 1e10) and ``centroid_ss`` is the integer sum of squared
     centroid components — a hash-stable centroid fingerprint.
     """
-    q, cents, dense_assign = _fit(df, id_col, vec_col, k, iters, dense_max_cells)
+    q, cents, dense_assign = _fit(df, id_col, vec_col, k, iters)
     final = dense_assign() if dense_assign is not None else _assign(q, cents)
     css = cents.select(
         "cluster",

@@ -26,6 +26,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from sparkobs.io import collect_at_most
+
+
 def unpersist_candidates() -> int:
     """Release candidate caches of the LSH tier. :func:`minhash_lsh_pairs`
     persists nothing, so there is nothing to release: always returns 0.
@@ -140,7 +143,8 @@ def _bounded_fan_out(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _guard_exact_tier(df: DataFrame, max_rows: int, caller: str) -> None:
     """Corpus-size guard for the exact shingle-self-join tiers (the
-    dedup twin of ``similarity._guard_corpus``): raise with a pointer
+    dedup twin of the brute-force corpus cap in
+    :mod:`sparkobs.operators.similarity`): raise with a pointer
     to the LSH tier instead of launching a shuffle that is
     Σ df(shingle)²-bound under hot-shingle skew. The probe itself is
     bounded: ``limit(max_rows+1)`` means a mis-called 100 TB input
@@ -534,8 +538,8 @@ def minhash_lsh_pairs(
     )
 
 
-def _union_find_local(pairs: list[tuple], spark, id_type) -> DataFrame:
-    """Driver-side union-find over an already-bounded edge list — the
+def _union_find_local(pdf, spark, id_type) -> DataFrame:
+    """Driver-side union-find over the collected (u, v) edges — the
     small-graph fast path of :func:`connected_components` (same
     adaptive-threshold idea as broadcast joins: below the bound,
     shipping the problem to one node beats 2·diameter shuffle jobs)."""
@@ -552,7 +556,7 @@ def _union_find_local(pairs: list[tuple], spark, id_type) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in pairs:
+    for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
@@ -574,20 +578,10 @@ def _union_find_local(pairs: list[tuple], spark, id_type) -> DataFrame:
     )
 
 
-def _edges_if_bounded(raw: DataFrame, max_local_edges: int) -> list[tuple] | None:
-    """ONE limit-guarded Arrow collect replacing the old count()-then-
-    collect probe of :func:`connected_components`: ``limit(bound+1)``
-    either returns every edge (≤ bound rows → the local tier's whole
-    input, with no separate count job) or proves the bound exceeded
-    while holding at most bound+1 rows of driver memory (→ distributed
-    tier). Same dispatch decision as counting — ``limit`` returning
-    k ≤ bound rows means the edge list has exactly k rows."""
-    if max_local_edges <= 0:
-        return None
-    pdf = raw.limit(max_local_edges + 1).toPandas()
-    if len(pdf) > max_local_edges:
-        return None
-    return list(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+#: Edge cap of :func:`connected_components`' driver-side union-find:
+#: 250k edges ≈ tens of MB of int tuples, sized so the driver copy
+#: cannot itself become the memory problem the distributed loop avoids.
+UNION_FIND_MAX_EDGES = 250_000
 
 
 def connected_components(
@@ -595,7 +589,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 25,
-    max_local_edges: int = 250_000,
 ) -> DataFrame:
     """Connected components over an undirected pair list — the step that
     turns near-dup PAIRS into dedup GROUPS (one canonical doc per
@@ -623,29 +616,19 @@ def connected_components(
     DataFrame (it never enters the CacheManager, so
     ``spark.catalog.clearCache()`` bookkeeping stays clean).
 
-    Adaptive fast path: when the edge list is at most
-    ``max_local_edges`` rows, the components are solved with
-    driver-side union-find instead — O(E α(E)) on one core beats
-    2·diameter scheduled jobs by seconds, the same size-threshold
-    reasoning as broadcast joins. The probe and the collect are ONE
-    limit-guarded Arrow job (:func:`_edges_if_bounded`): either every
-    edge comes back (≤ bound) or the bound is proven exceeded at
-    bound+1 rows of driver memory. The default (250k edges ≈ tens of
-    MB of int tuples) is sized so the driver-side copy cannot itself
-    become the memory problem the distributed loop avoids. A 100 TB
-    dedup graph exceeds the bound and takes the distributed loop; set
-    ``max_local_edges=0`` to force it.
+    Adaptive fast path: ≤ ``UNION_FIND_MAX_EDGES`` edges are solved
+    by driver-side union-find (:func:`sparkobs.io.collect_at_most`).
     """
     # persist the RAW edges first: the symmetrizing union references
     # them twice, and without this cache the (possibly expensive)
     # upstream pair pipeline would run once per union branch — then
     # persist the symmetrized list every iteration joins against
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    pairs = _edges_if_bounded(raw, max_local_edges)
-    if pairs is not None:
+    pdf = collect_at_most(raw, UNION_FIND_MAX_EDGES)
+    if pdf is not None:
         raw.unpersist()
         return _union_find_local(
-            pairs, edges.sparkSession, edges.schema[src].dataType
+            pdf, edges.sparkSession, edges.schema[src].dataType
         )
     sym = (
         raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sparkobs.io import collect_at_most
+
 UNIT = 1_000_000_000  # 1e-9 rank micro-units
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as an exact ratio
 
@@ -48,7 +50,6 @@ def pagerank_fixed(
     iters: int = 3,
     weight_col: str | None = None,
     teleport: DataFrame | None = None,
-    dense_max_edges: int = DENSE_PR_MAX_EDGES,
     edges_distinct: bool = False,
 ) -> DataFrame:
     """PageRank in fixed-point arithmetic over a directed edge list
@@ -77,6 +78,9 @@ def pagerank_fixed(
     on dst of the integer shares, then a rank rebuild over the node
     table. Edge/out-weight/node tables are checkpointed once up front
     (they are reused every superstep), rank tables once per superstep.
+
+    Dense dispatch: ≤ ``DENSE_PR_MAX_EDGES`` edges run in numpy
+    (:func:`sparkobs.io.collect_at_most`).
     """
     if weight_col is None:
         # edges_distinct=True lets a caller that PROVES (src, dst)
@@ -105,8 +109,9 @@ def pagerank_fixed(
             ).alias("w"),
         )
     e = e.localCheckpoint(eager=True)
-    if e.count() <= dense_max_edges:
-        return _dense_pagerank(e, iters, teleport)
+    pdf = collect_at_most(e, DENSE_PR_MAX_EDGES)
+    if pdf is not None:
+        return _dense_pagerank(pdf, e.sparkSession, iters, teleport)
     outdeg = (
         e.groupBy("src").agg(F.sum("w").alias("od"))
         .localCheckpoint(eager=True)
@@ -181,16 +186,18 @@ def pagerank_fixed(
     return ranks.select("node", F.col("r").alias("rank_units"))
 
 
-def _dense_pagerank(e: DataFrame, iters: int, teleport: DataFrame | None) -> DataFrame:
+def _dense_pagerank(
+    pdf, spark, iters: int, teleport: DataFrame | None
+) -> DataFrame:
     """The dense tier of :func:`pagerank_fixed`: identical fixed-point
-    integer supersteps in numpy int64 over a bounded edge collect.
-    Every operation mirrors the distributed plan exactly — UNIT div
+    integer supersteps in numpy int64 over the collected edges ``pdf``
+    (src, dst, w). Every operation mirrors the distributed plan exactly — UNIT div
     nn init, share = (r·w) div od, r' = base + (85·inflow) div 100,
     inflow to a non-source dst dropped (ranks cover source nodes
     only, the kernel's documented contract) — all on non-negative
     int64, where SQL div ≡ numpy floor division. Overflow headroom:
     r ≤ UNIT = 1e9, so r·w and 85·inflow sit far inside int64 for
-    any sane weight. Caller guarantees the collect is bounded.
+    any sane weight.
 
     NULL parity with the distributed plan: a NULL-weight edge emits
     no share and adds nothing to its src's out-weight (SQL SUM/NULL
@@ -200,8 +207,6 @@ def _dense_pagerank(e: DataFrame, iters: int, teleport: DataFrame | None) -> Dat
     toward nn (SUM over the distinct frame) but matches no node."""
     import numpy as np
 
-    spark = e.sparkSession
-    pdf = e.toPandas()
     if len(pdf) == 0:
         return spark.createDataFrame([], "node long, rank_units long")
     src_all = pdf["src"].to_numpy(np.int64)
@@ -367,11 +372,7 @@ DENSE_TRI_MAX_NODES = 4096
 DENSE_TRI_MAX_EDGES = 4_000_000
 
 
-def triangle_stats(
-    edges: DataFrame,
-    dense_max_nodes: int = DENSE_TRI_MAX_NODES,
-    dense_max_edges: int = DENSE_TRI_MAX_EDGES,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census with a density dispatch.
 
     DISTRIBUTED PATH (the default, any scale): DEGREE-ORDERED
@@ -394,7 +395,7 @@ def triangle_stats(
 
     DENSE PATH (small graphs, the igraph/cuGraph-style dispatch):
     when the census output itself proves the graph tiny —
-    n_nodes ≤ ``dense_max_nodes`` AND n_edges ≤ ``dense_max_edges``
+    n_nodes ≤ ``DENSE_TRI_MAX_NODES`` AND n_edges ≤ ``DENSE_TRI_MAX_EDGES``
     (counts the operator must compute anyway) — the edge list is a
     bounded collect (≤ 64 MB at the defaults, the same justified-
     bound discipline as the PCA dim² Gram collect) and the count is
@@ -437,8 +438,8 @@ def triangle_stats(
     ).crossJoin(e.agg(F.count(F.lit(1)).cast("long").alias("n_edges")))
     n_nodes, n_wedges, n_edges = stats.first()
 
-    if n_nodes <= dense_max_nodes and n_edges <= dense_max_edges:
-        n_triangles = _dense_triangle_count(e, n_nodes)
+    if n_nodes <= DENSE_TRI_MAX_NODES and n_edges <= DENSE_TRI_MAX_EDGES:
+        n_triangles = _dense_triangle_count(e.toPandas()) if n_edges else 0
     else:
         rk = deg.select(
             "node",
@@ -489,13 +490,14 @@ def triangle_stats(
     )
 
 
-def _dense_triangle_count(e: DataFrame, n_nodes: int) -> int:
+def _dense_triangle_count(pdf) -> int:
     """Exact triangle count of a SMALL graph as trace(A³)/6 over a
     dense float64 adjacency matrix — BLAS does in one matmul what the
     oriented join does in Σ d⁺² hash probes. float64 keeps every
     intermediate exact: A² entries ≤ n, the trace ≤ n·wedges < 2⁵³
-    at the dispatch bounds. Caller guarantees the collect is bounded
-    (n_nodes/n_edges checked against the dense dispatch caps).
+    at the dispatch bounds. ``pdf`` is the collected (u, v) edge list;
+    the caller collects it only after checking n_nodes/n_edges against
+    the dense dispatch caps.
 
     Driver memory honesty: the edge COLLECT is ≤ 64 MB at the caps,
     but the kernel's true peak is the two dense n×n float64 matrices
@@ -504,9 +506,6 @@ def _dense_triangle_count(e: DataFrame, n_nodes: int) -> int:
     collect; past it the distributed tier never builds a matrix."""
     import numpy as np
 
-    if n_nodes == 0:
-        return 0
-    pdf = e.toPandas()
     nodes = np.unique(np.concatenate([pdf["u"].values, pdf["v"].values]))
     ui = np.searchsorted(nodes, pdf["u"].values)
     vi = np.searchsorted(nodes, pdf["v"].values)
@@ -523,8 +522,6 @@ def min_label_components(
     nodes: DataFrame,
     edges: DataFrame,
     rounds: int = 8,
-    dense_max_nodes: int = DENSE_CC_MAX_NODES,
-    dense_max_edges: int = DENSE_PR_MAX_EDGES,
 ) -> DataFrame:
     """Connected components by FIXED-ROUND min-label propagation —
     the entity-resolution / graph-partitioning primitive, expressed
@@ -551,22 +548,9 @@ def min_label_components(
     node-table-sized label state is eagerly checkpointed per round
     (no lineage replay across rounds). Output: (node, component).
 
-    Density dispatch (r11, fifth instance — the last iterative kernel
-    without one): at ≤``dense_max_edges`` edge rows AND
-    ≤``dense_max_nodes`` node rows (both counted first against the
-    eager checkpoints below — two cheap jobs vs rounds·2 saved), the
-    propagation runs driver-side over one bounded collect. NOT
-    union-find: a converged-components kernel would diverge from the
-    fixed-round contract whenever rounds < diameter, so the dense
-    tier replays the SAME supersteps in numpy int64 (int64-max
-    sentinel = "no label yet", per-dst min via one sort +
-    minimum.reduceat) — exact integer min logic, tier-equal by
-    construction including unconverged intermediates
-    (property-tested). Byte budget: node collect ≤ 4M·8 B = 32 MB,
-    edge collect ≤ 2M·16 B = 32 MB, working arrays (N + 2E)·8 B ≈
-    64 MB; per-round work is O(E) vectorized. Node ids must be
-    non-null BIGINTs (the kernel contract shared by every dense
-    tier). Past either bound the distributed loop runs unchanged.
+    Dense dispatch: ≤ ``DENSE_PR_MAX_EDGES`` edges and ≤
+    ``DENSE_CC_MAX_NODES`` nodes run the same rounds in numpy
+    (:func:`sparkobs.io.collect_at_most`, edges first).
     """
     # distinct(): duplicate node rows are contract-violating but must
     # not make the tiers diverge — the dense tier dedupes via
@@ -576,12 +560,10 @@ def min_label_components(
     # duplicate seeds (r10); property-tested with duplicated node rows.
     nd = nodes.select("node").distinct().localCheckpoint()
     ed = edges.select("src", "dst").localCheckpoint()
-    if (
-        dense_max_edges
-        and ed.count() <= dense_max_edges
-        and nd.count() <= dense_max_nodes
-    ):
-        return _dense_min_label_components(nd, ed, rounds)
+    epdf = collect_at_most(ed, DENSE_PR_MAX_EDGES)
+    npdf = collect_at_most(nd, DENSE_CC_MAX_NODES) if epdf is not None else None
+    if npdf is not None:
+        return _dense_min_label_components(npdf, epdf, nd.sparkSession, rounds)
     lbl = nd.select(F.col("node"), F.col("node").alias("lbl"))
     e = (
         ed.unionAll(
@@ -603,28 +585,35 @@ def min_label_components(
 
 
 def _dense_min_label_components(
-    nodes: DataFrame, edges: DataFrame, rounds: int
+    npdf, epdf, spark, rounds: int
 ) -> DataFrame:
     """The dense tier of :func:`min_label_components`: identical
-    fixed-round min-label supersteps in numpy int64 over one bounded
-    collect. Mirrors the distributed plan exactly — the edge list is
-    edges ∪ node self-loops; the round-t label table holds ONLY dsts
-    with ≥1 labeled in-edge; a src outside the node table joins
-    nothing until it first appears as a dst (gains a label), then its
-    out-edges participate. All of that falls out of one sentinel:
+    fixed-round min-label supersteps in numpy int64 over the collected
+    node (``npdf``) and edge (``epdf``) tables. NOT union-find: a
+    converged-components kernel would diverge from the fixed-round
+    contract whenever rounds < diameter, so this replays the SAME
+    supersteps, tier-equal including unconverged intermediates
+    (property-tested). Mirrors the distributed plan exactly — the edge
+    list is edges ∪ node self-loops; the round-t label table holds
+    ONLY dsts with ≥1 labeled in-edge; a src outside the node table
+    joins nothing until it first appears as a dst (gains a label),
+    then its out-edges participate. All of that falls out of one sentinel:
     "no label" = int64 max, per-dst new label = min over in-edges of
     the src's current label (sentinel loses every min against a real
     label, a dst with only unlabeled in-srcs stays sentinel = no
     row). Per round: one gather + np.minimum.reduceat over the
     dst-sorted edge order (computed once — the order never changes,
-    only the labels). Caller proves both bounds before the collects.
+    only the labels).
+
+    Byte budget at the caps: node collect ≤ 4M·8 B = 32 MB, edge
+    collect ≤ 2M·16 B = 32 MB, working arrays (N + 2E)·8 B ≈ 64 MB;
+    per-round work is O(E) vectorized. Node ids must be non-null
+    BIGINTs (the kernel contract shared by every dense tier).
     """
     import numpy as np
     import pandas as pd
 
-    spark = nodes.sparkSession
-    nd = nodes.toPandas()["node"].to_numpy(np.int64)
-    epdf = edges.toPandas()
+    nd = npdf["node"].to_numpy(np.int64)
     s = np.concatenate([epdf["src"].to_numpy(np.int64), nd])
     d = np.concatenate([epdf["dst"].to_numpy(np.int64), nd])
     uni = np.unique(np.concatenate([nd, s, d]))
@@ -693,7 +682,6 @@ def reachable_set(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    dense_max_edges: int = DENSE_PR_MAX_EDGES,
 ) -> DataFrame:
     """Hop-labeled BFS reachability — the lineage / impact-analysis
     primitive the reference's monitor graph implies (which downstream
@@ -726,14 +714,12 @@ def reachable_set(
     contract-violating duplicate-seed input). Output: (node, hop)
     with hop 0 = the seeds themselves.
 
-    Density dispatch (r10, fourth instance): at ≤``dense_max_edges``
-    edge rows (counted first — one cheap job against max_hops·2 jobs
-    saved) the BFS runs driver-side over one bounded collect. Pure
-    integer set logic — first-visit hop is set-deterministic — so the
-    tiers are exactly equal by construction (property-tested anyway).
+    Dense dispatch: ≤ ``DENSE_PR_MAX_EDGES`` edges run the BFS in
+    Python sets (:func:`sparkobs.io.collect_at_most`).
     """
-    if dense_max_edges and edges.count() <= dense_max_edges:
-        return _dense_reachable_set(edges, seeds, max_hops)
+    pdf = collect_at_most(edges.select("src", "dst"), DENSE_PR_MAX_EDGES)
+    if pdf is not None:
+        return _dense_reachable_set(pdf, seeds, max_hops)
     seed0 = (
         seeds.select("node")
         .distinct()
@@ -765,17 +751,15 @@ def reachable_set(
 
 
 def _dense_reachable_set(
-    edges: DataFrame, seeds: DataFrame, max_hops: int
+    pdf, seeds: DataFrame, max_hops: int
 ) -> DataFrame:
-    """The dense tier of :func:`reachable_set`: hop-labeled BFS over a
-    bounded edge collect, in plain Python sets — integer set logic is
-    tier-equal by construction (first-visit hop = shortest hop).
-    Caller proves the bound before the collect; the seed frame is
-    node-bounded by its nature."""
+    """The dense tier of :func:`reachable_set`: hop-labeled BFS over
+    the collected (src, dst) edges ``pdf``, in plain Python sets —
+    integer set logic is tier-equal by construction (first-visit hop =
+    shortest hop). The seed frame is node-bounded by its nature."""
     import pandas as pd
 
-    spark = edges.sparkSession
-    pdf = edges.select("src", "dst").toPandas()
+    spark = seeds.sparkSession
     adj: dict = {}
     for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         adj.setdefault(s, []).append(d)

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from sparkobs.io import collect_at_most
+
 
 def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     v = F.col(vec_col).cast("array<double>")
@@ -43,15 +45,14 @@ def embedding_norms(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embed
 DEFAULT_MAX_CORPUS_ROWS = 2_000_000
 
 
-def _guard_corpus(df: DataFrame, max_rows: int, caller: str) -> int:
-    """Row-count guard for tiers that materialize the corpus on the
-    driver. Raises past ``max_rows`` with a pointer to the distributed
-    tiers (cosine_topk_lsh / cosine_topk_ivf) instead of OOM-ing the
-    driver mid-collect. The probe is bounded (``limit(max_rows+1)``):
-    rejecting a mis-called 100 TB input costs one partial scan, not a
-    full count. Returns the probed count (capped at max_rows + 1)."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
+def _collect_corpus(df: DataFrame, max_rows: int, caller: str):
+    """The whole corpus as a pandas frame for the tiers that broadcast
+    it from the driver (:func:`sparkobs.io.collect_at_most`). Raises
+    past ``max_rows`` with a pointer to the distributed tiers
+    (cosine_topk_lsh / cosine_topk_ivf) instead of OOM-ing the driver;
+    rejecting a mis-called 100 TB input costs one partial scan."""
+    corpus = collect_at_most(df, max_rows)
+    if corpus is None:
         raise ValueError(
             f"{caller}: corpus has > max_corpus_rows={max_rows} rows; "
             "this tier broadcasts the full corpus matrix and is only valid "
@@ -59,7 +60,7 @@ def _guard_corpus(df: DataFrame, max_rows: int, caller: str) -> int:
             "(fully distributed) for larger corpora, or raise max_corpus_rows "
             "explicitly if you know the matrix fits."
         )
-    return n
+    return corpus
 
 
 def cosine_topk_bruteforce(
@@ -82,14 +83,15 @@ def cosine_topk_bruteforce(
     import numpy as np
 
     sc = df.sparkSession.sparkContext
-    _guard_corpus(df, max_corpus_rows, "cosine_topk_bruteforce")
     # Arrow-batched mapInPandas with a broadcast corpus matrix: each
     # partition scores its query batch against the whole corpus with one
     # BLAS matmul — the vectorized Pandas-UDF "slow path", ~100× an
     # interpreted per-pair fold. Valid while the corpus fits executor
     # memory (the definition of this tier); beyond that use
     # cosine_topk_lsh (bucketed candidates, no full matrix).
-    corpus = df.select(id_col, vec_col).toPandas()
+    corpus = _collect_corpus(
+        df.select(id_col, vec_col), max_corpus_rows, "cosine_topk_bruteforce"
+    )
     c_ids_l = corpus[id_col].to_numpy()
     c_mat_l = np.array(corpus[vec_col].tolist(), dtype=np.float64)
     c_norms_l = np.sqrt((c_mat_l * c_mat_l).sum(axis=1))
@@ -677,8 +679,9 @@ def embedding_near_dup_pairs(
     import numpy as np
 
     sc = df.sparkSession.sparkContext
-    _guard_corpus(df, max_corpus_rows, "embedding_near_dup_pairs")
-    corpus = df.select(id_col, vec_col).toPandas()
+    corpus = _collect_corpus(
+        df.select(id_col, vec_col), max_corpus_rows, "embedding_near_dup_pairs"
+    )
     ids_l = corpus[id_col].to_numpy()
     mat_l = np.array(corpus[vec_col].tolist(), dtype=np.float64)
     mat_l = mat_l / np.sqrt((mat_l * mat_l).sum(axis=1, keepdims=True))

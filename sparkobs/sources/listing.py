@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkobs.io import collect_at_most
 from sparkobs.session import jvm_class
 
 LISTING_SCHEMA = T.StructType(
@@ -269,7 +270,6 @@ DENSE_ASSIGN_MAX_FILES = 65536
 def compaction_assign(
     listing: DataFrame,
     target_bytes: int,
-    dense_max_files: int = DENSE_ASSIGN_MAX_FILES,
 ) -> DataFrame:
     """Per-file group assignment behind :func:`compaction_plan`:
     (path, length, group_id) via an exclusive prefix sum in path
@@ -277,26 +277,17 @@ def compaction_assign(
     into which output), where the plan itself only reports per-group
     summaries.
 
-    Density dispatch (r11, sixth instance): a compaction listing is
-    METADATA — file-count sized, not data sized — so at
-    ≤``dense_max_files`` rows (counted first; ≤64k × ~150 B ≈ 10 MB
-    collect) the prefix sum runs driver-side in numpy: sort by path
-    (UTF-8 byte order ≡ code-point order, so Python/pandas string
-    sort equals Spark's binary string asc), int64 cumsum, and the
-    SAME floor-of-double-division group formula as the distributed
-    expression (``F.floor`` divides as DOUBLE — an integer ``//``
-    tier would diverge past 2^53 cumulative bytes). Saves the
-    range-exchange + offsets-join + window jobs of
-    ``global_running_sum`` (~1-2 s per call at any listing size);
-    past the cap — the million-file lake path — the distributed
-    prefix sum runs unchanged."""
+    Dense dispatch: ≤ ``DENSE_ASSIGN_MAX_FILES`` files run the prefix
+    sum in numpy (:func:`sparkobs.io.collect_at_most`)."""
     pruned = listing.select("path", "length")
-    if dense_max_files and pruned.count() <= dense_max_files:
+    pdf = collect_at_most(pruned, DENSE_ASSIGN_MAX_FILES)
+    if pdf is not None:
         import numpy as np
 
-        pdf = pruned.toPandas().sort_values(
-            "path", kind="mergesort", ignore_index=True
-        )
+        # UTF-8 byte order ≡ code-point order, so the pandas sort equals
+        # Spark's binary string asc; the group formula divides as DOUBLE
+        # like F.floor (an integer // would diverge past 2^53 bytes)
+        pdf = pdf.sort_values("path", kind="mergesort", ignore_index=True)
         lens = pdf["length"].to_numpy(np.int64)
         cum_excl = np.cumsum(lens) - lens
         pdf["group_id"] = np.floor(

@@ -2,10 +2,12 @@
 deterministic fingerprints, planted near-duplicates."""
 
 import os
+from unittest.mock import patch
 
 import pytest
 from pyspark.sql import functions as F
 
+from sparkobs.operators import dedup
 from sparkobs.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -328,10 +330,11 @@ def test_connected_components_chain_and_cliques(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
     # the adaptive fast path (driver union-find) and the distributed
     # min-label loop must agree exactly
-    dist = {
-        r.node: r.component
-        for r in connected_components(edges, max_local_edges=0).collect()
-    }
+    with patch.object(dedup, "UNION_FIND_MAX_EDGES", 0):
+        dist = {
+            r.node: r.component
+            for r in connected_components(edges).collect()
+        }
     assert dist == got
 
 
@@ -345,12 +348,11 @@ def test_connected_components_long_path(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(31)], "id_a bigint, id_b bigint"
     )
-    got = {
-        r.node: r.component
-        for r in connected_components(
-            edges, max_iterations=64, max_local_edges=0
-        ).collect()
-    }
+    with patch.object(dedup, "UNION_FIND_MAX_EDGES", 0):
+        got = {
+            r.node: r.component
+            for r in connected_components(edges, max_iterations=64).collect()
+        }
     assert got == {i: 0 for i in range(32)}
 
 
@@ -381,8 +383,10 @@ def test_connected_components_divergence_guard(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "id_a bigint, id_b bigint"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=2, max_local_edges=0)
+    with patch.object(dedup, "UNION_FIND_MAX_EDGES", 0), pytest.raises(
+        RuntimeError, match="did not converge"
+    ):
+        connected_components(edges, max_iterations=2)
 
 
 def test_near_dup_groups_match_pairs(spark):
@@ -631,14 +635,162 @@ LSH_GROUPS_JOB_BUDGET = 9
 def test_near_dup_groups_lsh_job_budget(spark, sf_dir):
     from sparkobs.operators.dedup import near_dup_groups
 
-    def jobs() -> int:
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    before = jobs()
-    near_dup_groups(d, 3, 0.2, tier="lsh", hash_fn="md5").collect()
-    n = jobs() - before
+    n = _jobs_in(
+        spark, lambda: near_dup_groups(d, 3, 0.2, tier="lsh", hash_fn="md5").collect()
+    )
     assert n <= LSH_GROUPS_JOB_BUDGET, (
         f"near_dup_groups(tier='lsh') launched {n} Spark jobs, budget "
         f"{LSH_GROUPS_JOB_BUDGET}"
     )
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from call to return: the status
+    store's jobsList, filtered to a job group set for the call, so the
+    store's trimming of old jobs can never skew the count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _dense_dispatch_calls(spark) -> dict:
+    """One call per dense-tier dispatch on a small in-memory input that
+    takes the dense tier; each returns without running the result."""
+    from sparkobs.operators import bpe, cluster, graph, similarity
+    from sparkobs.sources import listing
+
+    pairs = [(1, 2), (2, 3), (3, 1), (1, 4)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(n,) for n in range(1, 6)], "node long")
+    seeds = spark.createDataFrame([(1,)], "node long")
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i // 3)]) for i in range(12)],
+        "vec_id bigint, embedding array<double>",
+    )
+    docs = spark.createDataFrame(
+        [(0, "low lower lowest"), (1, "new newer newest wider")],
+        "doc_id bigint, text string",
+    )
+    files = spark.createDataFrame(
+        [("/a/x", 10), ("/a/y", 7), ("/a/z", 25)], "path string, length long"
+    )
+    return {
+        "pagerank": lambda: graph.pagerank_fixed(edges, iters=3),
+        "min_label": lambda: graph.min_label_components(nodes, edges, rounds=3),
+        "reachability": lambda: graph.reachable_set(edges, seeds, 2),
+        "kmeans": lambda: cluster.kmeans_fit(vecs, k=2, iters=2),
+        "bpe": lambda: bpe.bpe_train(docs, n_merges=4),
+        "compaction": lambda: listing.compaction_assign(files, 16),
+        "cosine_bruteforce": lambda: similarity.cosine_topk_bruteforce(vecs, k=2),
+    }
+
+
+#: Spark jobs per dense-tier dispatch, call to return, on the inputs of
+#: ``_dense_dispatch_calls`` (measured at 4 and 8 cores, repeating
+#: exactly). Each dispatch decides and fetches with one bounded collect
+#: (``io.collect_at_most``); reachability's other two jobs collect its
+#: seed set. The count()-probe-then-collect dispatches this replaced
+#: measured pagerank 5, min_label 9, reachability 5, kmeans 4, bpe 5,
+#: compaction 3, cosine_bruteforce 3; each count() probe was two jobs
+#: (an aggregate stage plus its result).
+DENSE_DISPATCH_JOB_BUDGETS = {
+    "pagerank": 3,
+    "min_label": 5,
+    "reachability": 3,
+    "kmeans": 2,
+    "bpe": 3,
+    "compaction": 1,
+    "cosine_bruteforce": 1,
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(DENSE_DISPATCH_JOB_BUDGETS))
+def test_dense_dispatch_job_budget(spark, kernel):
+    call = _dense_dispatch_calls(spark)[kernel]
+    n = _jobs_in(spark, call)
+    budget = DENSE_DISPATCH_JOB_BUDGETS[kernel]
+    assert n <= budget, f"{kernel} launched {n} Spark jobs, budget {budget}"
+
+
+def test_dense_tiers_decide_with_one_bounded_collect():
+    """Spark-free source check: every dense driver tier decides and
+    fetches through ``io.collect_at_most``. No kernel takes a cap
+    parameter, no size dispatch compares a ``count()``, a bounded
+    ``limit(n + 1)`` appears only in the helper (and in the exact-tier
+    corpus guard, which counts and never fetches), and no ``_dense_*``
+    tier collects its own main input."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sparkobs"
+    cap_params, count_dispatch, bounded_limits, self_collects = [], [], [], []
+
+    def attr_call(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+        )
+
+    def root_name(node):
+        while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return node.id if isinstance(node, ast.Name) else None
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = fn.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg.startswith("dense_max_") or arg.arg == "max_local_edges":
+                    cap_params.append(f"{rel}:{fn.name}({arg.arg})")
+            # a tier's main input is its first argument after the session
+            main = [x for x in a.posonlyargs + a.args if x.arg != "spark"][:1]
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Compare):
+                    operands = [node.left, *node.comparators]
+                    ordered = any(
+                        isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE))
+                        for op in node.ops
+                    )
+                    if ordered and any(
+                        attr_call(o, "count") and not o.args for o in operands
+                    ):
+                        count_dispatch.append(f"{rel}:{fn.name}")
+                if (
+                    attr_call(node, "limit")
+                    and node.args
+                    and isinstance(node.args[0], ast.BinOp)
+                    and isinstance(node.args[0].op, ast.Add)
+                    and isinstance(node.args[0].right, ast.Constant)
+                    and node.args[0].right.value == 1
+                ):
+                    bounded_limits.append(f"{rel}:{fn.name}")
+                if (
+                    fn.name.startswith("_dense_")
+                    and main
+                    and (attr_call(node, "toPandas") or attr_call(node, "collect"))
+                    and root_name(node.func.value) == main[0].arg
+                ):
+                    self_collects.append(f"{rel}:{fn.name}")
+    assert cap_params == []
+    assert count_dispatch == []
+    assert sorted(set(bounded_limits)) == [
+        "io.py:collect_at_most",
+        "operators/dedup.py:_guard_exact_tier",
+    ]
+    assert self_collects == []

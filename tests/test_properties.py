@@ -6,6 +6,7 @@ capped low; the point is shrinkable counterexamples on edge-shaped data
 """
 
 import math
+from unittest.mock import patch
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -136,18 +137,19 @@ def test_chunking_reconstructs_tokens(spark, texts, chunk, overlap):
 )
 @settings(**SETTINGS)
 def test_connected_components_match_union_find(spark, edges):
-    from sparkobs.operators.dedup import connected_components
+    from sparkobs.operators import dedup
 
     df = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "id_a bigint, id_b bigint"
     )
-    # max_local_edges=0 forces the distributed loop — the union-find
-    # below IS the fast path's algorithm, so only the loop needs the
-    # property check
-    got = {
-        r.node: r.component
-        for r in connected_components(df, max_local_edges=0).collect()
-    }
+    # a cap of 0 forces the distributed loop — the union-find below IS
+    # the fast path's algorithm, so only the loop needs the property
+    # check
+    with patch.object(dedup, "UNION_FIND_MAX_EDGES", 0):
+        got = {
+            r.node: r.component
+            for r in dedup.connected_components(df).collect()
+        }
 
     # reference union-find
     parent = {}
@@ -727,15 +729,16 @@ def test_km_duration_grid_equals_upstream_prequantization(spark, durs, grid):
 def test_triangle_census_matches_brute_force(spark, edges):
     from itertools import combinations
 
-    from sparkobs.operators.graph import triangle_stats
+    from sparkobs.operators import graph
 
     und = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
     if not und:
         return
     df = spark.createDataFrame(und, "u bigint, v bigint")
-    row = triangle_stats(df).collect()[0]
+    row = graph.triangle_stats(df).collect()[0]
     # the distributed tier must agree with the dense tier exactly
-    dist = triangle_stats(df, dense_max_nodes=0).collect()[0]
+    with patch.object(graph, "DENSE_TRI_MAX_NODES", 0):
+        dist = graph.triangle_stats(df).collect()[0]
     assert tuple(dist) == tuple(row)
     eset = set(und)
     nodes = sorted({n for e in und for n in e})
@@ -1001,7 +1004,7 @@ def test_pagerank_dense_and_distributed_tiers_agree(spark, edges, weighted, tele
     collect) must reproduce the distributed fixed-point loop BIT FOR
     BIT — same UNIT div nn init, (r·w) div od shares, 85/100 damping —
     across unweighted/weighted and global/personalized variants."""
-    from sparkobs.operators.graph import pagerank_fixed
+    from sparkobs.operators import graph
 
     sym = {}
     for a, b, w in edges:
@@ -1015,8 +1018,9 @@ def test_pagerank_dense_and_distributed_tiers_agree(spark, edges, weighted, tele
         else None
     )
     kw = dict(weight_col="w" if weighted else None, teleport=tele, iters=3)
-    dense = pagerank_fixed(df, **kw).collect()
-    dist = pagerank_fixed(df, dense_max_edges=0, **kw).collect()
+    dense = graph.pagerank_fixed(df, **kw).collect()
+    with patch.object(graph, "DENSE_PR_MAX_EDGES", 0):
+        dist = graph.pagerank_fixed(df, **kw).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
 
 
@@ -1038,16 +1042,15 @@ def test_min_label_components_tiers_agree(spark, edges, node_ids, rounds):
     DUPLICATED node rows (node_ids is a list, not a set — the r11
     review found the rounds=0 distributed path returned duplicates
     verbatim while the dense tier deduped via np.unique)."""
-    from sparkobs.operators.graph import min_label_components
+    from sparkobs.operators import graph
 
     nodes = spark.createDataFrame(
         [(n,) for n in node_ids], "node long"
     )
     e = spark.createDataFrame(edges, "src long, dst long")
-    dense = min_label_components(nodes, e, rounds=rounds).collect()
-    dist = min_label_components(
-        nodes, e, rounds=rounds, dense_max_edges=0
-    ).collect()
+    dense = graph.min_label_components(nodes, e, rounds=rounds).collect()
+    with patch.object(graph, "DENSE_PR_MAX_EDGES", 0):
+        dist = graph.min_label_components(nodes, e, rounds=rounds).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
 
 
@@ -1117,15 +1120,16 @@ def test_kmeans_dense_and_distributed_tiers_agree(spark, vecs, k, iters):
     BIT — same seeds, integer distances, lowest-id tie-break,
     floor(s·100.0/n) updates, empty-cluster drops — across the full
     kmeans_fit report AND the per-row assignment."""
-    from sparkobs.operators.cluster import kmeans_assign, kmeans_fit
+    from sparkobs.operators import cluster
 
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id bigint, embedding array<double>",
     )
-    for fn in (kmeans_fit, kmeans_assign):
+    for fn in (cluster.kmeans_fit, cluster.kmeans_assign):
         dense = fn(df, k=k, iters=iters).collect()
-        dist = fn(df, k=k, iters=iters, dense_max_cells=0).collect()
+        with patch.object(cluster, "DENSE_KM_MAX_CELLS", 0):
+            dist = fn(df, k=k, iters=iters).collect()
         assert sorted(map(tuple, dense)) == sorted(map(tuple, dist)), fn.__name__
 
 
@@ -1143,12 +1147,13 @@ def test_reachable_set_tiers_agree(spark, edges, seed_nodes, hops):
     """The r10 dense BFS tier must reproduce the distributed loop
     exactly: same first-visit hops, seeds-not-in-graph kept at hop 0,
     self-loops and cycles handled identically."""
-    from sparkobs.operators.graph import reachable_set
+    from sparkobs.operators import graph
 
     e = spark.createDataFrame(sorted(set(edges)), "src long, dst long")
     s = spark.createDataFrame([(n,) for n in sorted(seed_nodes)], "node long")
-    dense = reachable_set(e, s, max_hops=hops).collect()
-    dist = reachable_set(e, s, max_hops=hops, dense_max_edges=0).collect()
+    dense = graph.reachable_set(e, s, max_hops=hops).collect()
+    with patch.object(graph, "DENSE_PR_MAX_EDGES", 0):
+        dist = graph.reachable_set(e, s, max_hops=hops).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
 
 
@@ -1279,9 +1284,10 @@ def test_bpe_train_tiers_agree(spark, docs, n_merges, batch_size):
         df, n_merges=n_merges, batch_size=batch_size
     ).collect()
     dense_rounds = bpe.LAST_TRAIN_ROUNDS
-    dist = bpe.bpe_train(
-        df, n_merges=n_merges, batch_size=batch_size, dense_max_words=0
-    ).collect()
+    with patch.object(bpe, "DENSE_BPE_MAX_WORDS", 0):
+        dist = bpe.bpe_train(
+            df, n_merges=n_merges, batch_size=batch_size
+        ).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
     assert dense_rounds == bpe.LAST_TRAIN_ROUNDS
 
@@ -1375,13 +1381,14 @@ def test_compaction_assign_tiers_agree_property(spark, files, target):
     assignment on RANDOM listings — arbitrary unicode path segments
     (UTF-8 byte order vs code-point order), zero lengths, any target
     size, and the empty listing."""
-    from sparkobs.sources.listing import compaction_assign
+    from sparkobs.sources import listing as lst
 
     listing = spark.createDataFrame(
         [("/" + p, n) for p, n in files], "path string, length long"
     )
-    dense = compaction_assign(listing, target).collect()
-    dist = compaction_assign(listing, target, dense_max_files=0).collect()
+    dense = lst.compaction_assign(listing, target).collect()
+    with patch.object(lst, "DENSE_ASSIGN_MAX_FILES", 0):
+        dist = lst.compaction_assign(listing, target).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
 
 

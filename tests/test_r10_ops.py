@@ -397,6 +397,9 @@ def test_pagerank_tiers_agree_on_null_weight_and_null_teleport(spark):
     plan's SQL NULL propagation (no share, no out-weight, src still a
     node; NULL teleport counts toward nn but matches nothing) is
     mirrored, not crashed on, by the dense tier."""
+    from unittest.mock import patch
+
+    from sparkobs.operators import graph
     from sparkobs.operators.graph import pagerank_fixed
 
     edges = spark.createDataFrame(
@@ -410,7 +413,8 @@ def test_pagerank_tiers_agree_on_null_weight_and_null_teleport(spark):
         {"teleport": tele},
     ):
         dense = pagerank_fixed(edges, iters=3, **kw).collect()
-        dist = pagerank_fixed(edges, iters=3, dense_max_edges=0, **kw).collect()
+        with patch.object(graph, "DENSE_PR_MAX_EDGES", 0):
+            dist = pagerank_fixed(edges, iters=3, **kw).collect()
         assert sorted(map(tuple, dense)) == sorted(map(tuple, dist)), kw
         # node 4 (only a null-weight out-edge) is still a ranked node
         assert {r["node"] for r in dense} == {1, 2, 3, 4}

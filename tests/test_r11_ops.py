@@ -7,6 +7,8 @@ and the round's new operator work.
 
 from __future__ import annotations
 
+from unittest.mock import patch
+
 import pytest
 
 
@@ -19,14 +21,16 @@ def test_pagerank_negative_weight_fails_loudly(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    from sparkobs.operators.graph import pagerank_fixed
+    from sparkobs.operators import graph
 
     edges = spark.createDataFrame(
         [(1, 2, 3), (2, 1, -1), (2, 3, 2)], "src long, dst long, w long"
     )
-    for kw in ({}, {"dense_max_edges": 0}):
-        with pytest.raises((PySparkException, Py4JJavaError)) as exc:
-            pagerank_fixed(edges, iters=2, weight_col="w", **kw).collect()
+    for cap in (graph.DENSE_PR_MAX_EDGES, 0):
+        with patch.object(graph, "DENSE_PR_MAX_EDGES", cap), pytest.raises(
+            (PySparkException, Py4JJavaError)
+        ) as exc:
+            graph.pagerank_fixed(edges, iters=2, weight_col="w").collect()
         assert "negative weight" in str(exc.value)
 
 
@@ -48,14 +52,15 @@ def test_reachable_set_tiers_agree_on_duplicate_seeds(spark):
     distributed tier emitted duplicate hop-0 rows, so contract-
     violating duplicate-seed input silently changed output across the
     dispatch boundary. Both tiers now dedupe."""
-    from sparkobs.operators.graph import reachable_set
+    from sparkobs.operators import graph
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,), (1,), (2,)], "node long")
-    dense = reachable_set(edges, seeds, max_hops=2).collect()
-    dist = reachable_set(edges, seeds, max_hops=2, dense_max_edges=0).collect()
+    dense = graph.reachable_set(edges, seeds, max_hops=2).collect()
+    with patch.object(graph, "DENSE_PR_MAX_EDGES", 0):
+        dist = graph.reachable_set(edges, seeds, max_hops=2).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
     # hop-0 rows are exactly the DISTINCT seeds
     assert sorted(r["node"] for r in dense if r["hop"] == 0) == [1, 2]
@@ -340,6 +345,7 @@ def test_compaction_assign_tiers_agree(spark):
     exactly — same path ordering (UTF-8 byte order), same
     floor-of-double group formula — including multi-byte paths,
     zero-length files, and an empty listing."""
+    from sparkobs.sources import listing as lst
     from sparkobs.sources.listing import compaction_assign
 
     rows = [
@@ -348,7 +354,8 @@ def test_compaction_assign_tiers_agree(spark):
     ]
     listing = spark.createDataFrame(rows, "path string, length long")
     dense = compaction_assign(listing, 16).collect()
-    dist = compaction_assign(listing, 16, dense_max_files=0).collect()
+    with patch.object(lst, "DENSE_ASSIGN_MAX_FILES", 0):
+        dist = compaction_assign(listing, 16).collect()
     assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
     empty = spark.createDataFrame([], "path string, length long")
     assert compaction_assign(empty, 16).count() == 0

@@ -631,15 +631,18 @@ def test_triangle_stats_hand_graph(spark):
     # K4 on {1,2,3,4} (4 triangles, 6 edges, 12 wedges, clustering 1)
     # plus a pendant node 5 attached to 1 (adds 1 edge, 3 wedges at
     # node 1's new degree 4: C(4,2)-C(3,2)=3, no new triangle).
-    from sparkobs.operators.graph import triangle_stats
+    from unittest.mock import patch
+
+    from sparkobs.operators import graph
 
     k4 = [(u, v) for u in range(1, 5) for v in range(u + 1, 5)]
     edges = spark.createDataFrame(k4 + [(1, 5)], "u bigint, v bigint")
     # both dispatch tiers must produce the identical row: the dense
     # trace(A³)/6 path (default at this size) and the distributed
     # oriented-adjacency-intersection path (forced via a zero cap)
-    for kw in ({}, {"dense_max_nodes": 0}):
-        row = triangle_stats(edges, **kw).collect()[0]
+    for cap in (graph.DENSE_TRI_MAX_NODES, 0):
+        with patch.object(graph, "DENSE_TRI_MAX_NODES", cap):
+            row = graph.triangle_stats(edges).collect()[0]
         assert row["n_nodes"] == 5
         assert row["n_edges"] == 7
         assert row["n_triangles"] == 4
