@@ -50,11 +50,14 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
+    "minhash_lsh_pairs",
+    "near_dup_groups_lsh",
+    "minhash_lsh_pairs_xx64",
+    "pagerank_personalized_copurchase",
+    "impact_reach_supply_chain",
     "pagerank_copurchase",
     "pagerank_weighted_copurchase",
-    "pagerank_personalized_copurchase",
     "components_supplier_mutual_knn",
-    "impact_reach_supply_chain",
     "kmeans_embeddings",
     "kmeans_ari_embeddings",
     "streaming_kmeans_assign_embeddings",

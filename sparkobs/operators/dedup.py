@@ -16,11 +16,17 @@ Four tiers, trading exactness for scale:
 4. **SimHash** — 64-bit bit-vote fingerprint + band join on 16-bit
    sub-keys for near-dup at hamming distance ≤ 3ish.
 
-All pure Catalyst expressions (explode/groupBy/join) — no UDFs, no
-driver-side loops; every stage is a shuffle-parallel DataFrame op.
+Catalyst expressions (explode/groupBy/join), no UDFs. Two kernels
+also have a driver-side tier below a size cap, decided by one bounded
+collect (:func:`sparkobs.io.collect_at_most`): the union-find of
+:func:`connected_components` and the portable (md5) MinHash-LSH of
+:func:`minhash_lsh_pairs`. Past the caps every stage is a
+shuffle-parallel DataFrame op.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -313,6 +319,12 @@ def ngram_jaccard_pairs_prefix(
     )
 
 
+#: both 15-hex-char halves of an md5 digest are reduced below 1e17,
+#: so a + j·b (the md5 MinHash slots and Bloom positions) stays far
+#: under 2^63 for any practical j: no overflow in any engine
+_MD5_HALF_MOD = 10**17
+
+
 def _signature_frame(
     df: DataFrame,
     n: int,
@@ -349,7 +361,7 @@ def _signature_frame(
             f"min(xxhash64(sh, {seed}))" for seed in range(num_hashes)
         ) + ")"
     elif hash_fn == "md5":
-        mod = 10**17
+        mod = _MD5_HALF_MOD
         # one digest; Catalyst subexpression elimination computes
         # md5(sh) once for both halves
         sh = sh.selectExpr(
@@ -502,11 +514,42 @@ def minhash_lsh_pairs(
     above the aggregate) and measured slower in both modes.
 
     ``id_col`` must be unique: one signature (and one hash set) per
-    id. ``hash_fn`` picks the signature hash (see
-    :func:`minhash_signatures`); the verify sets always use xxhash64
-    shingle keys — they only test shingle equality within Spark, so
-    portability doesn't apply there.
+    id; rows with a NULL id never pair. ``hash_fn`` picks the signature
+    hash (see :func:`minhash_signatures`); the verify sets always use
+    xxhash64 shingle keys — they only test shingle equality within
+    Spark, so portability doesn't apply there.
+
+    Two tiers in md5 mode. A corpus of at most ``DENSE_LSH_MAX_DOCS``
+    documents is fetched by one bounded collect
+    (:func:`sparkobs.io.collect_at_most`) and paired driver-side by
+    :func:`_dense_lsh_pairs`, which returns the same ``(id_a, id_b,
+    jaccard)`` rows as the Spark plan: the portable hash is
+    reproducible by any engine with md5 and 64-bit integers, and
+    ``hashlib`` with numpy int64 is one. The only difference is the
+    verify set: exact shingle strings instead of xxhash64 keys, which
+    can change a Jaccard value only on a 64-bit hash collision. One job
+    instead of six. The dense tier is single-threaded, so the cap sits
+    below the measured wall-time crossover (4 vCPUs, wall p50: 0.95 →
+    0.41 s at 5 k documents, 1.6 → 1.2 s at 15 k, 1.3–1.5 → 1.6 s at
+    20 k; SCALE.md); its CPU time is lower at every size. xx64 mode
+    always runs the Spark plan: seeded ``xxhash64`` has no
+    standard-library twin.
     """
+    if hash_fn == "md5":
+        pdf = collect_at_most(
+            df.select(id_col, text_col).where(F.col(id_col).isNotNull()),
+            DENSE_LSH_MAX_DOCS,
+        )
+        if pdf is not None:
+            return _dense_lsh_pairs(
+                pdf,
+                df.sparkSession,
+                df.schema[id_col].dataType,
+                n,
+                num_hashes,
+                bands,
+                threshold,
+            )
     sig = _signature_frame(
         df, n, num_hashes, id_col, text_col, hash_fn, fan_out=True
     )
@@ -536,6 +579,122 @@ def minhash_lsh_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
+
+
+#: Java's ``\s``, the class of Spark's ``split(text, '\s+')``. Python's
+#: ``\s`` and ``str.split()`` also match U+00A0, U+0085, U+2003 and
+#: ``\x1c``–``\x1f``, which Spark keeps inside tokens.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+#: dense-dispatch bound for md5-mode :func:`minhash_lsh_pairs`: at or
+#: below this many documents (non-NULL ids) the pair pipeline runs
+#: driver-side. The dense tier is single-threaded, so the bound sits
+#: below the measured wall-time crossover against the Spark plan
+#: (between 15 k and 20 k documents on 4 vCPUs, SCALE.md), with room
+#: for hosts whose extra cores speed up only the Spark plan.
+DENSE_LSH_MAX_DOCS = 10_000
+
+
+def _dense_lsh_pairs(
+    pdf, spark, id_type, n: int, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    r"""The dense tier of :func:`minhash_lsh_pairs` in md5 mode: the
+    Spark plan's shingles, signatures, band buckets, candidates and
+    rounded Jaccard, over the collected (id, text) frame ``pdf``
+    (NULL ids already dropped), in ``hashlib`` and numpy int64.
+
+    Step by step, as Spark computes it:
+
+    - tokens: ``split(text, '\s+')`` with Java's whitespace class and
+      limit −1, so leading and trailing empty tokens stay
+      (``_JAVA_WS``);
+    - shingles: the distinct space-joined n-token windows, or the
+      whole space-joined token list when a document has fewer than n
+      tokens; a NULL text has the single shingle ``""``
+      (``concat_ws`` skips NULL);
+    - signature slot s: min over shingles of a + s·b, a and b the
+      md5 hex digest's chars [0, 15) and [15, 30) parsed base-16,
+      each mod 1e17;
+    - band bucket: md5 of the band's '|'-joined slots, first 15 hex
+      chars parsed base-16 (:func:`_band`), so a bucket collision
+      yields the same extra candidate Spark verifies;
+    - verify: |A∩B| / (|A| + |B| − |A∩B|) over exact shingle-string
+      sets, rounded half-up to 4 places on the double's decimal
+      string (Spark's ``round``), kept if ≥ ``threshold``.
+
+    Spark's verify sets hold xxhash64 keys of the same shingles, so
+    the two tiers' Jaccard values can differ only on a 64-bit hash
+    collision inside one candidate pair."""
+    import hashlib
+    from decimal import ROUND_HALF_UP, Decimal
+    from itertools import chain, combinations
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("jaccard", DoubleType()),
+        ]
+    )
+    if len(pdf) == 0:
+        return spark.createDataFrame([], schema)
+    # documents in id order, so a bucket's members list in id order and
+    # a candidate (x, y) with x < y has id_a <= id_b
+    docs = sorted(
+        zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()), key=lambda d: d[0]
+    )
+    ids = [d[0] for d in docs]
+    vocab: dict = {}
+    sets = []
+    for _, text in docs:
+        toks = [] if text is None else _JAVA_WS.split(text)
+        if text is not None and len(toks) >= n:
+            sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+        else:
+            sh = {" ".join(toks)}
+        sets.append({vocab.setdefault(x, len(vocab)) for x in sh})
+
+    def md5_hex(x: str) -> str:
+        return hashlib.md5(x.encode()).hexdigest()
+
+    halves = np.array(
+        [(int(h[:15], 16), int(h[15:30], 16)) for h in map(md5_hex, vocab)],
+        dtype=np.int64,
+    ) % _MD5_HALF_MOD
+    idx = np.fromiter(chain.from_iterable(sets), dtype=np.int64)
+    starts = np.cumsum([0] + [len(s) for s in sets[:-1]])
+    a, b = halves[idx, 0], halves[idx, 1]
+    sig = np.stack(
+        [np.minimum.reduceat(a + s * b, starts) for s in range(num_hashes)], axis=1
+    )
+    rows_per_band = num_hashes // bands
+    buckets: dict = {}
+    for d, slots in enumerate(sig.tolist()):
+        for bi in range(bands):
+            band = slots[bi * rows_per_band : (bi + 1) * rows_per_band]
+            key = int(md5_hex("|".join(map(str, band)))[:15], 16)
+            buckets.setdefault((bi, key), []).append(d)
+    cand = {
+        (x, y)
+        for members in buckets.values()
+        for x, y in combinations(members, 2)
+        if ids[x] < ids[y]
+    }
+    quantum = Decimal("0.0001")
+    rows = []
+    for x, y in sorted(cand):
+        inter = len(sets[x] & sets[y])
+        j = inter / (len(sets[x]) + len(sets[y]) - inter)
+        j = float(Decimal(repr(j)).quantize(quantum, ROUND_HALF_UP))
+        if j >= threshold:
+            rows.append((ids[x], ids[y], j))
+    if not rows:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
 
 def _union_find_local(pdf, spark, id_type) -> DataFrame:
@@ -918,10 +1077,8 @@ def duplicated_ngram_spans(
 # ``pos_j = a + j·b`` from the two 15-hex-char halves of one digest),
 # so the SAME bitmap — bit for bit — can be built and probed by any
 # engine with md5() and 64-bit integers, which is what lets the DuckDB
-# oracle certify the whole pipeline by value.
-
-_BLOOM_MOD = 10**17  # both md5 halves reduced below 1e17: a + j·b
-# stays far under 2^63 for any practical k, no overflow in any engine
+# oracle certify the whole pipeline by value (halves mod
+# ``_MD5_HALF_MOD``, as in the MinHash md5 mode).
 
 
 def _bloom_words(
@@ -932,8 +1089,8 @@ def _bloom_words(
     sidestepping engine-specific 64-bit shift overflow rules. The
     shifts are SQL expressions (pyspark's ``shiftleft`` only takes a
     literal shift amount)."""
-    a = F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long") % _BLOOM_MOD
-    b = F.conv(F.substring(F.md5(key_col), 16, 15), 16, 10).cast("long") % _BLOOM_MOD
+    a = F.conv(F.substring(F.md5(key_col), 1, 15), 16, 10).cast("long") % _MD5_HALF_MOD
+    b = F.conv(F.substring(F.md5(key_col), 16, 15), 16, 10).cast("long") % _MD5_HALF_MOD
     pos = F.explode(
         F.array(*[(a + F.lit(j) * b) % m_bits for j in range(n_hashes)])
     ).alias("__pos")
@@ -1091,8 +1248,8 @@ def bloom_member_expr(
     pow2 = F.lit([1 << i for i in range(32)])
     m_bits = m_words * 32
     key = F.col(key_col).cast("string")
-    a = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long") % _BLOOM_MOD
-    b = F.conv(F.substring(F.md5(key), 16, 15), 16, 10).cast("long") % _BLOOM_MOD
+    a = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long") % _MD5_HALF_MOD
+    b = F.conv(F.substring(F.md5(key), 16, 15), 16, 10).cast("long") % _MD5_HALF_MOD
     cond = None
     for j in range(n_hashes):
         p = (a + F.lit(j) * b) % m_bits

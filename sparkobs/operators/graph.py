@@ -228,10 +228,9 @@ def _dense_pagerank(
     np.add.at(od, si, w)
     base_total = UNIT * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
     if teleport is not None:
-        tele = {
-            row[0]
-            for row in teleport.select(teleport.columns[0]).distinct().collect()
-        }
+        # one plain collect: the set dedupes, as the distributed
+        # plan's distinct does
+        tele = {row[0] for row in teleport.select(teleport.columns[0]).collect()}
         # a NULL teleport row counts toward nn but matches no node —
         # the distributed SUM(__t)/left-join behavior
         nn = len(tele)
@@ -709,9 +708,10 @@ def reachable_set(
     only to optimize the already-cheap empty tail.
 
     ``edges`` is directed (src, dst); ``seeds`` is a (node) set —
-    duplicate seed rows are deduped (both tiers apply distinct, so
-    the dispatch boundary cannot change the output even for
-    contract-violating duplicate-seed input). Output: (node, hop)
+    duplicate seed rows are deduped (distinct in the distributed
+    tier, the seed dict in the dense one, so the dispatch boundary
+    cannot change the output even for contract-violating
+    duplicate-seed input). Output: (node, hop)
     with hop 0 = the seeds themselves.
 
     Dense dispatch: ≤ ``DENSE_PR_MAX_EDGES`` edges run the BFS in
@@ -763,9 +763,9 @@ def _dense_reachable_set(
     adj: dict = {}
     for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
         adj.setdefault(s, []).append(d)
-    hop_of = {
-        row[0]: 0 for row in seeds.select("node").distinct().collect()
-    }
+    # one plain collect: the dict dedupes seeds (NULL included), as the
+    # distributed tier's distinct does
+    hop_of = {row[0]: 0 for row in seeds.select("node").collect()}
     frontier = set(hop_of)
     for h in range(1, max_hops + 1):
         nxt = set()

@@ -552,12 +552,21 @@ def test_embedding_near_dup_ivf_subset_of_brute(spark):
 
 
 def _tier_pairs(spark, sf: str) -> tuple[set, set]:
+    """(md5, xx64) verified pair sets of ``sf``'s documents. The md5 set
+    is computed by both md5 tiers (driver-side and Spark plan), which
+    must agree exactly."""
     d = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
     kw = dict(n=3, num_hashes=32, bands=8, threshold=0.2)
     md5 = {
         (r.id_a, r.id_b, r.jaccard)
         for r in minhash_lsh_pairs(d, hash_fn="md5", **kw).collect()
     }
+    with patch.object(dedup, "DENSE_LSH_MAX_DOCS", 0):
+        md5_dist = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in minhash_lsh_pairs(d, hash_fn="md5", **kw).collect()
+        }
+    assert md5 == md5_dist, "md5 dense and distributed tiers disagree"
     xx = {
         (r.id_a, r.id_b, r.jaccard)
         for r in minhash_lsh_pairs(d, hash_fn="xx64", **kw).collect()
@@ -625,10 +634,12 @@ def test_minhash_lsh_jaccard_values_match_exact_tier(spark, sf_dir):
 
 
 #: Spark jobs ``near_dup_groups(tier="lsh")`` may launch at sf0.001
-#: from call to collect: the hash-set verify measured 7 (at 4 and 8
-#: cores), plus 2 of slack for AQE or broadcast decisions that differ
-#: by core count or Spark patch level. A verify that re-shingles
-#: candidate documents through persisted frames took 19.
+#: from call to collect on the Spark plan (the driver-side md5 tier is
+#: switched off; its budget is ``lsh_groups_md5`` below): the hash-set
+#: verify measured 7 (at 4 and 8 cores), plus 2 of slack for AQE or
+#: broadcast decisions that differ by core count or Spark patch level.
+#: A verify that re-shingles candidate documents through persisted
+#: frames took 19.
 LSH_GROUPS_JOB_BUDGET = 9
 
 
@@ -636,9 +647,12 @@ def test_near_dup_groups_lsh_job_budget(spark, sf_dir):
     from sparkobs.operators.dedup import near_dup_groups
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = _jobs_in(
-        spark, lambda: near_dup_groups(d, 3, 0.2, tier="lsh", hash_fn="md5").collect()
-    )
+
+    def call():
+        with patch.object(dedup, "DENSE_LSH_MAX_DOCS", 0):
+            near_dup_groups(d, 3, 0.2, tier="lsh", hash_fn="md5").collect()
+
+    n = _jobs_in(spark, call)
     assert n <= LSH_GROUPS_JOB_BUDGET, (
         f"near_dup_groups(tier='lsh') launched {n} Spark jobs, budget "
         f"{LSH_GROUPS_JOB_BUDGET}"
@@ -664,7 +678,9 @@ def _jobs_in(spark, fn) -> int:
 
 def _dense_dispatch_calls(spark) -> dict:
     """One call per dense-tier dispatch on a small in-memory input that
-    takes the dense tier; each returns without running the result."""
+    takes the dense tier; each returns without running the result,
+    except the two LSH calls, which collect it: their Spark plan is
+    lazy, so only call to collect compares the tiers."""
     from sparkobs.operators import bpe, cluster, graph, similarity
     from sparkobs.sources import listing
 
@@ -674,6 +690,7 @@ def _dense_dispatch_calls(spark) -> dict:
     )
     nodes = spark.createDataFrame([(n,) for n in range(1, 6)], "node long")
     seeds = spark.createDataFrame([(1,)], "node long")
+    tele = spark.createDataFrame([(1,), (3,)], "node long")
     vecs = spark.createDataFrame(
         [(i, [float(i % 3), float(i // 3)]) for i in range(12)],
         "vec_id bigint, embedding array<double>",
@@ -685,33 +702,54 @@ def _dense_dispatch_calls(spark) -> dict:
     files = spark.createDataFrame(
         [("/a/x", 10), ("/a/y", 7), ("/a/z", 25)], "path string, length long"
     )
+    near = "the quick brown fox jumps over the lazy dog"
+    lsh_docs = spark.createDataFrame(
+        [(0, near), (1, near + " today"), (2, near), (3, "an unrelated short text")],
+        "doc_id bigint, text string",
+    )
     return {
         "pagerank": lambda: graph.pagerank_fixed(edges, iters=3),
+        "pagerank_personalized": lambda: graph.pagerank_fixed(
+            edges, iters=3, teleport=tele
+        ),
         "min_label": lambda: graph.min_label_components(nodes, edges, rounds=3),
         "reachability": lambda: graph.reachable_set(edges, seeds, 2),
         "kmeans": lambda: cluster.kmeans_fit(vecs, k=2, iters=2),
         "bpe": lambda: bpe.bpe_train(docs, n_merges=4),
         "compaction": lambda: listing.compaction_assign(files, 16),
         "cosine_bruteforce": lambda: similarity.cosine_topk_bruteforce(vecs, k=2),
+        "lsh_pairs_md5": lambda: dedup.minhash_lsh_pairs(
+            lsh_docs, hash_fn="md5"
+        ).collect(),
+        "lsh_groups_md5": lambda: dedup.near_dup_groups(
+            lsh_docs, tier="lsh", hash_fn="md5"
+        ).collect(),
     }
 
 
 #: Spark jobs per dense-tier dispatch, call to return, on the inputs of
 #: ``_dense_dispatch_calls`` (measured at 4 and 8 cores, repeating
 #: exactly). Each dispatch decides and fetches with one bounded collect
-#: (``io.collect_at_most``); reachability's other two jobs collect its
-#: seed set. The count()-probe-then-collect dispatches this replaced
-#: measured pagerank 5, min_label 9, reachability 5, kmeans 4, bpe 5,
-#: compaction 3, cosine_bruteforce 3; each count() probe was two jobs
-#: (an aggregate stage plus its result).
+#: (``io.collect_at_most``); reachability's other job collects its seed
+#: set, and personalized PageRank's its teleport set, each with a plain
+#: collect (a ``distinct()`` first made each two jobs: 3 and 5). The
+#: md5 LSH cases count call to collect: the Spark plan they replace
+#: measured 5 (pairs) and 6 (groups) here. The count()-probe-then-
+#: collect dispatches of the other kernels measured pagerank 5,
+#: min_label 9, reachability 5, kmeans 4, bpe 5, compaction 3,
+#: cosine_bruteforce 3; each count() probe was two jobs (an aggregate
+#: stage plus its result).
 DENSE_DISPATCH_JOB_BUDGETS = {
     "pagerank": 3,
+    "pagerank_personalized": 4,
     "min_label": 5,
-    "reachability": 3,
+    "reachability": 2,
     "kmeans": 2,
     "bpe": 3,
     "compaction": 1,
     "cosine_bruteforce": 1,
+    "lsh_pairs_md5": 1,
+    "lsh_groups_md5": 2,
 }
 
 

@@ -9,7 +9,7 @@ import math
 from unittest.mock import patch
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -1493,3 +1493,86 @@ def test_minhash_tier_pair_set_equality_deterministic_regime(
         assert all(r.jaccard == 1.0 for r in rows), tier
     assert got["md5"] == expected
     assert got["xx64"] == expected
+
+
+#: separators between LSH test tokens: Java's whitespace class (what
+#: Spark's split on ``\s+`` cuts at, runs included), then characters
+#: Python's ``\s`` and ``str.split()`` also cut at but Spark keeps
+#: inside a token, then no separator at all
+_LSH_SEPS = [" ", "\t", "\n", "\x0b", "\f", "\r", " \t "]
+_LSH_SEPS += ["\u00a0", "\u0085", "\u2003", "\x1c", ""]
+
+
+@st.composite
+def _lsh_text(draw):
+    parts = draw(
+        st.lists(
+            st.tuples(
+                st.sampled_from(_LSH_SEPS),
+                st.sampled_from(["a", "b", "c", "dd", "é", "日本", "ß"]),
+            ),
+            max_size=8,
+        )
+    )
+    tail = draw(st.sampled_from(["", " ", "\t\n", "\u00a0"]))
+    return "".join(s + t for s, t in parts) + tail
+
+
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.just(""), _lsh_text()), min_size=1, max_size=8
+    ),
+    dup_of=st.lists(st.integers(0, 7), max_size=3),
+    null_id=st.booleans(),
+    n=st.integers(1, 3),
+    shape=st.sampled_from([(32, 8), (16, 8)]),
+    threshold=st.sampled_from([0.0, 0.3]),
+)
+@example(  # no token, or one only a non-Java separator makes
+    texts=[None, "\u00a0", "", "\x1c", None],
+    dup_of=[],
+    null_id=False,
+    n=1,
+    shape=(32, 8),
+    threshold=0.0,
+)
+@example(  # the same words, split or not by Java's whitespace class
+    texts=["a\u00a0b c dd", "a b c dd", "\ta b c dd ", "a\u0085b c\u2003dd", "日本 é ß"],
+    dup_of=[0, 4],
+    null_id=True,
+    n=2,
+    shape=(32, 8),
+    threshold=0.0,
+)
+@example(  # documents shorter than n: the whole text is one shingle
+    texts=["a b", "a b", "a", "a\x0bb"],
+    dup_of=[],
+    null_id=False,
+    n=3,
+    shape=(16, 8),
+    threshold=0.3,
+)
+@settings(**{**SETTINGS, "max_examples": 20})
+def test_minhash_lsh_md5_tiers_agree(
+    spark, texts, dup_of, null_id, n, shape, threshold
+):
+    """The driver-side md5 MinHash-LSH tier reproduces the Spark plan
+    exactly: the same (id_a, id_b, jaccard) rows on corpora with NULL
+    and empty texts, Java and non-Java whitespace, documents shorter
+    than n tokens, exact duplicates, non-ASCII tokens and a NULL id."""
+    from sparkobs.operators import dedup
+
+    texts = texts + [texts[i % len(texts)] for i in dup_of]
+    # ids descend, so id order is not row order
+    rows = [(3 * (len(texts) - i), t) for i, t in enumerate(texts)]
+    if null_id:
+        rows.append((None, texts[0]))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    num_hashes, bands = shape
+    kw = dict(
+        n=n, num_hashes=num_hashes, bands=bands, threshold=threshold, hash_fn="md5"
+    )
+    dense = dedup.minhash_lsh_pairs(df, **kw).collect()
+    with patch.object(dedup, "DENSE_LSH_MAX_DOCS", 0):
+        dist = dedup.minhash_lsh_pairs(df, **kw).collect()
+    assert sorted(map(tuple, dense)) == sorted(map(tuple, dist))
