@@ -50,6 +50,13 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
+    "semantic_dedup_embeddings",
+    "decode_synth_media",
+    "resize_synth_media",
+    "image_ahash_dedup_media",
+    "image_near_dup_media",
+    "video_framehash_dedup_media",
+    "video_avi_container_media",
     "minhash_lsh_pairs",
     "near_dup_groups_lsh",
     "minhash_lsh_pairs_xx64",

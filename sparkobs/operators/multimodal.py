@@ -369,24 +369,24 @@ def resize_media(
     """
 
     def kernel(batches):
-        import io
-        import struct
-
         import numpy as np
         import pandas as pd
 
-
+        # source (h, w) -> the (row, column) indices nearest-neighbor reads
+        index = {}
         for pdf in batches:
             rows = []
             for _id, content in zip(pdf["id"], pdf["content"]):
                 try:
-                    import numpy as np
-
                     px = _decode_pixels(bytes(content))
                     h, w, nch = px.shape
-                    yi = np.floor(np.arange(out_h) * h / out_h).astype(int)
-                    xi = np.floor(np.arange(out_w) * w / out_w).astype(int)
-                    res = px[yi][:, xi]
+                    if (h, w) not in index:
+                        index[h, w] = (
+                            np.floor(np.arange(out_h) * h / out_h).astype(int)[:, None],
+                            np.floor(np.arange(out_w) * w / out_w).astype(int),
+                        )
+                    yi, xi = index[h, w]
+                    res = px[yi, xi]
                     rows.append(
                         (int(_id), out_w, out_h, int(nch),
                          float(res.astype(np.float64).mean()), None)
@@ -394,8 +394,6 @@ def resize_media(
                 except Exception as exc:
                     rows.append((int(_id), None, None, None, None,
                                  f"{type(exc).__name__}: {exc}"))
-            import pandas as pd
-
             yield pd.DataFrame(
                 rows,
                 columns=["id", "width", "height", "n_channels", "mean_value", "error"],
