@@ -1,7 +1,7 @@
 # sparkobs developer targets. The driver gate certifies only the first
-# 50 registry entries per round; `make sweep` runs the FULL registry
-# through the DuckDB oracle so entries outside the gate window cannot
-# silently rot.
+# 50 registry entries per round; tier-1 (`make test`) checks EVERY entry
+# against its DuckDB oracle at sf0.001 (tests/test_gate_head.py),
+# and `make sweep` runs the full registry at sf0.01.
 
 .PHONY: test sweep gate bench bench-baseline smoke verify
 

@@ -50,45 +50,31 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
-    "semantic_dedup_embeddings",
-    "decode_synth_media",
-    "resize_synth_media",
-    "image_ahash_dedup_media",
-    "image_near_dup_media",
-    "video_framehash_dedup_media",
-    "video_avi_container_media",
-    "minhash_lsh_pairs",
-    "near_dup_groups_lsh",
-    "minhash_lsh_pairs_xx64",
-    "pagerank_personalized_copurchase",
-    "impact_reach_supply_chain",
-    "pagerank_copurchase",
-    "pagerank_weighted_copurchase",
-    "components_supplier_mutual_knn",
-    "kmeans_embeddings",
-    "kmeans_ari_embeddings",
-    "streaming_kmeans_assign_embeddings",
-    "bpe_merges_documents",
+    "profile_lineitem_stats",
+    "null_counts_orders",
+    "distinct_counts_lineitem",
+    "duplicate_count_lineitem",
+    "histogram_returnflag",
+    "grouped_distinct_parts",
+    "streaming_jsonl_tumbling_events",
+    "sql_monitor_lineitem",
+    "profile_lineitem_approx",
+    "jdbc_monitor_nation",
+    "split_assign_documents",
+    "heavy_hitters_tokens_documents",
+    "bigram_ppl_documents",
+    "table_diff_orders",
     "bpe_tokenize_documents",
-    "bpe_merges_batched_documents",
-    "bpe_batched_parity_documents",
-    "compaction_plan_sf_dir",
+    "cohort_retention_events",
+    "curation_funnel_documents",
+    "hashed_vectors_documents",
+    "gram_matrix_embeddings",
+    "pca_project_embeddings",
+    "pca_variance_embeddings",
     "compaction_execute_documents",
-    "cosine_topk",
-    "dim_ablation_recall_embeddings",
-    "embedding_near_dup_pairs",
-    "streaming_near_dup_candidates",
-    "streaming_incremental_band_index",
-    "streaming_cms_events",
-    "streaming_kmv_quantiles_events",
-    "streaming_hll_sliding_users_events",
-    "streaming_theta_intersection_events",
-    "streaming_theta_intersection_grouped_events",
-    "streaming_monitor_health_events",
-    "bucket_monitor_metrics",
-    "listing_key_metrics",
-    "storage_capacity_stats",
-    "jdbc_roundtrip_nation",
+    "merge_upsert_orders",
+    "diff_columns_orders",
+    "sparse_cosine_powerlaw_pruned",
 ]
 
 

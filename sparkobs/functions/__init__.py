@@ -12,10 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MB = 1048576.0
-GB = MB * 1024.0
-
-
+MB = 1048576.0  # unit constant, ref s3_key_monitor.py:29
 def basename(path: Column | str) -> Column:
     """Last path segment (OP-42/43): ``element_at(split(path,'/'),-1)``."""
     return F.element_at(F.split(path, "/"), -1)
@@ -25,27 +22,6 @@ def dirname(path: Column | str) -> Column:
     """Parent prefix (OP-43): everything before the last '/'."""
     parts = F.split(path, "/")
     return F.array_join(F.slice(parts, 1, F.size(parts) - 1), "/")
-
-
-def normalize_path(path: Column | str) -> Column:
-    """Collapse duplicate separators and trailing slash (OP-43 analog of
-    ``os.path.normpath``, s3_key_monitor.py:49)."""
-    return F.regexp_replace(F.regexp_replace(path, "/+", "/"), "/$", "")
-
-
-def metric_name(entity: Column | str, suffix: str) -> Column:
-    """``"{entity}-{suffix}"`` metric naming (OP-44, s3_key_monitor.py:75-86)."""
-    return F.concat(F.col(entity) if isinstance(entity, str) else entity, F.lit(f"-{suffix}"))
-
-
-def bytes_to_mb(size: Column | str, digits: int = 4) -> Column:
-    """Unit conversion (OP-52)."""
-    return F.round((F.col(size) if isinstance(size, str) else size) / F.lit(MB), digits)
-
-
-def ts_to_string(ts: Column | str) -> Column:
-    """Timestamp stringification at the sink boundary (OP-47)."""
-    return F.date_format(ts, "yyyy-MM-dd HH:mm:ss")
 
 
 def naive_us(ts: Column | str) -> Column:

@@ -376,23 +376,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def write_metrics(
-    df: DataFrame, path: str, mode: str = "append", partition_by: list[str] | None = None
-) -> None:
-    """Metric sink (OP-12): append a long-format metrics DataFrame.
-
-    Rebuild of ``log_metric`` (s3_key_monitor.py:88-89) — instead of one
-    HTTP call per scalar, the whole metric batch lands as a parquet
-    append, written by all executors in parallel. Pass
-    ``partition_by=["run_date"]`` (or similar) when the stream carries a
-    run column so downstream readers get partition pruning.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
 ) -> None:
@@ -454,9 +437,9 @@ def pin_corpus_frame(df: DataFrame) -> DataFrame:
     blocks (``InMemoryTableScan``), so the multi-leg scan-dedup the
     pin exists for still holds. Plan-text note: the persisted
     frame's RECOVERABLE lineage still prints one ``Scan parquet``
-    node inside the ``InMemoryRelation`` — ``plans.scans()`` excludes
-    it from live-work budgets by default; it executes at most once
-    (and again only on partition loss).
+    node inside the ``InMemoryRelation`` — the tests' scan-count
+    helper excludes it from live-work budgets by default; it executes
+    at most once (and again only on partition loss).
 
     Lifetime (r14 review correction): SQL-cache entries stay in the
     CacheManager until an explicit ``unpersist()`` or

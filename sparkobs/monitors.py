@@ -3,7 +3,7 @@
 These are the top-level compositions a user of the reference would
 migrate to — same outputs, but a single lazy Spark job instead of an
 Airflow DAG of tasks + XCom (SURVEY.md §3.1). Each returns a metrics
-DataFrame ready for the metric sink (io.write_metrics).
+DataFrame ready for a metric sink (``df.write.mode("append").parquet``).
 """
 
 from __future__ import annotations

@@ -68,31 +68,24 @@ def cohort_retention(
     df: DataFrame,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    granularity: str = "week",
 ) -> DataFrame:
-    """Cohort retention matrix: keys are cohorted by the period of
+    """Weekly cohort retention matrix: keys are cohorted by the week of
     their FIRST event; each (cohort, offset) cell counts keys active
-    ``offset`` periods later, with retention relative to cohort size.
+    ``offset`` weeks later, with retention relative to cohort size.
 
     Two hash aggs (first-event per key; distinct key per cohort×
     period) and one broadcast-friendly join on the cohort key — the
     matrix is |cohorts| × |offsets| rows no matter the event volume.
     """
     first = df.groupBy(key_col).agg(
-        F.date_trunc(granularity, F.min(ts_col)).alias("__cohort")
+        F.date_trunc("week", F.min(ts_col)).alias("__cohort")
     )
     active = (
-        df.select(key_col, F.date_trunc(granularity, F.col(ts_col)).alias("__period"))
+        df.select(key_col, F.date_trunc("week", F.col(ts_col)).alias("__period"))
         .distinct()
         .join(first, key_col)
     )
-    per_gran_days = {"week": 7, "day": 1}
-    if granularity not in per_gran_days:
-        raise ValueError(f"granularity must be one of {sorted(per_gran_days)}")
-    offset = (
-        F.datediff(F.col("__period"), F.col("__cohort"))
-        / per_gran_days[granularity]
-    ).cast("long")
+    offset = (F.datediff(F.col("__period"), F.col("__cohort")) / 7).cast("long")
     cells = (
         active.select("__cohort", offset.alias("offset"), key_col)
         .groupBy("__cohort", "offset")

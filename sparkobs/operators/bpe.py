@@ -46,6 +46,10 @@ from sparkobs.operators.text import tokens_nonempty
 #: only the word attribute (cheap O(len) accesses, not re-parses)
 _CHARS_EXPR = "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
 
+#: longest merge chain :func:`bpe_apply` builds as ONE expression
+#: tree; a longer merge list folds in segments of this many merges
+BPE_MAX_CHAIN = 512
+
 
 def word_frequencies(
     df: DataFrame, text_col: str = "text"
@@ -259,7 +263,6 @@ def bpe_apply(
     merges: list[tuple],
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_chain: int = 512,
 ) -> DataFrame:
     """Tokenize every document with an ordered merge list (``(lhs,
     rhs)`` pairs, e.g. ``[(r["lhs"], r["rhs"]) for r in
@@ -271,8 +274,8 @@ def bpe_apply(
     construction (n_merges rows), so this is broadcast-free narrow
     work. A real 30k-merge vocabulary cannot live in ONE expression
     tree (analysis/codegen recursion scales with chain depth), so the
-    chain folds in ``max_chain``-sized segments with an eager
-    localCheckpoint between segments — ≤ n_merges/max_chain
+    chain folds in ``BPE_MAX_CHAIN``-sized segments with an eager
+    localCheckpoint between segments — ≤ n_merges/BPE_MAX_CHAIN
     materializations of the narrow (id, n_chars, sym) projection,
     still no joins and no Python."""
     w = df.select(
@@ -280,16 +283,16 @@ def bpe_apply(
         F.explode(tokens_nonempty(text_col)).alias("word"),
     )
     s = F.concat(F.lit(" "), F.array_join(F.expr(_CHARS_EXPR), "  "), F.lit(" "))
-    if len(merges) <= max_chain:
+    if len(merges) <= BPE_MAX_CHAIN:
         for lhs, rhs in merges:
             s = F.replace(s, F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} "))
     else:
         w = w.select(
             "id", F.length("word").alias("__nc"), s.alias("__sym")
         )
-        for i in range(0, len(merges), max_chain):
+        for i in range(0, len(merges), BPE_MAX_CHAIN):
             seg = F.col("__sym")
-            for lhs, rhs in merges[i : i + max_chain]:
+            for lhs, rhs in merges[i : i + BPE_MAX_CHAIN]:
                 seg = F.replace(seg, F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} "))
             w = w.withColumn("__sym", seg).localCheckpoint(eager=True)
         return (

@@ -336,11 +336,19 @@ def _signature_frame(
 ) -> DataFrame:
     """(id, signature, hs) per document from one tokenize/shingle
     explode and one ``groupBy(id)``: ``signature`` is the MinHash
-    signature (see :func:`minhash_signatures`), ``hs`` the document's
-    distinct shingles as 8-byte ``xxhash64`` keys — the set the exact
-    verify of :func:`minhash_lsh_pairs` intersects. ``id_col`` must be
-    unique. A caller that reads only ``signature`` (or only bands) pays
-    nothing for ``hs``: column pruning drops the unused aggregate."""
+    signature (``num_hashes`` seeded hashes over the distinct
+    shingles, min per seed), ``hs`` the document's distinct shingles
+    as 8-byte ``xxhash64`` keys — the set the exact verify of
+    :func:`minhash_lsh_pairs` intersects. ``id_col`` must be unique.
+    A caller that reads only ``signature`` (or only bands) pays
+    nothing for ``hs``: column pruning drops the unused aggregate.
+
+    ``hash_fn="xx64"`` uses xxhash64 per seed. ``hash_fn="md5"``
+    derives every seed from ONE md5 digest per shingle by
+    Kirsch-Mitzenmacher double hashing ``h_s = a + s·b`` (a, b = the
+    digest's two 15-hex-char halves, reduced mod 1e17 so every h_s
+    fits a signed 64-bit int): exactly reproducible wherever md5()
+    and BIGINT arithmetic exist, the mode the DuckDB oracle checks."""
     # project to the two needed columns BEFORE the fan-out exchange
     # (guide §2.3), then spread the shingle/hash compute across cores
     # when the source is under-split (no-op on well-split sources).
@@ -383,36 +391,6 @@ def _signature_frame(
         F.expr(sig_sql).alias("signature"),
         F.collect_list(F.xxhash64("sh")).alias("hs"),
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "xx64",
-    fan_out: bool = True,
-) -> DataFrame:
-    """Deterministic MinHash signatures (tier 3): ``num_hashes`` seeded
-    hash functions over distinct shingles, min per seed — one explode +
-    one groupBy, signature as an array column.
-
-    ``hash_fn="xx64"`` (default) uses xxhash64 per seed — the 100 TB
-    path. ``hash_fn="md5"`` derives all ``num_hashes`` functions from
-    ONE md5 digest per shingle via Kirsch-Mitzenmacher double hashing
-    ``h_s = a + s·b`` (a, b = the first and second 15-hex-char halves
-    of ``md5(sh)`` parsed base-16, reduced mod 1e17 so every h_s fits
-    a signed 64-bit int without overflow in any engine; md5's bits are
-    uniformly mixed, so the halves act as independent seeds — one
-    digest instead of r3's two measured ~40% off the signature stage):
-    exactly reproducible wherever md5() and BIGINT arithmetic exist
-    (DuckDB, Trino, …) — the cross-engine-verifiable mode the oracle
-    checks. Same banding/verify algorithm either way.
-    """
-    return _signature_frame(
-        df, n, num_hashes, id_col, text_col, hash_fn, fan_out
-    ).select("id", "signature")
 
 
 def _band(sig: DataFrame, num_hashes: int, bands: int, hash_fn: str) -> DataFrame:
@@ -515,7 +493,7 @@ def minhash_lsh_pairs(
 
     ``id_col`` must be unique: one signature (and one hash set) per
     id; rows with a NULL id never pair. ``hash_fn`` picks the signature
-    hash (see :func:`minhash_signatures`); the verify sets always use
+    hash (see :func:`_signature_frame`); the verify sets always use
     xxhash64 shingle keys — they only test shingle equality within
     Spark, so portability doesn't apply there.
 
@@ -927,48 +905,6 @@ def simhash(
     return votes.select(F.col("id").alias("doc_id"), F.expr(fp_sql).alias("simhash"))
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
-    """SimHash near-dup candidates: band the 64-bit fingerprint into
-    4×16-bit keys (pigeonhole: hamming ≤ 3 ⇒ ≥1 identical band),
-    bucket-join, then exact hamming filter via bit_count(xor)."""
-    sh = simhash(df, **kw)
-    banded = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("simhash", i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
 def contamination_check(
     train: DataFrame,
     eval_df: DataFrame,
@@ -1258,32 +1194,6 @@ def bloom_member_expr(
         t = word.bitwiseAND(bit) == bit
         cond = t if cond is None else cond & t
     return cond
-
-
-def bloom_semi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    m_words: int = 256,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """Semi join ``fact`` ⋉ ``dim`` with Bloom pre-pruning: build the
-    portable bitmap over the dimension's (string-cast) keys, prune the
-    fact scan with the inlined :func:`bloom_member_expr` (no shuffle
-    of the fact), then remove false positives with an exact LEFT SEMI
-    join — by then the surviving side is a small fraction of the fact,
-    so the exact join's shuffle is over survivors only. Result rows
-    are exactly the plain semi join's (Bloom never drops a match).
-    """
-    keys = dim.select(F.col(dim_key).cast("string").alias("__k")).distinct()
-    bloom = bloom_build(keys, "__k", m_words=m_words, n_hashes=n_hashes)
-    pruned = fact.where(
-        bloom_member_expr(bloom, fact_key, m_words=m_words, n_hashes=n_hashes)
-    )
-    return pruned.join(
-        keys, pruned[fact_key].cast("string") == keys["__k"], "left_semi"
-    )
 
 
 def keep_best_canonical(

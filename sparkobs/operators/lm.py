@@ -79,21 +79,16 @@ def bigram_perplexity(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Per-document bigram perplexity under an add-alpha-smoothed
     model: ``p(w2|w1) = (c(w1,w2)+α) / (c(w1)+α·V)``, perplexity =
     ``exp(-mean(ln p))`` over the document's bigram occurrences.
 
-    ``model`` defaults to self-training on ``df`` (the corpus scores
-    itself — the unsupervised outlier-detection mode); pass the triple
-    from :func:`train_bigram_model` over a reference corpus for the
-    CCNet "score against Wikipedia-grade text" mode. Left joins keep
-    unseen bigrams/contexts scoreable (they fall back to the smoothing
-    mass) so a held-out corpus never drops rows.
+    The model self-trains on ``df`` (the corpus scores itself — the
+    unsupervised outlier-detection mode).
     """
     bg = doc_bigrams(df, id_col, text_col)
-    c12, c1, vocab = model if model is not None else train_bigram_model(bg)
+    c12, c1, vocab = train_bigram_model(bg)
     logp = F.log(
         (F.coalesce(F.col("c12"), F.lit(0)) + alpha)
         / (F.coalesce(F.col("c1"), F.lit(0)) + alpha * F.col("vocab_size"))

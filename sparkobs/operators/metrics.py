@@ -14,9 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-METRIC_COLS = ("entity", "metric", "value")
-
-
 def to_metrics_long(df: DataFrame, entity_col: str, metric_cols: list[str]) -> DataFrame:
     """Unpivot wide per-entity metrics to long format (OP-12 sink shape).
 

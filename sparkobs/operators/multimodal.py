@@ -23,9 +23,6 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = "id bigint, modality string, content binary, meta map<string,string>"
-
-
 def text_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Build a media-shaped table from the documents fixture: UTF-8 bytes
     as the opaque content column + a metadata map. Stands in for real

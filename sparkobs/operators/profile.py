@@ -21,7 +21,7 @@ union into one metrics stream (OP-12) with a fixed schema.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,23 +29,6 @@ from pyspark.sql import types as T
 #: ``round(x, 2)`` habit (redshift_table_monitor.py:69,73) but keeps 4 for
 #: oracle-stable floating-point comparison.
 ROUND_DIGITS = 4
-
-PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField("col_name", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_nulls", T.LongType(), True),
-        T.StructField("n_distinct", T.LongType(), True),
-        T.StructField("min_val", T.DoubleType(), True),
-        T.StructField("max_val", T.DoubleType(), True),
-        T.StructField("mean_val", T.DoubleType(), True),
-        T.StructField("std_val", T.DoubleType(), True),
-        T.StructField("p25", T.DoubleType(), True),
-        T.StructField("median_val", T.DoubleType(), True),
-        T.StructField("p75", T.DoubleType(), True),
-    ]
-)
-
 
 def numeric_columns(df: DataFrame) -> list[str]:
     """Schema-driven numeric dispatch (OP-17) — replaces the reference's
@@ -55,14 +38,15 @@ def numeric_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, T.NumericType)]
 
 
-def profile(df: DataFrame, columns: list[str] | None = None, exact: bool = True) -> DataFrame:
-    """One-pass numeric profile, long format (one output row per column).
+def profile(df: DataFrame, exact: bool = True) -> DataFrame:
+    """One-pass numeric profile, long format (one output row per
+    numeric column; select the columns first to profile fewer).
 
     ``exact=False`` is the 100 TB mode: HLL distinct counts and
     ``percentile_approx`` instead of exact percentile — both are
     single-pass, mergeable sketches that keep the plan at one shuffle.
     """
-    cols = columns if columns is not None else numeric_columns(df)
+    cols = numeric_columns(df)
     if not cols:
         raise ValueError("profile() needs at least one numeric column")
 
@@ -118,13 +102,13 @@ def profile(df: DataFrame, columns: list[str] | None = None, exact: bool = True)
     return wide.select(F.explode(F.array(*per_col)).alias("s")).select("s.*")
 
 
-def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def null_counts(df: DataFrame) -> DataFrame:
     """Per-column null counts (OP-29), long format.
 
     Rebuild of ``df.isna().sum()`` loops (redshift_table_monitor.py:63-66,
     snowflake_table_monitor.py:118-121) as one aggregation pass.
     """
-    cols = columns if columns is not None else df.columns
+    cols = df.columns
     wide = df.agg(
         *[F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)).alias(c) for c in cols]
     )
@@ -134,23 +118,22 @@ def null_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return wide.select(F.explode(F.array(*pairs)).alias("s")).select("s.*")
 
 
-def distinct_counts(df: DataFrame, columns: list[str] | None = None, exact: bool = True) -> DataFrame:
-    """Per-column distinct counts (OP-30), long format.
+def distinct_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+    """Per-column exact distinct counts (OP-30), long format.
 
-    ``exact=False`` → ``approx_count_distinct`` (HLL): at 100 TB a
-    multi-column exact distinct is one full shuffle per column (Catalyst
-    ``Expand``), while HLL sketches merge map-side in a single pass.
+    At 100 TB a multi-column exact distinct is one full shuffle per
+    column (Catalyst ``Expand``); :func:`hll_distinct` is the
+    single-pass sketch form.
     """
     cols = columns if columns is not None else df.columns
-    agg = F.count_distinct if exact else F.approx_count_distinct
-    wide = df.agg(*[agg(F.col(c)).alias(c) for c in cols])
+    wide = df.agg(*[F.count_distinct(F.col(c)).alias(c) for c in cols])
     pairs = [
         F.struct(F.lit(c).alias("col_name"), F.col(c).alias("n_distinct")) for c in cols
     ]
     return wide.select(F.explode(F.array(*pairs)).alias("s")).select("s.*")
 
 
-def duplicate_count(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+def duplicate_count(df: DataFrame) -> DataFrame:
     """Count of duplicate rows (OP-31): ``count - count(distinct <all cols>)``.
 
     Rebuild of ``record_count - df.drop_duplicates().shape[0]``
@@ -159,8 +142,7 @@ def duplicate_count(df: DataFrame, columns: list[str] | None = None) -> DataFram
     map-side-combines, which survives 100 TB better than materializing
     ``dropDuplicates()`` and counting it separately.
     """
-    cols = columns if columns is not None else df.columns
-    grouped = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
+    grouped = df.groupBy(*df.columns).agg(F.count(F.lit(1)).alias("cnt"))
     return grouped.agg(
         F.coalesce(F.sum(F.col("cnt") - F.lit(1)), F.lit(0)).cast("long").alias("dup_rows"),
         F.count(F.lit(1)).alias("distinct_rows"),
@@ -168,8 +150,11 @@ def duplicate_count(df: DataFrame, columns: list[str] | None = None) -> DataFram
 
 
 def record_count(df: DataFrame) -> DataFrame:
-    """Row count as a 1-row DataFrame (OP-22); parquet footer count-star
-    pushdown applies when no filter is present."""
+    """Row count as a 1-row DataFrame (OP-22). Nothing is pushed down:
+    parquet reads through the V1 file source (it is in
+    ``spark.sql.sources.useV1SourceList``) and
+    ``spark.sql.parquet.aggregatePushdown`` is off, so the plan is a
+    column-less scan under a partial/final count."""
     return df.agg(F.count(F.lit(1)).alias("record_count"))
 
 
@@ -194,14 +179,11 @@ def numeric_histogram(df: DataFrame, column: str, bin_width: float, origin: floa
     )
 
 
-def categorical_histogram(df: DataFrame, column: str, top_k: int | None = None) -> DataFrame:
-    """Value-frequency histogram (OP-33, categorical flavor); optional top-k
-    keeps the result bounded on high-cardinality columns
-    (``TakeOrderedAndProject`` — no full sort at scale)."""
-    out = df.groupBy(F.col(column).alias("value")).agg(F.count(F.lit(1)).alias("value_count"))
-    if top_k is not None:
-        out = out.orderBy(F.desc("value_count"), F.asc_nulls_last("value")).limit(top_k)
-    return out
+def categorical_histogram(df: DataFrame, column: str) -> DataFrame:
+    """Value-frequency histogram (OP-33, categorical flavor)."""
+    return df.groupBy(F.col(column).alias("value")).agg(
+        F.count(F.lit(1)).alias("value_count")
+    )
 
 
 def table_profile(df: DataFrame, table_name: str, exact: bool = True) -> DataFrame:
@@ -213,7 +195,6 @@ def table_profile(df: DataFrame, table_name: str, exact: bool = True) -> DataFra
 
 def certify_approx_profile(
     df: DataFrame,
-    columns: list[str] | None = None,
     rsd: float = 0.05,
     accuracy: int = 10000,
     hll_sigma: float = 3.0,
@@ -222,7 +203,8 @@ def certify_approx_profile(
     twin, per column, IN the engine — the output is hash-checkable even
     though the sketches themselves are approximate.
 
-    Emits one row per numeric column:
+    Emits one row per numeric column (select the columns first to
+    certify fewer):
 
     - the stats that are exact in BOTH modes (counts, nulls, min, max,
       mean, std) — value-compared against the oracle directly;
@@ -240,7 +222,7 @@ def certify_approx_profile(
     certification cost, not production cost; production scale mode is
     ``profile(exact=False)`` (single pass).
     """
-    cols = columns if columns is not None else numeric_columns(df)
+    cols = numeric_columns(df)
     if not cols:
         raise ValueError("certify_approx_profile() needs numeric columns")
 
@@ -815,17 +797,17 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
 
 
-def heavy_hitters(df: DataFrame, key_col: str, k: int = 20, capacity: int | None = None) -> DataFrame:
+def heavy_hitters(df: DataFrame, key_col: str, k: int = 20) -> DataFrame:
     """EXACT heavy hitters — every key with count strictly >
     n/``k`` — at 100 TB cost: a per-partition Misra-Gries pass prunes
-    the candidate space to ≤ ``capacity`` keys per partition WITHOUT
+    the candidate space to ≤ capacity = 4·k keys per partition WITHOUT
     shuffling the full key universe (the way an exact groupBy-count
     top-k must), then ONE exact recount of only the candidates
     (broadcast join) produces exact counts. Misra-Gries never drops a
     key whose partition count exceeds n_p/capacity, and any global
     heavy hitter exceeds that in at least one partition (pigeonhole),
     so the candidate set has zero false negatives for capacity ≥ k;
-    the default capacity 4·k just trims false positives. The output —
+    the 4× margin just trims false positives. The output —
     exact keys, exact counts, integer threshold arithmetic
     (count·k > n) — is DETERMINISTIC regardless of partitioning; only
     the intermediate candidate set varies, and it never surfaces.
@@ -836,7 +818,7 @@ def heavy_hitters(df: DataFrame, key_col: str, k: int = 20, capacity: int | None
     trimmed by the standard weighted-merge rule (subtract the
     (capacity+1)-th largest weight, drop ≤ 0).
     """
-    capacity = capacity or 4 * k
+    capacity = 4 * k
 
     def mg(batches):
         import pandas as pd

@@ -77,7 +77,6 @@ def stratified_hash_sample(
 def split_assign(
     df: DataFrame,
     key_col: str,
-    splits: tuple = (("train", 98), ("val", 1), ("test", 1)),
     salt: str = "",
     out_col: str = "split",
 ) -> DataFrame:
@@ -88,10 +87,10 @@ def split_assign(
     by the dedup-group representative and near-duplicates can never
     leak across the train/eval boundary).
 
-    ``splits`` is ordered (name, weight) pairs; a key whose bucket
-    (mod total weight) falls in [0, w0) gets the first name, [w0,
-    w0+w1) the second, and so on. Pure row-local expression — no
-    shuffle, composes with pushdown like the scan itself.
+    The splits are train/val/test weighted 98/1/1; a key whose bucket
+    (mod total weight 100) falls in [0, 98) is train, [98, 99) val,
+    [99, 100) test. Pure row-local expression — no shuffle, composes
+    with pushdown like the scan itself.
 
     Rows with a NULL key are DROPPED (same contract as hash_sample):
     a NULL hashes to NULL, every range predicate is unknown, and the
@@ -99,27 +98,13 @@ def split_assign(
     contaminating exactly the eval set with exactly the broken-key
     rows.
     """
-    if not splits:
-        raise ValueError("splits must not be empty")
-    weights = [w for _, w in splits]
-    if any(w < 1 for w in weights):
-        raise ValueError(f"split weights must be >= 1, got {splits}")
-    df = df.where(F.col(key_col).isNotNull())
-    total = sum(weights)
-    h = _hash64(key_col, salt)
-    bucket = h % total
-    bounds, acc = [], 0
-    for name, w in splits:
-        acc += w
-        bounds.append((name, acc))
-    expr = None
-    for name, ub in reversed(bounds):
-        expr = (
-            F.lit(name)
-            if expr is None
-            else F.when(bucket < ub, F.lit(name)).otherwise(expr)
-        )
-    return df.withColumn(out_col, expr)
+    bucket = _hash64(key_col, salt) % 100
+    split = (
+        F.when(bucket < 98, F.lit("train"))
+        .when(bucket < 99, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+    return df.where(F.col(key_col).isNotNull()).withColumn(out_col, split)
 
 
 def upsample_mixture(

@@ -9,35 +9,8 @@ instead of pandas loops + ``iterrows()`` metric emission.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-SCHEMA_DF_SCHEMA = T.StructType(
-    [
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("column_name", T.StringType(), False),
-        T.StructField("data_type", T.StringType(), False),
-        T.StructField("ordinal", T.IntegerType(), False),
-    ]
-)
-
-
-def schema_as_dataframe(spark: SparkSession, dfs: dict[str, DataFrame]) -> DataFrame:
-    """Catalog column introspection as data (OP-05).
-
-    Rebuild of ``show columns`` / ``pg_table_def`` scans
-    (snowflake_table_monitor.py:64-71, redshift_database_monitor.py:46-48):
-    schemas come from parquet footers (no data scan), materialized as a
-    tiny driver-built DataFrame so shape metrics are ordinary queries.
-    """
-    rows = [
-        (name, f.name, f.dataType.simpleString(), i)
-        for name, df in dfs.items()
-        for i, f in enumerate(df.schema.fields)
-    ]
-    return spark.createDataFrame(rows, SCHEMA_DF_SCHEMA)
-
 
 def table_shapes(dfs: dict[str, DataFrame]) -> DataFrame:
     """(table_name, row_count, col_count) per table (OP-04/06/23).
@@ -106,12 +79,12 @@ def lookup_join_fill(
     )
 
 
-def grouped_distinct(df: DataFrame, group_col: str, value_col: str, exact: bool = True) -> DataFrame:
-    """Per-group distinct count (OP-32): ``groupby(g).nunique(v)``
-    (redshift_database_monitor.py:87-88) as partial+final hash agg;
-    HLL in scale mode."""
-    agg = F.count_distinct(F.col(value_col)) if exact else F.approx_count_distinct(value_col)
-    return df.groupBy(group_col).agg(agg.alias(f"n_distinct_{value_col}"))
+def grouped_distinct(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Per-group exact distinct count (OP-32): ``groupby(g).nunique(v)``
+    (redshift_database_monitor.py:87-88) as partial+final hash agg."""
+    return df.groupBy(group_col).agg(
+        F.count_distinct(F.col(value_col)).alias(f"n_distinct_{value_col}")
+    )
 
 
 def grouped_distinct_salted(
@@ -127,7 +100,7 @@ def grouped_distinct_salted(
     and their per-group SUM is the exact answer. Two ordinary hash
     aggregations, each with map-side partials, no reducer ever sees
     more than ~1/n of a hot group's values. Same output contract as
-    :func:`grouped_distinct` exact mode."""
+    :func:`grouped_distinct`."""
     salted = df.groupBy(
         F.col(group_col),
         F.pmod(F.xxhash64(F.col(value_col)), F.lit(n_salts)).alias("__salt"),

@@ -345,29 +345,6 @@ def _score_pairs(pairs: DataFrame, n: DataFrame, a_col: str, b_col: str) -> Data
     )
 
 
-def ivf_assignments(
-    df: DataFrame,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer as a pure DataFrame op (no corpus collect).
-
-    Centroids are the L2-normalized vectors with the lowest
-    ``n_clusters`` ids (deterministic seed — reproducible, no RNG/
-    k-means state); only those ≤ ``n_clusters`` rows are collected and
-    inlined as array literals. Assignment = argmax of the n_clusters
-    JVM-side dot-product folds, evaluated per-row inside codegen — the
-    corpus itself never leaves the executors.
-
-    Returns (id, vn [unit-normalized array<double>], cluster). At 100 TB
-    this is the frame you'd write out bucketed by ``cluster`` so a query
-    touches n_probe/n_clusters of the data.
-    """
-    quantized, cents = ivf_quantize(df, n_clusters, 1, id_col, vec_col)
-    return quantized.select("id", "vn", "cluster"), cents
-
-
 def ivf_quantize(
     df: DataFrame,
     n_clusters: int,
@@ -453,7 +430,7 @@ def cosine_topk_ivf(
     fully distributed (tier 3).
 
     Coarse quantizer: deterministic seed centroids (lowest-id vectors,
-    see ivf_assignments). Each query probes its ``n_probe`` nearest
+    see ivf_quantize). Each query probes its ``n_probe`` nearest
     centroids; candidates = equi-join of (query, probed cluster) against
     the cluster-assigned corpus — a plain shuffle join on a 1-int key,
     no corpus collect, no n² matrix. Exact cosine re-rank + windowed
@@ -523,72 +500,6 @@ def cosine_topk_ivf(
         .select(
             "vec_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
         )
-    )
-
-
-def write_ivf_index(
-    df: DataFrame,
-    path: str,
-    n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF index AT REST, bucketed by cluster: the corpus
-    (normalized) is written ``partitionBy("cluster")`` so each inverted
-    list is its own parquet partition directory, and the ≤ ``n_clusters``
-    centroids land in a sibling ``centroids`` table.
-
-    This is the 100 TB layout the IVF trade depends on: a query that
-    probes ``n_probe`` lists reads ``n_probe/n_clusters`` of the bytes
-    — enforced by parquet partition pruning (see query_ivf_index),
-    not by a runtime filter over a full scan.
-    """
-    assigned, cents = ivf_assignments(df, n_clusters, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/data")
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cluster int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    vector: list[float],
-    k: int = 5,
-    n_probe: int = 4,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Top-k cosine search against a persisted IVF index for ONE query
-    vector: probe selection happens driver-side against the tiny
-    centroids table, and the corpus scan carries a STATIC
-    ``cluster IN (...)`` predicate — parquet partition pruning, so only
-    the probed inverted lists are read from storage (PartitionFilters
-    in the scan plan; plan-asserted in tests).
-    """
-    import math
-
-    cents_rows = spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
-    norm = math.sqrt(sum(x * x for x in vector)) or 1.0
-    qn = [x / norm for x in vector]
-    dots = [
-        (sum(a * b for a, b in zip(qn, r.centroid)), r.cluster) for r in cents_rows
-    ]
-    probes = [c for _, c in sorted(dots, key=lambda t: (-t[0], t[1]))[:n_probe]]
-
-    corpus = spark.read.parquet(f"{path}/data").where(F.col("cluster").isin(probes))
-    if exclude_id is not None:
-        corpus = corpus.where(F.col("id") != exclude_id)
-    qlit = F.array(*[F.lit(x) for x in qn])
-    dot = F.aggregate(
-        F.zip_with("vn", qlit, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return (
-        corpus.select(
-            F.col("id").alias("neighbor_id"), F.round(dot, 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        .limit(k)
     )
 
 
@@ -903,35 +814,11 @@ def quantize_embeddings(
     )
 
 
-def auto_hash_dim(
-    toks: DataFrame, token_col: str = "token", load_factor: int = 8,
-    floor: int = 64,
-) -> int:
-    """Size a feature-hashing dimension from the data instead of a
-    guess (r9 verdict stretch item 8 — SCALE.md measured the failure
-    mode this prevents: a FIXED dim under a growing vocabulary
-    saturates every dimension, the absolute-df prune then drops all
-    of them and the production sparse-cosine tier silently returns
-    EMPTY): one portable-HLL register pass estimates the distinct
-    token count, and the dim is the next power of two ≥ load_factor ×
-    that estimate, floored at ``floor`` — tail/group tokens keep
-    (mostly) private dimensions at any corpus size, which is the
-    property the df-prune needs. The only driver-side materialization
-    is the 1-row estimate (HLL register geometry, never token rows)."""
-    import math
-
-    from sparkobs.operators.profile import hll_estimate, hll_registers
-
-    est = hll_estimate(hll_registers(toks, token_col)).first()[0] or 0.0
-    return max(floor, 1 << math.ceil(math.log2(max(1.0, load_factor * est))))
-
-
 def hashed_tf_vectors(
     df: DataFrame,
     dim: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    auto_dim: bool = False,
 ) -> DataFrame:
     """Feature-hashed sparse document vectors, LONG form (id, dim_idx,
     weight): each token hashes to a dimension with a ±1 sign (the
@@ -947,13 +834,6 @@ def hashed_tf_vectors(
     counts that cancel to zero are dropped (they carry no weight and
     their presence would differ from a sparse representation's).
     One explode → one (id, dim) hash agg → one per-id norm join.
-    ``auto_dim=True`` replaces the fixed ``dim`` with
-    :func:`auto_hash_dim`'s estimate-driven size (one extra HLL
-    register pass over the token stream; ``dim`` becomes the floor) —
-    callers feeding the ``max_df``-pruned :func:`sparse_cosine_pairs`
-    tier should prefer it, because a fixed dim under a growing
-    vocabulary saturates every dimension and the prune then emits
-    nothing (SCALE.md's measured 100× fixed-dim control).
     """
     hv = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
     toks = df.select(
@@ -962,8 +842,6 @@ def hashed_tf_vectors(
             F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
         ).alias("token"),
     )
-    if auto_dim:
-        dim = auto_hash_dim(toks, floor=dim)
     signed = toks.select(
         "id",
         (hv % dim).alias("dim_idx"),
@@ -1119,9 +997,7 @@ def sparse_cosine_pairs(
     )
 
 
-def gram_matrix(
-    df: DataFrame, vec_col: str = "embedding", upper_only: bool = True
-) -> DataFrame:
+def gram_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Exact Gram (scatter) matrix of the embedding column: G[i][j] =
     Σ over rows of v[i]·v[j] — the one-pass sufficient statistic for
     PCA / whitening / covariance over a 100 TB embedding corpus.
@@ -1133,9 +1009,7 @@ def gram_matrix(
     row count (the classic tree-aggregated gramian, re-expressed as
     mapInPandas + groupBy so Catalyst schedules it).
 
-    Output: (i, j, dot) with 1-based i ≤ j (full square when
-    ``upper_only=False``, reconstructed by symmetry — still only the
-    triangle is shuffled).
+    Output: (i, j, dot) with 1-based i ≤ j.
     """
     import numpy as np
     import pandas as pd
@@ -1157,16 +1031,7 @@ def gram_matrix(
             )
 
     cells = df.select(vec_col).mapInPandas(partial, "i int, j int, part double")
-    tri = (
-        cells.groupBy("i", "j")
-        .agg(F.round(F.sum("part"), 4).alias("dot"))
-    )
-    if upper_only:
-        return tri
-    lower = tri.where(F.col("i") != F.col("j")).select(
-        F.col("j").alias("i"), F.col("i").alias("j"), "dot"
-    )
-    return tri.unionByName(lower)
+    return cells.groupBy("i", "j").agg(F.round(F.sum("part"), 4).alias("dot"))
 
 
 def principal_axes(

@@ -28,18 +28,6 @@ from pyspark.sql import types as T
 from sparkobs.functions import naive_us
 
 
-def make_snapshot(df: DataFrame, table_name: str, run_ts: str) -> DataFrame:
-    """Snapshot write (OP-38): one row of (run_ts, table_name, row_count,
-    columns). ``run_ts`` is always passed in, never wall-clock, so runs
-    are replayable (SURVEY.md §7.5)."""
-    return df.agg(
-        F.lit(run_ts).cast("timestamp").alias("run_ts"),
-        F.lit(table_name).alias("table_name"),
-        F.count(F.lit(1)).alias("row_count"),
-        F.array(*[F.lit(c) for c in df.columns]).alias("columns"),
-    )
-
-
 def count_delta(snapshots: DataFrame) -> DataFrame:
     """Delta vs previous run (OP-39): ``lag`` over run history per table.
 
@@ -271,23 +259,21 @@ def table_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
-    compare_cols: list[str] | None = None,
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """Row-level reconciliation between two versions of a table: which
-    keys were ``added``, ``removed``, or ``changed`` (and optionally
-    ``unchanged``) — the snapshot-delta operator generalized from
-    counts (:func:`count_delta`) to row identity.
+    keys were ``added``, ``removed``, or ``changed`` — the
+    snapshot-delta operator generalized from counts
+    (:func:`count_delta`) to row identity.
 
-    Rows are compared by ``md5`` of the stringified ``compare_cols``
-    struct (all non-key columns by default), computed map-side on each
-    leg — the shuffle moves (key, 16-byte hash), never the wide rows.
-    One full outer join on the key; at 100 TB both legs pre-partition
-    on the same key so the join co-locates, and ``include_unchanged=
-    False`` (default) keeps the output ∝ churn, not table size.
+    Rows are compared by ``md5`` of the stringified struct of all
+    non-key columns, computed map-side on each leg — the shuffle moves
+    (key, 16-byte hash), never the wide rows. One full outer join on
+    the key; at 100 TB both legs pre-partition on the same key so the
+    join co-locates, and unchanged keys are dropped, so the output is
+    ∝ churn, not table size.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in old.columns if c not in key_cols]
+    compare_cols = [c for c in old.columns if c not in key_cols]
+
     def hashed(df: DataFrame, tag: str) -> DataFrame:
         cols = F.struct(*[F.col(c).cast("string") for c in compare_cols])
         return df.select(
@@ -300,10 +286,9 @@ def table_diff(
         .when(F.col("__h_old") != F.col("__h_new"), F.lit("changed"))
         .otherwise(F.lit("unchanged"))
     )
-    out = j.select(*key_cols, status.alias("diff_status"))
-    if not include_unchanged:
-        out = out.where(F.col("diff_status") != "unchanged")
-    return out
+    return j.select(*key_cols, status.alias("diff_status")).where(
+        F.col("diff_status") != "unchanged"
+    )
 
 
 def quantile_bins(
@@ -912,7 +897,6 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     deleted_col: str | None = None,
-    seq_col: str | None = None,
 ) -> DataFrame:
     """MERGE INTO semantics over immutable snapshots — the upsert
     every parquet-lake maintenance job needs: rows from ``updates``
@@ -923,13 +907,12 @@ def merge_upsert(
     A change batch may carry several rows per key (two successive
     CDC updates not pre-compacted); real MERGE INTO errors on that.
     Here the batch is COMPACTED first so the output's key-uniqueness
-    invariant always holds: latest-by-``seq_col`` wins when given
-    (seq ties broken by the non-key columns, keeping the order total),
-    else the lexicographically greatest row over the non-key columns
-    (a total, deterministic order — exact duplicates pick the same
-    row either way). The compaction window runs over the CHANGE
-    batch only, never the base. Deletes participate in compaction,
-    so a delete that is the latest change deletes the row.
+    invariant always holds: the lexicographically greatest row over
+    the non-key columns wins (a total, deterministic order — exact
+    duplicates pick the same row either way). The compaction window
+    runs over the CHANGE batch only, never the base. Deletes
+    participate in compaction, so a delete that is the latest change
+    deletes the row.
 
     After compaction one anti join is the whole plan: result =
     surviving updates ∪ (base ANTI JOIN all-update-keys). The base
@@ -939,14 +922,11 @@ def merge_upsert(
     snapshot rewrite pays; at cluster scale write the result
     partitioned by the merge key range for the next round's pruning.
     """
-    # seq_col alone is NOT a total order (two update rows for one key
-    # can tie on seq); append the non-key columns as tiebreak so the
-    # winner is deterministic across runs/engines, matching the
-    # seq_col=None branch's total-order contract. Unorderable columns
-    # (MAP, or composites containing one) are skipped — Spark cannot
-    # sort them, and a CDC batch may legitimately carry a MAP payload;
-    # ties that differ ONLY in unorderable columns fall back to the
-    # seq order (documented residual nondeterminism, never a crash).
+    # Unorderable columns (MAP, or composites containing one) are
+    # skipped — Spark cannot sort them, and a CDC batch may
+    # legitimately carry a MAP payload; ties that differ ONLY in
+    # unorderable columns keep an arbitrary one of the tied rows
+    # (documented residual nondeterminism, never a crash).
     def _orderable(dt):
         if isinstance(dt, T.MapType):
             return False
@@ -959,12 +939,8 @@ def merge_upsert(
     order_cols = [
         F.col(f.name).desc_nulls_last()
         for f in updates.schema.fields
-        if f.name not in key_cols
-        and f.name != seq_col
-        and _orderable(f.dataType)
+        if f.name not in key_cols and _orderable(f.dataType)
     ]
-    if seq_col is not None:
-        order_cols.insert(0, F.col(seq_col).desc_nulls_last())
     if order_cols:
         w = W.partitionBy(*key_cols).orderBy(*order_cols)
         updates = (
@@ -1123,7 +1099,6 @@ def diff_column_contributions(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Column-level drill-down of :func:`table_diff` — after the row
     diff says N keys changed, the next question is WHICH columns drove
@@ -1136,12 +1111,12 @@ def diff_column_contributions(
     The comparison is ``NOT (old <=> new)`` (null-safe: NULL→value
     and value→NULL both count as a change, NULL→NULL does not —
     DuckDB's IS DISTINCT FROM). One co-located key join + one hash
-    agg regardless of column count; output is |compare_cols| rows.
+    agg regardless of column count; output is one row per non-key
+    column.
     Output: (column, n_mismatch, n_compared, mismatch_rate — one
     unrounded division of exact integers).
     """
-    if compare_cols is None:
-        compare_cols = [c for c in old.columns if c not in key_cols]
+    compare_cols = [c for c in old.columns if c not in key_cols]
     o = old.select(
         *key_cols, *[F.col(c).alias(f"__o_{c}") for c in compare_cols]
     )

@@ -84,7 +84,9 @@ def profile_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT CAST(count(*) AS BIGINT) AS record_count FROM lineitem",
 )
 def record_count_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count (OP-22); parquet footer count-star pushdown; ref redshift_table_monitor.py:61."""
+    """Row count (OP-22): a column-less scan under a partial/final count
+    (no pushdown — see ``profile.record_count``); ref
+    redshift_table_monitor.py:61."""
     from sparkobs.operators.profile import record_count
 
     return record_count(load_table(spark, sf_dir, "lineitem"))
@@ -7813,7 +7815,7 @@ def mutual_info_events_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact jaccard), but banding RECALL for mid-band pairs depends on
 # the signature hash, and the md5 tier's Kirsch-Mitzenmacher dims
 # (all 32 linear in one digest's halves, dedup.py
-# minhash_signatures) are correlated: on the sf0.001 corpus it
+# _signature_frame) are correlated: on the sf0.001 corpus it
 # misses two true j≥0.91 pairs the 32-independent-seed xx64 tier
 # catches. Carriers:
 #   tests/test_dedup_similarity.py::

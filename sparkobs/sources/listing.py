@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkobs.functions import MB
 from sparkobs.io import collect_at_most
 from sparkobs.session import jvm_class
 
@@ -83,8 +84,6 @@ def list_files_distributed(
         F.col("modificationTime").alias("modification_time"),
     )
 
-
-MB = 1048576.0  # unit constant, ref s3_key_monitor.py:29
 
 #: Extension → MIME type for the content-type column (OP-09). The
 #: reference reads S3's stored ContentType (s3_key_monitor.py:74);
@@ -314,7 +313,6 @@ def compaction_execute(
     target_bytes: int,
     out_dir: str,
     src_root: str | None = None,
-    derive_src_root: bool = True,
 ) -> DataFrame:
     """EXECUTE a small-file compaction plan over same-schema parquet
     files: bin-pack the listed files into ≈``target_bytes`` groups (in
@@ -367,7 +365,7 @@ def compaction_execute(
     assign = compaction_assign(listing, target_bytes).select(
         norm(F.col("path")).alias("__src"), "group_id"
     )
-    if src_root is None and derive_src_root:
+    if src_root is None:
         # one distinct over parent dirs, bounded probe (limit 2): a
         # single shared parent → read it and let the join prune. The
         # parent keeps the RAW path (scheme included) — a normalized

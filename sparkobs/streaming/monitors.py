@@ -52,7 +52,6 @@ def stream_jsonl(
     spark: SparkSession,
     jsonl_dir: str,
     schema: str,
-    files_per_trigger: int | None = None,
 ) -> DataFrame:
     """JSONL file-source stream — continuous ingest of the format crawl
     shards actually arrive in. Schema is mandatory (streams cannot
@@ -60,10 +59,7 @@ def stream_jsonl(
     contract as sources.files.read_jsonl); extra keys in records are
     skipped, absent keys become NULL, so producers can evolve shards
     without breaking the ingest."""
-    reader = spark.readStream.schema(schema)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
-    return reader.json(jsonl_dir)
+    return spark.readStream.schema(schema).json(jsonl_dir)
 
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"

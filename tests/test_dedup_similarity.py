@@ -13,7 +13,6 @@ from sparkobs.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
-    simhash_near_pairs,
 )
 from sparkobs.operators.similarity import (
     cosine_topk_bruteforce,
@@ -112,13 +111,12 @@ def test_simhash_md5_mode_matches_xx64_semantics(spark, docs):
 def test_simhash_identical_and_near(spark, docs):
     fps = {r.doc_id: r.simhash for r in simhash(docs).collect()}
     assert fps[0] == fps[1]
-    near = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_pairs(docs, max_hamming=10).collect()
-    }
-    assert near[(0, 1)] == 0
-    if (0, 2) in near:
-        assert near[(0, 2)] <= 10
+
+    def hamming(a, b):
+        return bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1")
+
+    # one changed token of 13 moves fewer bits than an unrelated text
+    assert hamming(0, 2) < min(hamming(0, 3), hamming(0, 4))
 
 
 def test_cosine_topk_lsh_recall(spark):
@@ -284,38 +282,6 @@ def test_ivf_is_distributed_no_corpus_collect(spark):
     assert "Exchange SinglePartition" not in plan
     # the Python stages present must all be Arrow-batched
     assert "MapInPandas" in plan and "FlatMapGroupsInPandas" in plan
-
-
-def test_ivf_index_partition_pruning_and_parity(spark, tmp_path):
-    from sparkobs.operators.similarity import (
-        cosine_topk_ivf,
-        query_ivf_index,
-        write_ivf_index,
-    )
-
-    sf001 = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf001}/embeddings.parquet")
-    idx = str(tmp_path / "ivf_idx")
-    write_ivf_index(emb, idx, n_clusters=8)
-
-    qvec = list(emb.where("vec_id = 0").collect()[0]["embedding"])
-    res = query_ivf_index(spark, idx, qvec, k=3, n_probe=2, exclude_id=0)
-    # the scan must read ONLY the probed partitions (static pruning)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster" in plan
-    assert "cluster#" in plan or "cluster IN" in plan.replace("#", " ")
-    rows = res.collect()
-    assert len(rows) == 3
-
-    # same algorithm as the distributed tier → identical answer for
-    # this query id (same centroids: lowest-id seeds)
-    tier = {
-        (r.neighbor_id, r.cosine)
-        for r in cosine_topk_ivf(emb, k=3, n_clusters=8, n_probe=2)
-        .where("vec_id = 0")
-        .collect()
-    }
-    assert {(r.neighbor_id, r.cosine) for r in rows} == tier
 
 
 def test_connected_components_chain_and_cliques(spark):

@@ -1,8 +1,12 @@
-"""The hand-listed head of the driver gate (``_PRIORITY``: the entries
-the latest change touched) is oracle-checked in-suite with the
+"""Every registry entry against its DuckDB oracle at sf0.001, in
+driver-gate order (the hand-listed ``_PRIORITY`` head first), with the
 checker's own comparison (row count, sorted columns, order-insensitive
-value hash) at sf0.001, so the newest work never waits for the driver
-or ``make sweep`` to meet its DuckDB oracle."""
+value hash; ``tools/check_oracle.py``). Entries without an oracle are
+rows-only: building and collecting them is the check, as in the sweep.
+
+This is the in-suite form of ``make sweep`` at the smallest scale, so a
+parity break in any entry fails tier-1, whether or not the driver's
+50-entry gate holds it this round."""
 
 import os
 import sys
@@ -30,14 +34,19 @@ def oracle_con():
     return con
 
 
-@pytest.mark.parametrize("name", entrymod._PRIORITY)
-def test_gate_head_matches_oracle(spark, oracle_con, name):
-    sdf = entrymod.queries()[name](spark, SF)
+@pytest.fixture(scope="module")
+def registry():
+    return entrymod.queries(), entrymod.oracle_sql(os.path.realpath(SF))
+
+
+@pytest.mark.parametrize("name", list(entrymod.queries()))
+def test_gate_head_matches_oracle(spark, oracle_con, registry, name):
+    queries, oracles = registry
+    sdf = queries[name](spark, SF)
     s_rows = sdf.collect()
-    oracle = entrymod.oracle_sql(SF).get(name)
-    if oracle is None:
+    if name not in oracles:
         return  # rows-only entry: building and collecting is the check
-    res = oracle_con.execute(oracle)
+    res = oracle_con.execute(oracles[name])
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
     assert len(s_rows) == len(d_rows), f"{name}: row count"

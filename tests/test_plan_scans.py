@@ -20,7 +20,7 @@ legs).
 
 import pytest
 
-import sparkobs.plans as P
+import plan_helpers as P
 from sparkobs.queries import SPARK_QUERIES
 
 SF = "/root/testdata/sf0.001"

@@ -4,15 +4,8 @@ test the scalar function library."""
 from pyspark.sql import functions as F
 
 import sparkobs.queries as Q
-from sparkobs.functions import (
-    basename,
-    bytes_to_mb,
-    dirname,
-    flatten_struct,
-    metric_name,
-    normalize_path,
-)
-from sparkobs.plans import (
+from sparkobs.functions import basename, dirname, flatten_struct
+from plan_helpers import (
     assert_broadcast_join,
     assert_no_cartesian,
     assert_partial_final_agg,
@@ -62,15 +55,9 @@ def test_path_helpers(spark):
     r = df.select(
         basename("path").alias("b"),
         dirname("path").alias("d"),
-        normalize_path("path").alias("n"),
-        bytes_to_mb("size").alias("mb"),
-        metric_name("path", "size(MB)").alias("m"),
     ).collect()[0]
     assert r.b == "part-0.parquet"
     assert r.d == "s3://bucket//data"
-    assert r.n == "s3:/bucket/data/part-0.parquet"
-    assert r.mb == 2.0
-    assert r.m.endswith("-size(MB)")
 
 
 def test_flatten_struct_nested(spark):
@@ -199,7 +186,7 @@ def test_bucketed_join_has_no_exchange(spark):
 def test_pack_sequences_no_global_window_and_dup_span_no_cartesian(spark):
     # packing's cumsum must come from the per-partition+offsets plan
     # (no empty-partitionBy window); the dup-span join keys on shingles
-    from sparkobs.plans import assert_no_cartesian, physical_plan
+    from plan_helpers import assert_no_cartesian, physical_plan
 
     df = Q.SPARK_QUERIES["pack_sequences_documents"](spark, SF)
     plan = physical_plan(df)
@@ -212,7 +199,7 @@ def test_pack_sequences_no_global_window_and_dup_span_no_cartesian(spark):
 
 def test_fk_orphans_keys_only_scan(spark):
     # the anti join must move ONLY the key columns, not whole tables
-    from sparkobs.plans import scans
+    from plan_helpers import scans
 
     df = Q.SPARK_QUERIES["fk_orphans_lineitem"](spark, SF)
     key_scans = [s for s in scans(df) if "l_orderkey" in s["schema"] or "o_orderkey" in s["schema"]]
@@ -223,7 +210,7 @@ def test_round5_olap_plans_scale_worthy(spark):
     from sparkobs.plans import physical_plan
 
     # Q6: predicates reach the scan; one exchange (final agg) total
-    from sparkobs.plans import count_exchanges
+    from plan_helpers import count_exchanges
 
     df = Q.SPARK_QUERIES["forecast_revenue_q6"](spark, SF)
     assert_pushdown(df, "l_shipdate")
@@ -246,7 +233,7 @@ def test_top_customers_window_group_limit(spark):
 def test_gram_matrix_single_shuffle_no_row_transfer(spark):
     from sparkobs.plans import physical_plan
 
-    from sparkobs.plans import count_exchanges
+    from plan_helpers import count_exchanges
 
     # one exchange, keyed by (i, j) cells — O(partitions·dim²), not rows
     assert count_exchanges(Q.SPARK_QUERIES["gram_matrix_embeddings"](spark, SF)) == 1
@@ -297,7 +284,7 @@ def test_rollup_levels_complete(spark):
 
 
 def test_q17_preagg_sees_only_brand_qualifying_lineitem(spark):
-    from sparkobs.plans import physical_plan, scans
+    from plan_helpers import physical_plan, scans
 
     # The 0.2*avg per-part limit rides a WINDOW over the single
     # lineitem ⋈ broadcast(part) frame: ONE lineitem scan, ONE partkey
@@ -317,7 +304,7 @@ def test_q17_preagg_sees_only_brand_qualifying_lineitem(spark):
 
 
 def test_r6_wave_plan_discipline(spark):
-    from sparkobs.plans import count_exchanges, physical_plan
+    from plan_helpers import count_exchanges, physical_plan
 
     # Q8: 6-table star — dimension legs broadcast, no cartesian
     q8 = Q.SPARK_QUERIES["market_share_q8"](spark, SF)
@@ -375,7 +362,7 @@ def test_gate_window_plan_hygiene(spark):
 
 
 def test_iterative_wave_plan_discipline(spark):
-    from sparkobs.plans import (
+    from plan_helpers import (
         assert_no_cartesian,
         assert_partial_final_agg,
         physical_plan,
@@ -403,7 +390,7 @@ def test_iterative_wave_plan_discipline(spark):
 
 
 def test_ols_single_scan_three_columns_one_exchange(spark):
-    from sparkobs.plans import count_exchanges, scans
+    from plan_helpers import count_exchanges, scans
 
     ols = Q.SPARK_QUERIES["ols_pricing_lineitem"](spark, SF)
     sc = scans(ols)
@@ -422,7 +409,7 @@ def test_ann_recall_semi_join_no_cartesian(spark):
     # composition stays a LeftSemi equi-probe, never a cartesian
     from pyspark.sql import functions as F
 
-    from sparkobs.plans import assert_no_cartesian, physical_plan
+    from plan_helpers import assert_no_cartesian, physical_plan
 
     truth = (
         Q.SPARK_QUERIES["cosine_topk"](spark, SF)
@@ -440,7 +427,7 @@ def test_ann_recall_semi_join_no_cartesian(spark):
 
 
 def test_r6_late_wave_plans_scale_worthy(spark):
-    from sparkobs.plans import assert_no_cartesian, physical_plan
+    from plan_helpers import assert_no_cartesian, physical_plan
 
     # BFS reachability: frontier joins are equi joins, never a
     # cartesian expansion of the co-purchase graph
@@ -489,7 +476,7 @@ def test_q8_customer_semi_reduced_before_fact_join(spark):
 def test_cube_single_expand_one_shuffle(spark):
     """CUBE must be Catalyst's Expand over ONE scan + one partial/final
     agg pair — 2^k grouping sets from one pass, never k scans."""
-    from sparkobs.plans import count_exchanges, physical_plan, scans
+    from plan_helpers import count_exchanges, physical_plan, scans
 
     df = Q.SPARK_QUERIES["cube_revenue_status_priority"](spark, SF)
     p = physical_plan(df)

@@ -6,7 +6,6 @@ import math
 from pyspark.sql import functions as F
 
 from sparkobs.operators.profile import (
-    categorical_histogram,
     distinct_counts,
     duplicate_count,
     null_counts,
@@ -26,7 +25,7 @@ def test_profile_basic(spark):
     df = spark.createDataFrame(
         [(1.0,), (2.0,), (3.0,), (4.0,)], "x double"
     )
-    r = _one(profile(df, ["x"]))
+    r = _one(profile(df))
     assert r.n_rows == 4 and r.n_nulls == 0 and r.n_distinct == 4
     assert r.min_val == 1.0 and r.max_val == 4.0
     assert r.mean_val == 2.5 and r.median_val == 2.5
@@ -35,20 +34,20 @@ def test_profile_basic(spark):
 
 def test_profile_all_null_column(spark):
     df = spark.createDataFrame([(None,), (None,)], "x double")
-    r = _one(profile(df, ["x"]))
+    r = _one(profile(df))
     assert r.n_rows == 2 and r.n_nulls == 2 and r.n_distinct == 0
     assert r.min_val is None and r.mean_val is None
 
 
 def test_profile_empty_input(spark):
     df = spark.createDataFrame([], "x double")
-    r = _one(profile(df, ["x"]))
+    r = _one(profile(df))
     assert r.n_rows == 0 and r.n_nulls == 0 and r.n_distinct == 0
 
 
 def test_profile_single_row(spark):
     df = spark.createDataFrame([(7.0,)], "x double")
-    r = _one(profile(df, ["x"]))
+    r = _one(profile(df))
     assert r.median_val == 7.0 and r.std_val is None  # ddof=1 undefined on n=1
 
 
@@ -56,15 +55,15 @@ def test_profile_nan_vs_null(spark):
     # NaN is a VALUE in Spark double columns (not null) — document the
     # engine semantics: NaN counts as non-null and as a distinct value.
     df = spark.createDataFrame([(float("nan"),), (None,), (1.0,)], "x double")
-    r = _one(profile(df, ["x"]))
+    r = _one(profile(df))
     assert r.n_nulls == 1 and r.n_rows == 3
     assert r.n_distinct == 2  # NaN and 1.0
 
 
 def test_profile_union_doubles_counts(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_quantity")
-    single = _one(profile(df, ["l_quantity"]))
-    double = _one(profile(df.union(df), ["l_quantity"]))
+    single = _one(profile(df))
+    double = _one(profile(df.union(df)))
     assert double.n_rows == 2 * single.n_rows
     assert double.n_distinct == single.n_distinct
     assert double.mean_val == single.mean_val
@@ -96,17 +95,10 @@ def test_histogram_partitions_all_rows(spark, sf_dir):
         assert r.bin_hi - r.bin_lo == 10.0
 
 
-def test_categorical_histogram_topk(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    top2 = categorical_histogram(df, "l_returnflag", top_k=2).collect()
-    assert len(top2) == 2
-    assert top2[0].value_count >= top2[1].value_count
-
-
 def test_profile_approx_mode_close(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    exact = {r.col_name: r for r in profile(df, ["l_quantity"]).collect()}
-    approx = {r.col_name: r for r in profile(df, ["l_quantity"], exact=False).collect()}
+    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_quantity")
+    exact = {r.col_name: r for r in profile(df).collect()}
+    approx = {r.col_name: r for r in profile(df, exact=False).collect()}
     e, a = exact["l_quantity"], approx["l_quantity"]
     assert abs(a.n_distinct - e.n_distinct) <= 0.1 * e.n_distinct + 5
     assert abs(a.median_val - e.median_val) <= 1.0
@@ -122,8 +114,9 @@ def test_approx_profile_within_error_bounds(spark, sf_dir):
 
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     cols = ["l_quantity", "l_extendedprice", "l_suppkey"]
-    ex = {r.col_name: r for r in profile(df, cols, exact=True).collect()}
-    ap = {r.col_name: r for r in profile(df, cols, exact=False).collect()}
+    df = df.select(*cols)
+    ex = {r.col_name: r for r in profile(df, exact=True).collect()}
+    ap = {r.col_name: r for r in profile(df, exact=False).collect()}
     n = next(iter(ex.values())).n_rows
     for c in cols:
         e, a = ex[c], ap[c]

@@ -35,7 +35,7 @@ floats = st.one_of(
 @settings(**SETTINGS)
 def test_profile_invariants(spark, xs):
     df = spark.createDataFrame([(x,) for x in xs], "x double")
-    r = profile(df, ["x"]).collect()[0]
+    r = profile(df).collect()[0]
     n = len(xs)
     n_null = sum(1 for x in xs if x is None)
     assert r.n_rows == n

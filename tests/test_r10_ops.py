@@ -247,53 +247,6 @@ def test_theta_grouped_state_bounded_and_estimates_track(spark):
         )
 
 
-# --- auto_dim feature hashing (r9 verdict stretch item 8) -------------------
-
-
-def test_auto_dim_avoids_fixed_dim_saturation(spark):
-    """SCALE.md's measured fixed-dim failure mode, as a planted test:
-    under a power-law vocabulary much larger than the hash dim, every
-    dimension saturates (df > cap), the absolute-df prune drops all of
-    them, and the production tier silently returns EMPTY. auto_dim
-    sizes the dim from an HLL distinct-token estimate so group
-    dimensions stay under the cap and the pruned tier matches the
-    exact tier pair for pair."""
-    from pyspark.sql import functions as F
-
-    from sparkobs.operators.similarity import (
-        auto_hash_dim,
-        hashed_tf_vectors,
-        sparse_cosine_pairs,
-        synth_powerlaw_corpus,
-    )
-
-    docs = synth_powerlaw_corpus(
-        spark.range(600).select(F.col("id").alias("doc_id"))
-    )
-    # the failure mode: fixed dim=64 under a ~4.8k-token vocabulary —
-    # every one of the 64 dims carries df ≈ 150 ≫ cap, so the prune
-    # drops them ALL (deterministic: md5 hashing, fixed corpus)
-    fixed = hashed_tf_vectors(docs, dim=64)
-    pruned_fixed = sparse_cosine_pairs(fixed, threshold=0.5, max_df=32)
-    assert pruned_fixed.count() == 0, (
-        "expected the saturation failure mode (all dims df>cap)"
-    )
-    # auto_dim: estimate-driven dimension clears the saturation
-    auto = hashed_tf_vectors(docs, dim=64, auto_dim=True)
-    pruned_auto = sparse_cosine_pairs(auto, threshold=0.5, max_df=32)
-    exact_auto = sparse_cosine_pairs(auto, threshold=0.5)
-    got = sorted(map(tuple, pruned_auto.collect()))
-    want = sorted(map(tuple, exact_auto.collect()))
-    assert got == want and len(got) >= 1200, (len(got), len(want))
-    # and the chosen dim actually scaled with the vocabulary
-    toks = docs.select(
-        F.explode(F.split("text", r"\s+")).alias("token")
-    )
-    d = auto_hash_dim(toks, floor=64)
-    n_vocab = toks.distinct().count()
-    assert d >= 4 * n_vocab, (d, n_vocab)
-
-
 # --- sampled_agg_ci: Horvitz-Thompson AQP estimates (r10 queue) -------------
 
 

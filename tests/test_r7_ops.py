@@ -194,7 +194,7 @@ def test_rfm_scores_order_and_segments(spark):
 
 
 def test_r7_olap_plan_discipline(spark):
-    from sparkobs.plans import count_exchanges, physical_plan
+    from plan_helpers import count_exchanges, physical_plan
 
     SF = "/root/testdata/sf0.001"
 
@@ -210,7 +210,7 @@ def test_r7_olap_plan_discipline(spark):
     assert "BroadcastHashJoin" in p19 and "CartesianProduct" not in p19
     # Q2: ONE (part, supplier) aggregate serves min + membership via a
     # window — no second lineitem scan subtree
-    from sparkobs.plans import scans
+    from plan_helpers import scans
 
     assert len(scans(Q.SPARK_QUERIES["min_price_supplier_q2"](spark, SF))) == 2
     # Spearman: ranks come from value tables via the distributed
@@ -784,7 +784,7 @@ def test_mutual_topk_edges_keeps_only_reciprocal_pairs(spark):
 
 
 def test_late_r6_wave_plan_discipline(spark):
-    from sparkobs.plans import physical_plan, scans
+    from plan_helpers import physical_plan, scans
 
     SF = "/root/testdata/sf0.001"
 

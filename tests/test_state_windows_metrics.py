@@ -11,7 +11,7 @@ from sparkobs.operators.metrics import (
     to_metrics_long,
 )
 from sparkobs.operators.shape import argmax, argmax_per_group, lookup_join_fill
-from sparkobs.operators.state import count_delta, make_snapshot, schema_drift
+from sparkobs.operators.state import count_delta, schema_drift
 from sparkobs.operators.windows import session_agg, tumbling_agg
 
 
@@ -47,13 +47,6 @@ def test_schema_drift_detects_changes(spark):
     assert rows[2].columns_changed is False
     assert rows[3].n_removed == 1 and rows[3].n_added == 2
     assert rows[3].columns_changed is True
-
-
-def test_make_snapshot_shape(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = make_snapshot(df, "nation", "2024-06-01 00:00:00").collect()[0]
-    assert r.table_name == "nation" and r.row_count == 25
-    assert r.columns == ["n_nationkey", "n_name", "n_regionkey"]
 
 
 def test_session_window_gap_semantics(spark):
@@ -113,19 +106,6 @@ def test_lookup_join_fill_zero(spark):
     lookup = spark.createDataFrame([(1, 10)], "k int, cnt long")
     out = {r.k: r.cnt for r in lookup_join_fill(base, lookup, "k", "cnt").collect()}
     assert out == {1: 10, 2: 0}
-
-
-def test_metric_sink_roundtrip(spark, sf_dir, tmp_path):
-    from sparkobs.io import load_table, write_metrics
-    from sparkobs.monitors import table_monitor
-
-    path = str(tmp_path / "metrics")
-    m = table_monitor(load_table(spark, sf_dir, "nation"), "nation")
-    write_metrics(m, path)
-    write_metrics(m, path)  # append mode: second run adds rows
-    back = spark.read.parquet(path)
-    assert back.count() == 2 * m.count()
-    assert set(back.columns) == {"entity", "metric", "value"}
 
 
 def test_metric_anomalies_planted_spike(spark):
