@@ -50,31 +50,10 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
-    "profile_lineitem_stats",
-    "null_counts_orders",
-    "distinct_counts_lineitem",
-    "duplicate_count_lineitem",
-    "histogram_returnflag",
-    "grouped_distinct_parts",
-    "streaming_jsonl_tumbling_events",
-    "sql_monitor_lineitem",
-    "profile_lineitem_approx",
-    "jdbc_monitor_nation",
-    "split_assign_documents",
-    "heavy_hitters_tokens_documents",
-    "bigram_ppl_documents",
-    "table_diff_orders",
-    "bpe_tokenize_documents",
-    "cohort_retention_events",
-    "curation_funnel_documents",
-    "hashed_vectors_documents",
-    "gram_matrix_embeddings",
-    "pca_project_embeddings",
-    "pca_variance_embeddings",
+    "shape_summary_all",
+    "database_monitor_metrics",
+    "record_count_lineitem",
     "compaction_execute_documents",
-    "merge_upsert_orders",
-    "diff_columns_orders",
-    "sparse_cosine_powerlaw_pruned",
 ]
 
 

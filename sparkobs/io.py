@@ -2,8 +2,10 @@
 
 The reference pulls whole tables into pandas via DB cursors
 (``databand_tracking_template.py:12-19``, ``redshift_table_monitor.py:24``);
-here every source is a lazy Spark scan so Catalyst can push filters,
-prune columns, and (for parquet) answer count-star from footers.
+here every source is a lazy Spark scan so Catalyst can push filters
+and prune columns. A base table's row count is metadata, as in the
+reference's warehouse monitors: :func:`table_row_count` sums the
+Parquet footers' record counts and runs no Spark job.
 """
 
 from __future__ import annotations
@@ -15,18 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkobs.session import jvm_class
-
-# External-source (warehouse) tier — re-exported here so io is the one
-# place that names every source kind: parquet scans (load_table), temp
-# views (register_views), and JDBC pulls with partitioned reads +
-# predicate/limit pushdown (sources/jdbc.py; ref
-# redshift_table_monitor.py:22-24, snowflake_table_monitor.py:50-54,
-# databand_tracking_template.py:9-19).
-from sparkobs.sources.jdbc import (  # noqa: F401
-    jdbc_table_monitor,
-    read_jdbc,
-    write_jdbc,
-)
 
 #: Driver-generated star schema + extension tables (TESTDATA.md).
 TABLES = (
@@ -281,8 +271,9 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-#: session -> {path: (validation key, inferred schema)}; one entry per
-#: path, dropped with the session
+#: session -> {path: [validation key, inferred schema, footer row
+#: count or None until counted]}; one entry per path, dropped with the
+#: session
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -305,23 +296,110 @@ def _leaf_files(spark: SparkSession, path: str) -> tuple:
     return tuple(sorted(out))
 
 
+def _memo_key(spark: SparkSession, path: str) -> tuple:
+    """What a memo entry of ``path`` is valid for: its leaf files and
+    the inference confs."""
+    files = _leaf_files(spark, path)
+    return (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without the footer-inference job when
     this session already inferred the schema of these exact files under
     the same inference confs; see :func:`load_table` for the contract."""
     try:
-        files = _leaf_files(spark, path)
+        key = _memo_key(spark, path)
     except Py4JJavaError:
         # missing path and the like: let the plain read raise its error
         return spark.read.parquet(path)
-    key = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
     memo = _SCHEMAS.setdefault(spark, {})
     hit = memo.get(path)
     if hit is not None and hit[0] == key:
         return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
-    memo[path] = (key, df.schema)
+    memo[path] = [key, df.schema, None]
     return df
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: a file or directory the Parquet source
+    never reads as data (``_SUCCESS``, ``_metadata``, ``.crc`` files,
+    ``_temporary``, in-flight copies), but not a ``_k=v`` partition."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_rows(spark: SparkSession, path: str, files: tuple) -> int | None:
+    """Sum of the Parquet footers' record counts over the data files in
+    ``files`` (the :func:`_leaf_files` listing of ``path``): hidden
+    names are skipped and so are zero-length files, which a scan splits
+    into nothing. None when a visible file sits in a subdirectory (a
+    ``k=v`` partition layout, which the scan counts) or outside
+    ``path``."""
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm_class(spark, "org.apache.hadoop.fs.Path")
+    root = hpath(path)
+    root = root.getFileSystem(conf).makeQualified(root).toString()
+    data = []
+    for p, length, _ in files:
+        if p == root:  # the path is the file itself
+            rel = []
+        elif p.startswith(root + "/"):
+            rel = p[len(root) + 1 :].split("/")
+        else:
+            return None
+        if any(map(_hidden, rel)):
+            continue
+        if len(rel) > 1:
+            return None
+        if length:
+            data.append(p)
+    open_footer = jvm_class(spark, "org.apache.parquet.hadoop.ParquetFileReader").open
+    input_file = jvm_class(
+        spark, "org.apache.parquet.hadoop.util.HadoopInputFile"
+    ).fromPath
+    total = 0
+    for p in data:
+        reader = open_footer(input_file(hpath(p), conf))
+        try:
+            total += reader.getRecordCount()
+        finally:
+            reader.close()
+    return total
+
+
+def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of base table ``name`` (OP-04/22) read from metadata,
+    as the reference reads it from the warehouse catalog
+    (snowflake_table_monitor.py:57-62, redshift_database_monitor.py:36-44):
+    the sum of the Parquet footers' record counts through parquet-mr on
+    the JVM, so it works on any Hadoop FileSystem and launches no Spark
+    job. The count is memoized in the path's schema-memo entry, so the
+    listing that validates the schema validates the count too: a
+    rewritten, added or removed file invalidates both. A layout the
+    footer rule does not cover (a ``k=v`` partition subdirectory) or a
+    footer that cannot be read is counted by a count-star scan."""
+    path = f"{sf_dir}/{name}.parquet"
+    hit = _SCHEMAS.get(spark, {}).get(path)
+    try:
+        valid = hit is not None and hit[0] == _memo_key(spark, path)
+    except Py4JJavaError:
+        valid = False
+    if not valid:
+        # infers the schema (a cold path) and stores a fresh entry
+        load_table(spark, sf_dir, name)
+        hit = _SCHEMAS.get(spark, {}).get(path)
+    if hit is not None and hit[2] is None:
+        try:
+            hit[2] = _footer_rows(spark, path, hit[0][0])
+        except Py4JJavaError:
+            pass
+    if hit is None or hit[2] is None:
+        return load_table(spark, sf_dir, name).count()
+    return hit[2]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -364,10 +442,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ),
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

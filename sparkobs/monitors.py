@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkobs.io import load_tables
 from sparkobs.operators.metrics import to_metrics_long
 from sparkobs.operators.profile import duplicate_count, table_profile
 from sparkobs.operators.shape import shape_summary, table_shapes
@@ -58,7 +57,7 @@ def database_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rebuild of redshift_database_monitor / snowflake_database_monitor
     (redshift_database_monitor.py:59-116): per-schema shape metrics as a
     metric stream — table census, row/col extrema and centers."""
-    shapes = table_shapes(load_tables(spark, sf_dir))
+    shapes = table_shapes(spark, sf_dir)
     summary = shape_summary(shapes)
     return to_metrics_long(
         summary.select(F.lit("schema").alias("entity"), "*"),

@@ -149,15 +149,6 @@ def duplicate_count(df: DataFrame) -> DataFrame:
     )
 
 
-def record_count(df: DataFrame) -> DataFrame:
-    """Row count as a 1-row DataFrame (OP-22). Nothing is pushed down:
-    parquet reads through the V1 file source (it is in
-    ``spark.sql.sources.useV1SourceList``) and
-    ``spark.sql.parquet.aggregatePushdown`` is off, so the plan is a
-    column-less scan under a partial/final count."""
-    return df.agg(F.count(F.lit(1)).alias("record_count"))
-
-
 def numeric_histogram(df: DataFrame, column: str, bin_width: float, origin: float = 0.0) -> DataFrame:
     """Fixed-width histogram (OP-33, numeric flavor).
 

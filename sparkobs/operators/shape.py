@@ -9,34 +9,32 @@ instead of pandas loops + ``iterrows()`` metric emission.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-def table_shapes(dfs: dict[str, DataFrame]) -> DataFrame:
-    """(table_name, row_count, col_count) per table (OP-04/06/23).
+from sparkobs.io import TABLES, load_table, table_row_count
 
-    Row counts are per-table count-star aggregates union-ed into one
-    DataFrame. No count is pushed down: parquet reads through the V1
-    file source (it is in ``spark.sql.sources.useV1SourceList``) and
-    ``spark.sql.parquet.aggregatePushdown`` is off, so each table is a
-    column-less scan (``ReadSchema: struct<>``, no column data
-    decoded) under a partial/final count with its own single-partition
-    Exchange; under AQE every such shuffle is a job, and the 10-table
-    ``shape_summary_all`` runs 11 jobs. The reference's counts are
-    metadata-only (snowflake_table_monitor.py:57-62).
+
+def table_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(table_name, row_count, col_count) per base table (OP-04/06/23).
+
+    Metadata only, as in the reference, which reads row counts from
+    the warehouse catalog (snowflake_table_monitor.py:57-62,
+    redshift_database_monitor.py:36-44): ``row_count`` is
+    :func:`sparkobs.io.table_row_count` (Parquet footers) and
+    ``col_count`` the width of the table's remembered schema, so a warm
+    call launches no Spark job. The ten rows are a literal ``VALUES``
+    relation built in the JVM, not ``createDataFrame``, whose pickled
+    Python RDD would start a Python worker on every action.
     """
-    parts = [
-        df.agg(
-            F.lit(name).alias("table_name"),
-            F.count(F.lit(1)).alias("row_count"),
-            F.lit(len(df.columns)).cast("long").alias("col_count"),
-        )
-        for name, df in dfs.items()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    rows = ", ".join(
+        f"('{name}', CAST({table_row_count(spark, sf_dir, name)} AS BIGINT), "
+        f"CAST({len(load_table(spark, sf_dir, name).columns)} AS BIGINT))"
+        for name in TABLES
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(table_name, row_count, col_count)"
+    )
 
 
 def shape_summary(shapes: DataFrame) -> DataFrame:

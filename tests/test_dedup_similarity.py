@@ -5,6 +5,7 @@ import os
 from unittest.mock import patch
 
 import pytest
+from plan_helpers import jobs_in
 from pyspark.sql import functions as F
 
 from sparkobs.operators import dedup
@@ -618,28 +619,11 @@ def test_near_dup_groups_lsh_job_budget(spark, sf_dir):
         with patch.object(dedup, "DENSE_LSH_MAX_DOCS", 0):
             near_dup_groups(d, 3, 0.2, tier="lsh", hash_fn="md5").collect()
 
-    n = _jobs_in(spark, call)
+    n = jobs_in(spark, call)
     assert n <= LSH_GROUPS_JOB_BUDGET, (
         f"near_dup_groups(tier='lsh') launched {n} Spark jobs, budget "
         f"{LSH_GROUPS_JOB_BUDGET}"
     )
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs ``fn`` launches from call to return: the status
-    store's jobsList, filtered to a job group set for the call, so the
-    store's trimming of old jobs can never skew the count."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _dense_dispatch_calls(spark) -> dict:
@@ -722,7 +706,7 @@ DENSE_DISPATCH_JOB_BUDGETS = {
 @pytest.mark.parametrize("kernel", sorted(DENSE_DISPATCH_JOB_BUDGETS))
 def test_dense_dispatch_job_budget(spark, kernel):
     call = _dense_dispatch_calls(spark)[kernel]
-    n = _jobs_in(spark, call)
+    n = jobs_in(spark, call)
     budget = DENSE_DISPATCH_JOB_BUDGETS[kernel]
     assert n <= budget, f"{kernel} launched {n} Spark jobs, budget {budget}"
 

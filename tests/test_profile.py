@@ -11,7 +11,6 @@ from sparkobs.operators.profile import (
     null_counts,
     numeric_histogram,
     profile,
-    record_count,
 )
 
 
