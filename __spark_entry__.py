@@ -50,10 +50,41 @@ def entry(spark: SparkSession) -> DataFrame:
 GATE_SIZE = 50
 
 _PRIORITY: list[str] = [
-    "shape_summary_all",
-    "database_monitor_metrics",
-    "record_count_lineitem",
+    "streaming_tumbling_events",
+    "streaming_cdc_latest_events",
+    "streaming_jsonl_tumbling_events",
+    "streaming_count_drift",
+    "csv_roundtrip_orders",
+    "jsonl_roundtrip_events",
+    "orc_roundtrip_part",
+    "schema_merge_parquet_documents",
+    "partitioned_prune_documents",
+    "bucketed_join_orders_lineitem",
+    "streaming_session_events",
+    "streaming_sliding_events",
+    "jdbc_roundtrip_nation",
+    "jdbc_monitor_nation",
+    "streaming_dedup_documents",
+    "streaming_near_dup_candidates",
+    "streaming_incremental_band_index",
+    "streaming_cms_events",
+    "streaming_join_click_purchase",
+    "streaming_monitor_health_events",
     "compaction_execute_documents",
+    "streaming_kmeans_assign_embeddings",
+    "streaming_debounce_events",
+    "streaming_ks_drift_events",
+    "streaming_freshness_events",
+    "streaming_disorder_events",
+    "streaming_salted_distinct_events",
+    "streaming_slo_burn_events",
+    "zone_map_prune_orders",
+    "streaming_kmv_quantiles_events",
+    "streaming_hll_sliding_users_events",
+    "streaming_theta_intersection_events",
+    "streaming_theta_intersection_grouped_events",
+    "bucket_monitor_metrics",
+    "sql_monitor_lineitem",
 ]
 
 

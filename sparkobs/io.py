@@ -10,6 +10,12 @@ Parquet footers' record counts and runs no Spark job.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
+import re
+import shutil
+import tempfile
 import weakref
 
 from py4j.protocol import Py4JJavaError
@@ -33,29 +39,35 @@ TABLES = (
 )
 
 
-def zone_map_stage_dir(sf_dir: str) -> str:
-    """Canonical staging directory for the zone-map demo layout (a
-    range-partitioned rewrite of ``orders``), keyed by the RESOLVED
-    source path (first component) + its mtime (second component) —
-    regenerating orders.parquet in place, or two different trees
-    sharing a basename, can never be served a stale stage through the
-    ``_SUCCESS`` guard (the r7 review caught a basename-only key doing
-    exactly that). The two-component name lets
-    :func:`ensure_zone_map_stage` prune a source's PREDECESSOR stages
-    (same source key, older mtime key) without touching stages of
-    other sf dirs that are live concurrently. The placeholder
-    ``{ZM16_DIR}`` is resolved in PYTHON by :func:`oracle_substitute`,
-    so the hash never has to be expressible in SQL."""
-    import hashlib
-    import os
-    import tempfile
+#: what :func:`stage_dir` names: ``sparkobs_stage_<source key>_<version key>``
+_STAGE_NAME = re.compile(r"(sparkobs_stage_[0-9a-f]{16})_[0-9a-f]{8}")
 
-    src = os.path.join(os.path.realpath(sf_dir), "orders.parquet")
-    mtime = int(os.stat(src).st_mtime_ns) if os.path.exists(src) else 0
-    srckey = hashlib.sha256(f"{src}:zm16".encode()).hexdigest()[:12]
-    verkey = hashlib.sha256(str(mtime).encode()).hexdigest()[:8]
+#: the file :func:`ensure_stage` writes into a stage once it is built
+_STAGE_MARKER = "_SUCCESS"
+
+#: the zone-map layout (``orders`` range-partitioned into 16 files),
+#: read by ``zone_map_prune_orders`` and by its oracle as ``{ZM16_DIR}``
+ZM16_STAGE = (("orders",), "zm16")
+
+
+def stage_dir(sf_dir: str, tables: tuple[str, ...], tag: str) -> str:
+    """The directory of one staged layout: a derived on-disk copy of
+    ``tables`` under ``sf_dir`` that ``tag`` describes. The name has a
+    source key (the resolved sf-dir, the table names and the tag) and a
+    version key (each ``<table>.parquet``'s ``st_mtime_ns``, 0 when it
+    is missing): a source regenerated in place names a new stage, and
+    two sf-dirs sharing a basename never share one. Pure (no Spark
+    session), so :func:`oracle_substitute` resolves ``{ZM16_DIR}``
+    through it too."""
+    src = os.path.realpath(sf_dir)
+    mtimes = []
+    for t in tables:
+        path = os.path.join(src, f"{t}.parquet")
+        mtimes.append(os.stat(path).st_mtime_ns if os.path.exists(path) else 0)
+    srckey = hashlib.sha256(f"{src}:{list(tables)}:{tag}".encode()).hexdigest()
+    verkey = hashlib.sha256(str(mtimes).encode()).hexdigest()
     return os.path.join(
-        tempfile.gettempdir(), f"sparkobs_zm16_{srckey}_{verkey}"
+        tempfile.gettempdir(), f"sparkobs_stage_{srckey[:16]}_{verkey[:8]}"
     )
 
 
@@ -63,8 +75,6 @@ def _stage_owner_dead(name: str) -> bool:
     """.tmp<pid>/.aside<pid> suffixes embed the writer's pid: a
     leftover is prunable only once that process is gone (a LIVE
     concurrent stager's in-flight dirs must survive the sweep)."""
-    import os
-
     digits = ""
     for ch in reversed(name):
         if not ch.isdigit():
@@ -81,18 +91,19 @@ def _stage_owner_dead(name: str) -> bool:
         return False  # exists but not ours (EPERM) — leave it
 
 
-def _sweep_dead_stage_siblings(stage: str) -> None:
-    """Remove ``<stage>.tmp<pid>`` / ``<stage>.aside<pid>`` leftovers
-    whose writer process is gone (r8 ADVICE: a process dying between
-    the aside-rename and the rmtree otherwise leaks them forever)."""
-    import glob
-    import os
-    import shutil
-
-    base = os.path.basename(stage)
-    for sib in glob.glob(f"{stage}.*"):
+def _prune_stage_siblings(stage: str) -> None:
+    """Remove what sits next to ``stage`` before it is built: every
+    older version of its source key (a :func:`stage_dir` name) with
+    that version's leftovers, and ``<stage>.tmp<pid>`` /
+    ``<stage>.aside<pid>`` leftovers whose writer process is gone (a
+    process dying between the aside-rename and the rmtree otherwise
+    leaks them forever)."""
+    parent, base = os.path.split(stage)
+    named = _STAGE_NAME.fullmatch(base)
+    pattern = f"{named.group(1)}_*" if named else f"{base}.*"
+    for sib in glob.glob(os.path.join(parent, pattern)):
         nm = os.path.basename(sib)
-        if (
+        if not nm.startswith(base) or (
             nm != base
             and (".tmp" in nm or ".aside" in nm)
             and _stage_owner_dead(nm)
@@ -100,21 +111,18 @@ def _sweep_dead_stage_siblings(stage: str) -> None:
             shutil.rmtree(sib, ignore_errors=True)
 
 
-def _publish_stage(tmp: str, stage: str, marker: str) -> str:
+def _publish_stage(tmp: str, stage: str) -> str:
     """Atomically publish a fully-built ``tmp`` directory at ``stage``
     (one same-filesystem ``os.rename``), loser-safe: if the dest is
-    occupied, a COMPLETE occupant (its ``marker`` present) wins and
+    occupied, a COMPLETE occupant (its marker present) wins and
     ``tmp`` is discarded; a partial occupant is moved ASIDE atomically
     and replaced. NEVER rmtrees the stage path — between a marker check
     and a delete, a concurrent publisher could land a complete stage
     and the delete would take out live data mid-read (r8 review)."""
-    import os
-    import shutil
-
     try:
         os.rename(tmp, stage)
     except OSError:
-        if os.path.exists(os.path.join(stage, marker)):
+        if os.path.exists(os.path.join(stage, _STAGE_MARKER)):
             shutil.rmtree(tmp, ignore_errors=True)  # winner exists
         else:
             aside = f"{stage}.aside{os.getpid()}"
@@ -127,7 +135,7 @@ def _publish_stage(tmp: str, stage: str, marker: str) -> str:
                 shutil.rmtree(aside, ignore_errors=True)
             except OSError:
                 shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.exists(os.path.join(stage, marker)):
+                if not os.path.exists(os.path.join(stage, _STAGE_MARKER)):
                     raise RuntimeError(
                         f"stage {stage} could not be published and no "
                         "concurrent run produced it"
@@ -135,112 +143,47 @@ def _publish_stage(tmp: str, stage: str, marker: str) -> str:
     return stage
 
 
-def ensure_stage(stage: str, build, marker: str = "_SUCCESS") -> str:
-    """Idempotent, concurrency-safe cache staging (r9 verdict item 4:
-    ~16 check-then-write sites shared the race the zone-map staging
-    already solved — this is that discipline extracted as THE one
-    helper every ``sparkobs_*`` temp stage routes through).
+def ensure_stage(stage: str, build) -> str:
+    """Return ``stage`` (a :func:`stage_dir` path), building it first
+    when it is missing. Idempotent and safe under concurrent drivers.
 
-    ``build(tmp_dir)`` materializes the stage's full content into a
-    pid-keyed sibling directory; ``marker`` is a path RELATIVE to the
-    stage root whose existence means "complete" (Spark file writers
-    create ``_SUCCESS`` themselves; for other writers ensure_stage
-    stamps the marker after ``build`` returns). Publication is one
-    atomic ``os.rename``, so a concurrent reader either sees the old
-    complete stage, no stage, or the new complete stage — never a
-    half-written directory (the FileNotFoundException the r9 judge
-    reproduced with two concurrent sweeps). Crashed writers' leftovers
-    are swept once their pid is gone."""
-    import os
-    import shutil
-
-    if os.path.exists(os.path.join(stage, marker)):
+    A hit is one ``os.path.exists`` of the stage's marker. On a miss,
+    older versions of the same source key are removed (a stage of
+    another table, tag or sf-dir is never touched), and so are the
+    ``.tmp<pid>`` / ``.aside<pid>`` leftovers of this stage's dead
+    writers. ``build(tmp_dir)`` then writes the stage's full content
+    into a pid-keyed sibling directory; ensure_stage writes the marker
+    after ``build`` returns, and publishes the directory with one
+    atomic ``os.rename``. A concurrent reader sees the old complete
+    stage, no stage, or the new complete stage, never a half-written
+    one."""
+    if os.path.exists(os.path.join(stage, _STAGE_MARKER)):
         return stage
-    _sweep_dead_stage_siblings(stage)
+    _prune_stage_siblings(stage)
     tmp = f"{stage}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)  # our own earlier failure
     os.makedirs(os.path.dirname(tmp) or ".", exist_ok=True)
     build(tmp)
-    mark = os.path.join(tmp, marker)
-    if not os.path.exists(mark):
-        os.makedirs(os.path.dirname(mark), exist_ok=True)
-        with open(mark, "w") as fh:
-            fh.write("ok")
-    return _publish_stage(tmp, stage, marker)
+    os.makedirs(tmp, exist_ok=True)
+    open(os.path.join(tmp, _STAGE_MARKER), "a").close()
+    return _publish_stage(tmp, stage)
 
 
 def scratch_dir(prefix: str, key: str) -> str:
-    """Per-process SCRATCH directory (cleared by the caller each run,
-    not a cache): ``<tmp>/<prefix>_<key>_p<pid>``. Keying by pid makes
-    concurrent drivers collision-free (two sessions sharing a
-    deterministic scratch path clobbered each other's in-flight output
-    — the same hazard class as the staging race, r9 verdict item 4)
-    while repeated runs in ONE process still reuse a single path
-    instead of leaking a mkdtemp per invocation. Dead owners' scratch
-    of the same (prefix, key) is swept here, bounding the leak to at
-    most one dir per live process."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
+    """An empty per-process SCRATCH directory path (not a cache; it is
+    not created): ``<tmp>/<prefix>_<key>_p<pid>``. Keying by pid makes
+    concurrent drivers collision-free, while repeated runs in ONE
+    process reuse a single path instead of leaking one per call: what
+    an earlier call left there is removed. Dead owners' scratch of the
+    same (prefix, key) is swept here, bounding the leak to at most one
+    dir per live process."""
     base = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
     for sib in glob.glob(f"{base}_p*"):
         if _stage_owner_dead(os.path.basename(sib)):
             shutil.rmtree(sib, ignore_errors=True)
-    return f"{base}_p{os.getpid()}"
-
-
-def ensure_zone_map_stage(spark: SparkSession, sf_dir: str) -> str:
-    """Idempotently materialize the zone-map staged layout and return
-    its directory. Fixes the two r7 ADVICE hazards of the inline
-    check-then-write: (1) predecessors leak — every regeneration of
-    orders.parquet keyed a NEW stage and left the old range-partitioned
-    copy under the shared tempdir forever; staging now prunes siblings
-    that share this source's key but carry an older mtime key.
-    (2) concurrency — via :func:`ensure_stage` (the discipline this
-    site pioneered, now shared): the write lands in a ``.tmp<pid>``
-    sibling and is published by one atomic ``os.rename``, so
-    ``_SUCCESS`` is only ever visible inside a fully-written
-    directory."""
-    import glob
-    import os
-    import shutil
-
-    stage = zone_map_stage_dir(sf_dir)
-    if os.path.exists(os.path.join(stage, "_SUCCESS")):
-        return stage
-    base = os.path.basename(stage)
-    srcprefix = base.rsplit("_", 1)[0]  # sparkobs_zm16_<srckey>
-    for sib in glob.glob(
-        os.path.join(os.path.dirname(stage), f"{srcprefix}_*")
-    ):
-        nm = os.path.basename(sib)
-        if not nm.startswith(base):
-            # predecessor version keys of the SAME source (and their
-            # own .tmp/.aside leftovers — they share the version key)
-            shutil.rmtree(sib, ignore_errors=True)
-    # r8 ADVICE: stages written before the two-component key (legacy
-    # sparkobs_zm16_<16hex> single-key format) never match the
-    # srcprefix glob — sweep them here; nothing can still be serving
-    # them (the reader path resolves through zone_map_stage_dir, which
-    # only ever returns two-component names)
-    for sib in glob.glob(
-        os.path.join(os.path.dirname(stage), "sparkobs_zm16_*")
-    ):
-        rest = os.path.basename(sib)[len("sparkobs_zm16_"):]
-        if "_" not in rest.split(".", 1)[0]:
-            shutil.rmtree(sib, ignore_errors=True)
-
-    def _build(tmp: str) -> None:
-        (
-            load_table(spark, sf_dir, "orders")
-            .repartitionByRange(16, "o_orderdate")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-
-    return ensure_stage(stage, _build)
+    out = f"{base}_p{os.getpid()}"
+    shutil.rmtree(out, ignore_errors=True)
+    return out
 
 
 def oracle_substitute(sql: str, sf_dir: str) -> str:
@@ -251,12 +194,10 @@ def oracle_substitute(sql: str, sf_dir: str) -> str:
 
     - ``{SF_DIR}``   → the parquet directory under test
     - ``{ZM16_DIR}`` → the staged range-partitioned layout for the
-      zone-map queries (see :func:`zone_map_stage_dir`)
+      zone-map queries (:data:`ZM16_STAGE`)
     """
-    import os
-
     return sql.replace("{SF_DIR}", os.path.realpath(sf_dir)).replace(
-        "{ZM16_DIR}", zone_map_stage_dir(sf_dir)
+        "{ZM16_DIR}", stage_dir(sf_dir, *ZM16_STAGE)
     )
 
 

@@ -23,28 +23,23 @@ def table_monitor(df: DataFrame, table_name: str, exact: bool = True) -> DataFra
     (snowflake_table_monitor.py:88-95): full column profile + duplicate
     count as one long-format metric stream."""
     prof = table_profile(df, table_name, exact=exact)
-    prof_long = prof.select(
-        F.concat(F.col("table_name"), F.lit("."), F.col("col_name")).alias("entity"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("metric"), F.col(m).cast("double").alias("value")
-                    )
-                    for m in [
-                        "n_rows",
-                        "n_nulls",
-                        "n_distinct",
-                        "min_val",
-                        "max_val",
-                        "mean_val",
-                        "std_val",
-                        "median_val",
-                    ]
-                ]
-            )
-        ).alias("kv"),
-    ).select("entity", "kv.metric", "kv.value")
+    prof_long = to_metrics_long(
+        prof.select(
+            F.concat(F.col("table_name"), F.lit("."), F.col("col_name")).alias("entity"),
+            "*",
+        ),
+        "entity",
+        [
+            "n_rows",
+            "n_nulls",
+            "n_distinct",
+            "min_val",
+            "max_val",
+            "mean_val",
+            "std_val",
+            "median_val",
+        ],
+    )
     dups = duplicate_count(df).select(
         F.lit(table_name).alias("entity"),
         F.lit("duplicate_rows").alias("metric"),
@@ -79,25 +74,14 @@ def bucket_monitor(spark: SparkSession, root: str, glob: str | None = None) -> D
     (s3_bucket_monitor.py:42-135, s3_key_monitor.py:94-220): distributed
     listing → per-prefix metrics + whole-store rollup, one job."""
     listing = list_files_distributed(spark, root, glob)
-    per_prefix = prefix_stats(listing).select(
-        F.col("prefix").alias("entity"),
-        F.explode(
-            F.array(
-                F.struct(F.lit("n_objects").alias("metric"), F.col("n_objects").cast("double").alias("value")),
-                F.struct(F.lit("total_bytes").alias("metric"), F.col("total_bytes").cast("double").alias("value")),
-                F.struct(F.lit("mean_size_mb").alias("metric"), F.col("mean_size_mb").cast("double").alias("value")),
-            )
-        ).alias("kv"),
-    ).select("entity", "kv.metric", "kv.value")
-    store = storage_stats(listing).select(
-        F.lit("<store>").alias("entity"),
-        F.explode(
-            F.array(
-                F.struct(F.lit("n_objects").alias("metric"), F.col("n_objects").cast("double").alias("value")),
-                F.struct(F.lit("total_mb").alias("metric"), F.col("total_mb").cast("double").alias("value")),
-            )
-        ).alias("kv"),
-    ).select("entity", "kv.metric", "kv.value")
+    per_prefix = to_metrics_long(
+        prefix_stats(listing), "prefix", ["n_objects", "total_bytes", "mean_size_mb"]
+    )
+    store = to_metrics_long(
+        storage_stats(listing).select(F.lit("<store>").alias("entity"), "*"),
+        "entity",
+        ["n_objects", "total_mb"],
+    )
     return per_prefix.unionByName(store)
 
 

@@ -13,4 +13,11 @@ Each module rebuilds one capability area of the reference (SURVEY.md §2):
 - :mod:`cluster`   — distributed Lloyd k-means (fixed-point, oracle-exact)
 - :mod:`graph`     — PageRank link analysis (fixed-point, oracle-exact)
 - :mod:`multimodal`— opaque binary columns + Arrow-batched decode plumbing
+- :mod:`behavior`  — funnels, cohort retention, time-series resampling
+- :mod:`bpe`       — distributed BPE tokenizer training and application
+- :mod:`checks`    — declarative data-quality check suites
+- :mod:`features`  — group-wise normalization, outlier clipping
+- :mod:`joins`     — as-of, positional zip, set-op and salted joins
+- :mod:`lm`        — n-gram language-model scoring for corpus filtering
+- :mod:`sampling`  — deterministic hash-mod sampling, sampled aggregates with CIs
 """

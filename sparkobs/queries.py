@@ -17,7 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkobs.io import load_table
+from sparkobs.io import ensure_stage, load_table, scratch_dir, stage_dir
 from sparkobs.session import jvm_class
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1332,40 +1332,14 @@ def frame_sample_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stage_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Stage the events table as a small multi-file parquet directory
-    for the file-source streams. Cache key = _stage_key's resolved
-    path + source mtime + file count, so a changed source or two
-    datasets sharing a basename never reuse each other's stage
-    (ADVICE r01: basename-only keys served stale results)."""
-    import os
-    import tempfile
-
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "events", str(n_files))
-    stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_stream_{key}")
+    for the file-source streams."""
     return ensure_stage(
-        stage_dir,
+        stage_dir(sf_dir, ("events",), f"stream:{n_files}"),
         lambda tmp: load_table(spark, sf_dir, "events")
         .coalesce(n_files)
         .write.mode("overwrite")
         .parquet(tmp),
     )
-
-
-def _fresh_scratch(prefix: str, sf_dir: str) -> str:
-    """Empty per-process scratch directory for one streaming twin's
-    output over ``sf_dir`` (see :func:`sparkobs.io.scratch_dir`):
-    repeated runs reuse one path, concurrent drivers never share it."""
-    import hashlib
-    import os
-    import shutil
-
-    from sparkobs.io import scratch_dir
-
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    out = scratch_dir(prefix, key)
-    shutil.rmtree(out, ignore_errors=True)
-    return out
 
 
 def _drain_event_partials(
@@ -1380,13 +1354,15 @@ def _drain_event_partials(
     is returned for the twin to merge and certify."""
     from sparkobs.streaming.monitors import drain, stream_events
 
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    state_dir = _fresh_scratch(prefix, sf_dir)
+    import os
+
+    stage = _stage_events(spark, sf_dir, n_files=4)
+    state_dir = scratch_dir(prefix, os.path.basename(stage))
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         partial(batch_df).write.mode("append").parquet(state_dir)
 
-    stream = stream_events(spark, stage_dir, files_per_trigger=1)
+    stream = stream_events(spark, stage, files_per_trigger=1)
     drain(stream.writeStream.foreachBatch(ingest), prefix)
     return state_dir
 
@@ -1407,8 +1383,8 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from sparkobs.streaming.monitors import run_to_memory, stream_events, streaming_tumbling
 
-    stage_dir = _stage_events(spark, sf_dir)
-    out = streaming_tumbling(stream_events(spark, stage_dir), "1 hour")
+    stage = _stage_events(spark, sf_dir)
+    out = streaming_tumbling(stream_events(spark, stage), "1 hour")
     tbl = run_to_memory(out, "tumbling_stream", output_mode="complete",
                         shuffle_partitions=4)
     return spark.table(tbl).select("window_start", "n_events", "sum_value")
@@ -1447,8 +1423,8 @@ def streaming_cdc_latest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    stage_dir = _stage_events_split(spark, sf_dir)
-    out = stateful_latest(stream_events(spark, stage_dir, files_per_trigger=1))
+    stage = _stage_events_split(spark, sf_dir)
+    out = stateful_latest(stream_events(spark, stage, files_per_trigger=1))
     # JVM max_by state (r11): the state tasks are cheap enough that a
     # narrow width now wins — under the old Python-state form sp=4
     # measured SLOWER (worker parallelism mattered); re-measured after
@@ -1479,45 +1455,49 @@ def streaming_jsonl_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFra
         streaming_tumbling,
     )
 
-    stage_dir = _stage_format(spark, sf_dir, "events", "json")
+    stage = _stage_format(spark, sf_dir, "events", "json")
     out = streaming_tumbling(
-        stream_jsonl(spark, stage_dir, EVENTS_SCHEMA), "1 hour"
+        stream_jsonl(spark, stage, EVENTS_SCHEMA), "1 hour"
     )
     tbl = run_to_memory(out, "jsonl_stream", output_mode="complete",
                         shuffle_partitions=4)
     return spark.table(tbl).select("window_start", "n_events", "sum_value")
 
 
+def _write_ordered_files(build: str, slices: list[DataFrame]) -> None:
+    """Write each frame of ``slices`` as one parquet file of ``build``,
+    ``chunk-<i>.parquet``, with strictly increasing mtimes: a file
+    stream with maxFilesPerTrigger=1 then reads slice i as batch i
+    (FileStreamSource takes new files oldest first, and the part files
+    of one job can tie). The mtimes survive the stage's publish rename
+    (inode metadata)."""
+    import glob
+    import os
+    import shutil
+
+    os.makedirs(build)
+    base = 1_700_000_000
+    for i, df in enumerate(slices):
+        tmp = os.path.join(build, f"__tmp{i}")
+        df.coalesce(1).write.parquet(tmp)
+        dst = os.path.join(build, f"chunk-{i:05d}.parquet")
+        shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (base + i, base + i))
+
+
 def _stage_events_split(spark: SparkSession, sf_dir: str) -> str:
     """Two-file event stage with DETERMINISTIC batch boundaries for the
-    stateful drift oracle: file 1 = even event_ids, file 2 = odd, with
-    forced mtime ordering so maxFilesPerTrigger=1 always yields batch 1
-    = evens, batch 2 = odds (the file source processes oldest-first)."""
-    import glob as _glob
-    import os
-    import tempfile
-    import time
-
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "events", "split2")
-    stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_stream_{key}")
+    stateful drift oracle: maxFilesPerTrigger=1 always yields batch 1
+    = even event_ids, batch 2 = odd."""
 
     def _build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.where("event_id % 2 = 0").coalesce(1).write.mode("overwrite").parquet(tmp)
-        first = set(_glob.glob(os.path.join(tmp, "*.parquet")))
-        ev.where("event_id % 2 = 1").coalesce(1).write.mode("append").parquet(tmp)
-        second = set(_glob.glob(os.path.join(tmp, "*.parquet"))) - first
-        now = time.time()
-        for f in first:
-            os.utime(f, (now - 100, now - 100))
-        for f in second:
-            os.utime(f, (now, now))
+        _write_ordered_files(
+            tmp, [ev.where("event_id % 2 = 0"), ev.where("event_id % 2 = 1")]
+        )
 
-    # utimes survive the publish rename (inode metadata), so the
-    # mtime-ordered split is intact in the published stage
-    return ensure_stage(stage_dir, _build, marker="_SPLIT_STAGED")
+    return ensure_stage(stage_dir(sf_dir, ("events",), "split2"), _build)
 
 
 @query(
@@ -1546,8 +1526,8 @@ def streaming_count_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    stage_dir = _stage_events_split(spark, sf_dir)
-    out = stateful_count_drift(stream_events(spark, stage_dir, files_per_trigger=1))
+    stage = _stage_events_split(spark, sf_dir)
+    out = stateful_count_drift(stream_events(spark, stage, files_per_trigger=1))
     tbl = run_to_memory(out, "drift_stream", output_mode="update", shuffle_partitions=2)
     return spark.table(tbl)
 
@@ -1564,11 +1544,7 @@ def _stage_format(
     n_files: int = 2,
 ) -> str:
     """Stage a parquet table in another file format (csv/json/orc) for
-    the format-connector round-trip queries; same resolved-path+mtime
-    cache key discipline as _stage_events."""
-    import os
-    import tempfile
-
+    the format-connector round-trip queries."""
     # options + file count are part of the identity: a header=False
     # staging of the same table must not reuse a header=True stage.
     # _FMT_CONVENTION_V versions the RESOLVED writer/reader defaults
@@ -1582,13 +1558,10 @@ def _stage_format(
         f"{fmt}:{n_files}:v{_FMT_CONVENTION_V}:"
         f"{sorted((options or {}).items())!r}"
     )
-    key = _stage_key(sf_dir, table, tag)
-    from sparkobs.io import ensure_stage
     from sparkobs.sources.files import write_format
 
-    stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_fmt_{key}")
     return ensure_stage(
-        stage_dir,
+        stage_dir(sf_dir, (table,), f"fmt:{tag}"),
         lambda tmp: write_format(
             load_table(spark, sf_dir, table),
             tmp,
@@ -1715,17 +1688,6 @@ def orc_roundtrip_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stage_key(sf_dir: str, table: str, tag: str) -> str:
-    """Cache key for staged layouts: resolved path + source mtime + tag
-    (same discipline as _stage_events)."""
-    import hashlib
-    import os
-
-    src = os.path.join(os.path.realpath(sf_dir), f"{table}.parquet")
-    mtime = int(os.stat(src).st_mtime_ns) if os.path.exists(src) else 0
-    return hashlib.sha256(f"{src}:{mtime}:{tag}".encode()).hexdigest()[:16]
-
-
 @query(
     "schema_merge_parquet_documents",
     oracle="""
@@ -1762,15 +1724,10 @@ def schema_merge_parquet_documents(spark: SparkSession, sf_dir: str) -> DataFram
     census proving older files surface the added columns as nulls;
     oracle = the same union painted from the original table."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from sparkobs.sources.files import read_parquet_merged
-
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "documents", "schema_evolution:v1")
 
     def _build(tmp: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -1782,9 +1739,7 @@ def schema_merge_parquet_documents(spark: SparkSession, sf_dir: str) -> DataFram
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "gen2"))
 
     stage = ensure_stage(
-        os.path.join(tempfile.gettempdir(), f"sparkobs_evo_{key}"),
-        _build,
-        marker=os.path.join("gen2", "_SUCCESS"),
+        stage_dir(sf_dir, ("documents",), "schema_evolution:v1"), _build
     )
     merged = read_parquet_merged(spark, os.path.join(stage, "gen*"))
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
@@ -1817,18 +1772,12 @@ def partitioned_prune_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan lists only the lang=en directory (PartitionFilters;
     plan-pinned in tests). Oracle = the same filter over the original
     parquet, so the partition round-trip is value-hash-certified."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from sparkobs.io import write_partitioned
 
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "documents", "part_lang")
     stage = ensure_stage(
-        os.path.join(tempfile.gettempdir(), f"sparkobs_part_{key}"),
+        stage_dir(sf_dir, ("documents",), "part_lang"),
         lambda tmp: write_partitioned(
             load_table(spark, sf_dir, "documents"), tmp, ["lang"]
         ),
@@ -1862,28 +1811,20 @@ def bucketed_join_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
     at write time (plan-pinned: no Exchange in the join plan). Oracle =
     the plain join over the original parquet."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from sparkobs.io import write_bucketed_table
 
-    from sparkobs.io import ensure_stage
-
-    # the key covers BOTH source tables' mtimes — a regenerated
-    # orders.parquet must trigger a rebuild, not a stale read; the
-    # stage dir (atomic, ensure_stage) and the session catalog entries
-    # are ensured SEPARATELY because saveAsTable cannot publish
-    # atomically: the bucketed files are written under throwaway
-    # pid-keyed catalog names into the tmp dir, published by one
-    # rename, and the durable catalog tables are then declared as
-    # EXTERNAL bucketed tables over the published path (explicit DDL —
-    # CLUSTERED BY requires a column list)
-    key = _stage_key(
-        sf_dir, "orders", "bucket8:" + _stage_key(sf_dir, "lineitem", "bucket8")
-    )
-    o_name, l_name = f"orders_b_{key}", f"lineitem_b_{key}"
-
+    # the stage covers BOTH source tables — a regenerated orders.parquet
+    # must trigger a rebuild, not a stale read; the stage dir (atomic,
+    # ensure_stage) and the session catalog entries are ensured
+    # SEPARATELY because saveAsTable cannot publish atomically: the
+    # bucketed files are written under throwaway pid-keyed catalog
+    # names into the tmp dir, published by one rename, and the durable
+    # catalog tables are then declared as EXTERNAL bucketed tables over
+    # the published path (explicit DDL — CLUSTERED BY requires a column
+    # list)
     def _build(tmp: str) -> None:
         for tbl, col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
             wname = f"{tbl}_bw_p{os.getpid()}"
@@ -1897,11 +1838,9 @@ def bucketed_join_orders_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame
             # external table: dropping the name leaves the files
             spark.sql(f"DROP TABLE IF EXISTS {wname}")
 
-    base = ensure_stage(
-        os.path.join(tempfile.gettempdir(), f"sparkobs_bucket_{key}"),
-        _build,
-        marker="_BUCKETS_STAGED",
-    )
+    base = ensure_stage(stage_dir(sf_dir, ("orders", "lineitem"), "bucket8"), _build)
+    key = os.path.basename(base)
+    o_name, l_name = f"orders_b_{key}", f"lineitem_b_{key}"
     for tbl, nm, col in (
         ("orders", o_name, "o_orderkey"),
         ("lineitem", l_name, "l_orderkey"),
@@ -2394,8 +2333,8 @@ def streaming_session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window merge must equal the batch islands oracle."""
     from sparkobs.streaming.monitors import run_to_memory, stream_events, streaming_session
 
-    stage_dir = _stage_events(spark, sf_dir)
-    out = streaming_session(stream_events(spark, stage_dir), "30 minutes")
+    stage = _stage_events(spark, sf_dir)
+    out = streaming_session(stream_events(spark, stage), "30 minutes")
     tbl = run_to_memory(out, "session_stream", output_mode="complete",
                         shuffle_partitions=4)
     return spark.table(tbl).select("user_id", "session_start", "n_events")
@@ -2693,8 +2632,8 @@ def streaming_sliding_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkobs.streaming.monitors import _event_time, _to_ntz, run_to_memory, stream_events
 
-    stage_dir = _stage_events(spark, sf_dir)
-    ev = _event_time(stream_events(spark, stage_dir)).withWatermark("ts", "2 hours")
+    stage = _stage_events(spark, sf_dir)
+    ev = _event_time(stream_events(spark, stage)).withWatermark("ts", "2 hours")
     out = (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -2764,25 +2703,14 @@ def _stage_derby_nation(spark: SparkSession, sf_dir: str) -> str:
     """Stage the nation table into an embedded Derby database so the
     JDBC queries exercise a REAL external-DB pull (the driver that
     ships in Spark's own jars — no external service). Cache key =
-    resolved sf_dir + source mtime, same staleness rule as
-    _stage_events; returns the JDBC URL."""
-    import hashlib
-    import os
+    returns the JDBC URL."""
     import shutil
-    import tempfile
 
     from sparkobs.sources.jdbc import (
         DERBY_EMBEDDED_DRIVER,
         derby_url,
         write_jdbc,
     )
-
-    from sparkobs.io import ensure_stage
-
-    src = os.path.join(os.path.realpath(sf_dir), "nation.parquet")
-    mtime = int(os.stat(src).st_mtime_ns) if os.path.exists(src) else 0
-    key = hashlib.sha256(f"{src}:{mtime}".encode()).hexdigest()[:16]
-    db_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_derby_{key}")
 
     def _build(tmp: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)  # Derby insists on create
@@ -2809,11 +2737,9 @@ def _stage_derby_nation(spark: SparkSession, sf_dir: str) -> str:
         except Exception:  # noqa: BLE001 — 08006 IS the success signal
             pass
 
-    # marker lives INSIDE the db dir: Derby ignores foreign files, and
-    # the old sibling ".staged" file could outlive a swept dir (stale
-    # marker, no database)
-    ensure_stage(db_dir, _build, marker="_STAGED")
-    return derby_url(db_dir)
+    # the stage marker lives INSIDE the db dir: Derby ignores foreign
+    # files
+    return derby_url(ensure_stage(stage_dir(sf_dir, ("nation",), "derby"), _build))
 
 
 @query(
@@ -3877,20 +3803,12 @@ def _stage_documents(
     spark: SparkSession, sf_dir: str, n_files: int = 2, spread: bool = False
 ) -> str:
     """Stage the documents table as a deterministic multi-file parquet
-    directory for file-source streams (same mtime-keyed cache scheme as
-    _stage_events). ``spread=True`` hash-partitions on doc_id instead
-    of coalescing — near-dup documents are ADJACENT in the corpus, so
-    coalesce keeps whole dup clusters inside one file; the hash spread
-    puts them in different files (= different micro-batches), which is
-    what cross-batch incremental-index tests need. Both assignments are
-    deterministic."""
-    import os
-    import tempfile
-
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "documents", f"{n_files}:{spread}")
-    stage_dir = os.path.join(tempfile.gettempdir(), f"sparkobs_docstream_{key}")
+    directory for file-source streams. ``spread=True`` hash-partitions
+    on doc_id instead of coalescing — near-dup documents are ADJACENT
+    in the corpus, so coalesce keeps whole dup clusters inside one
+    file; the hash spread puts them in different files (= different
+    micro-batches), which is what cross-batch incremental-index tests
+    need. Both assignments are deterministic."""
 
     def _build(tmp: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -3899,7 +3817,9 @@ def _stage_documents(
         )
         docs.write.mode("overwrite").parquet(tmp)
 
-    return ensure_stage(stage_dir, _build)
+    return ensure_stage(
+        stage_dir(sf_dir, ("documents",), f"docstream:{n_files}:{spread}"), _build
+    )
 
 
 @query(
@@ -3918,12 +3838,12 @@ def streaming_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkobs.streaming.monitors import run_to_memory
 
-    stage_dir = _stage_documents(spark, sf_dir)
+    stage = _stage_documents(spark, sf_dir)
     stream = (
         spark.readStream.schema(
             "doc_id bigint, text string, lang string, source string, n_chars bigint"
         )
-        .parquet(stage_dir)
+        .parquet(stage)
         .select(F.md5("text").alias("fp"))
         .dropDuplicates(["fp"])
     )
@@ -4254,12 +4174,14 @@ def streaming_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
     bucketed table and each micro-batch joins only its colliding
     buckets; exact-Jaccard verification runs downstream on candidates
     exactly as in minhash_lsh_pairs."""
+    import os
+
     from pyspark.sql import functions as F
 
     from sparkobs.operators.dedup import minhash_banded
     from sparkobs.streaming.monitors import drain
 
-    stage_dir = _stage_documents(spark, sf_dir)
+    stage = _stage_documents(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     # persist the static band index ONCE before the stream starts —
     # without this, every foreachBatch call (and every bench rep) would
@@ -4270,14 +4192,14 @@ def streaming_near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame
         .persist()
     )
     index.count()
-    out_dir = _fresh_scratch("sparkobs_snd", sf_dir)
+    out_dir = scratch_dir("sparkobs_snd", os.path.basename(stage))
 
     def enrich(batch_df, batch_id):
         _snd_batch_cands(batch_df, index).write.mode("append").parquet(out_dir)
 
     stream = spark.readStream.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).parquet(stage_dir)
+    ).parquet(stage)
     try:
         drain(stream.writeStream.foreachBatch(enrich), "streaming_near_dup")
     finally:
@@ -4332,8 +4254,8 @@ def streaming_incremental_band_index(spark: SparkSession, sf_dir: str) -> DataFr
     from sparkobs.operators.dedup import minhash_banded
     from sparkobs.streaming.monitors import drain
 
-    stage_dir = _stage_documents(spark, sf_dir, n_files=4, spread=True)
-    base = _fresh_scratch("sparkobs_sibi", sf_dir)
+    stage = _stage_documents(spark, sf_dir, n_files=4, spread=True)
+    base = scratch_dir("sparkobs_sibi", os.path.basename(stage))
     index_dir = os.path.join(base, "index")
     out_dir = os.path.join(base, "cands")
 
@@ -4359,7 +4281,7 @@ def streaming_incremental_band_index(spark: SparkSession, sf_dir: str) -> DataFr
             "doc_id bigint, text string, lang string, source string, n_chars bigint"
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
+        .parquet(stage)
     )
     # narrow shuffle width: each micro-batch joins ~1/4 of the staged
     # fixture — 32-wide exchanges per batch are pure scheduling
@@ -5197,9 +5119,9 @@ def streaming_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
         stream_stream_join_within,
     )
 
-    stage_dir = _stage_events(spark, sf_dir, n_files=4)
-    left = stream_events(spark, stage_dir).where(F.col("event_type") == "click")
-    right = stream_events(spark, stage_dir).where(
+    stage = _stage_events(spark, sf_dir, n_files=4)
+    left = stream_events(spark, stage).where(F.col("event_type") == "click")
+    right = stream_events(spark, stage).where(
         F.col("event_type") == "purchase"
     )
     j = stream_stream_join_within(left, right, key_col="user_id", within="1 hour")
@@ -7064,8 +6986,8 @@ def streaming_monitor_health_events(spark: SparkSession, sf_dir: str) -> DataFra
         stream_events,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
-    ev = _event_time(stream_events(spark, stage_dir))
+    stage = _stage_events(spark, sf_dir)
+    ev = _event_time(stream_events(spark, stage))
     hourly = (
         ev.withWatermark("ts", "2 hours")
         .groupBy(
@@ -7915,15 +7837,11 @@ def compaction_execute_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny target is sized to the test corpus so the audit exercises
     MULTIPLE merge groups; real lakes pass row-group-sized targets.)"""
     import os
-    import tempfile
 
     from sparkobs.sources.listing import compaction_execute, list_files
 
-    from sparkobs.io import ensure_stage, scratch_dir
-
-    key = _stage_key(sf_dir, "documents", "compact16")
     stage = ensure_stage(
-        os.path.join(tempfile.gettempdir(), f"sparkobs_frag_{key}"),
+        stage_dir(sf_dir, ("documents",), "compact16"),
         lambda tmp: load_table(spark, sf_dir, "documents")
         .repartition(16)
         .write.mode("overwrite")
@@ -7931,7 +7849,7 @@ def compaction_execute_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-process scratch: two concurrent drivers compacting the same
     # corpus must not interleave writes into one output dir
-    out_dir = scratch_dir("sparkobs_compact", key)
+    out_dir = scratch_dir("sparkobs_compact", os.path.basename(stage))
     listing = list_files(spark, stage).where(
         F.col("path").endswith(".parquet")
     )
@@ -9643,8 +9561,6 @@ def streaming_kmeans_assign_embeddings(
     training oracle's own assignment CTEs — the continuous scorer
     must reproduce the fit's final assignment bit for bit."""
     import json
-    import os
-    import tempfile
 
     from sparkobs.operators.cluster import C_SUBSCALE, VQ_SCALE, _fit
     from sparkobs.streaming.monitors import run_to_memory
@@ -9653,11 +9569,8 @@ def streaming_kmeans_assign_embeddings(
     _, cents, _ = _fit(emb, "vec_id", "embedding", k=8, iters=2)
     cent_rows = cents.orderBy("cluster").collect()  # k x dim ints, bounded
 
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "embeddings", "stream4")
     stage = ensure_stage(
-        os.path.join(tempfile.gettempdir(), f"sparkobs_stream_emb_{key}"),
+        stage_dir(sf_dir, ("embeddings",), "stream4"),
         lambda tmp: emb.coalesce(4).write.mode("overwrite").parquet(tmp),
     )
 
@@ -9736,9 +9649,9 @@ def streaming_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_debounce,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
+    stage = _stage_events(spark, sf_dir)
     out = streaming_debounce(
-        stream_events(spark, stage_dir),
+        stream_events(spark, stage),
         ["user_id", "event_type"],
         gap_seconds=600,
     )
@@ -9790,9 +9703,9 @@ def streaming_ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_binned_counts,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
+    stage = _stage_events(spark, sf_dir)
     cells_stream = streaming_binned_counts(
-        stream_events(spark, stage_dir), lo=0.0, hi=600.0, n_bins=100
+        stream_events(spark, stage), lo=0.0, hi=600.0, n_bins=100
     )
     tbl = run_to_memory(
         cells_stream, "ks_cells_stream", output_mode="complete",
@@ -10182,8 +10095,8 @@ def streaming_freshness_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_freshness,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
-    out = streaming_freshness(stream_events(spark, stage_dir))
+    stage = _stage_events(spark, sf_dir)
+    out = streaming_freshness(stream_events(spark, stage))
     tbl = run_to_memory(
         out, "freshness_stream", output_mode="complete",
         shuffle_partitions=2,
@@ -10764,60 +10677,26 @@ def _stage_events_arrival_ordered(
 ) -> str:
     """Stage events as ``n_files`` parquet files that a file-source
     stream is GUARANTEED to deliver in arrival (event_id) order:
-    range-split by event_id, written one file per slice in ascending
-    order with strictly increasing mtimes (FileStreamSource orders
-    new files by modification time — same-job part files can tie and
-    list in any order, which would scramble the arrival sequence the
-    disorder diagnostic measures). Same mtime-keyed cache discipline
-    as queries._stage_events."""
-    import glob
-    import os
-    import shutil
-    import tempfile
+    range-split by event_id, one file per slice in ascending order
+    (see :func:`_write_ordered_files`) — a scrambled file order would
+    scramble the arrival sequence the disorder diagnostic measures."""
 
-    from sparkobs.io import ensure_stage
-
-    key = _stage_key(sf_dir, "events", f"arrival{n_files}")
-    stage_dir = os.path.join(
-        tempfile.gettempdir(), f"sparkobs_stream_{key}"
-    )
-
-    # r8 ADVICE (now the shared ensure_stage discipline, r9 item 4):
-    # build into a pid-keyed tmp dir and publish by one atomic rename —
-    # the old check-then-rmtree/makedirs raced a concurrent driver
-    # staging the same sf_dir and could rmtree a stage mid-read
-    def _build(build: str) -> None:
-        os.makedirs(build)
+    def _build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-        base = 1_700_000_000
         if lo is None:
-            # r8 ADVICE: empty events used to TypeError on span
-            # arithmetic. Stage one empty schema-bearing chunk so the
-            # file stream still starts and drains zero rows.
-            tmp = os.path.join(build, "__tmp0")
-            ev.repartition(1).write.mode("overwrite").parquet(tmp)
-            parts = glob.glob(os.path.join(tmp, "part-*.parquet"))
-            if parts:
-                dst = os.path.join(build, "chunk-00000.parquet")
-                shutil.move(parts[0], dst)
-                os.utime(dst, (base, base))
-            shutil.rmtree(tmp)
-        else:
-            span = (hi - lo + 1 + n_files - 1) // n_files
-            for i in range(n_files):
-                a, b = lo + i * span, lo + (i + 1) * span
-                tmp = os.path.join(build, f"__tmp{i}")
-                ev.where(
-                    (F.col("event_id") >= a) & (F.col("event_id") < b)
-                ).coalesce(1).write.mode("overwrite").parquet(tmp)
-                part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-                dst = os.path.join(build, f"chunk-{i:05d}.parquet")
-                shutil.move(part, dst)
-                shutil.rmtree(tmp)
-                os.utime(dst, (base + i, base + i))
+            # empty events: one empty schema-bearing file, so the file
+            # stream still starts and drains zero rows
+            _write_ordered_files(tmp, [ev])
+            return
+        span = (hi - lo + 1 + n_files - 1) // n_files
+        _write_ordered_files(tmp, [
+            ev.where((F.col("event_id") >= lo + i * span)
+                     & (F.col("event_id") < lo + (i + 1) * span))
+            for i in range(n_files)
+        ])
 
-    return ensure_stage(stage_dir, _build, marker="_STAGED")
+    return ensure_stage(stage_dir(sf_dir, ("events",), f"arrival{n_files}"), _build)
 
 
 @query(
@@ -10865,9 +10744,9 @@ def streaming_disorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
     )
 
-    stage_dir = _stage_events_arrival_ordered(spark, sf_dir)
+    stage = _stage_events_arrival_ordered(spark, sf_dir)
     out = stateful_disorder(
-        stream_events(spark, stage_dir, files_per_trigger=1)
+        stream_events(spark, stage, files_per_trigger=1)
     )
     tbl = run_to_memory(
         out, "disorder_stream", output_mode="update",
@@ -10915,9 +10794,9 @@ def streaming_salted_distinct_events(
         stream_events,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
+    stage = _stage_events(spark, sf_dir)
     out = stateful_salted_distinct(
-        stream_events(spark, stage_dir, files_per_trigger=1)
+        stream_events(spark, stage, files_per_trigger=1)
     )
     tbl = run_to_memory(
         out, "salted_distinct_stream", output_mode="update",
@@ -11145,9 +11024,9 @@ def streaming_slo_burn_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_error_counts,
     )
 
-    stage_dir = _stage_events(spark, sf_dir)
+    stage = _stage_events(spark, sf_dir)
     out = streaming_error_counts(
-        stream_events(spark, stage_dir), F.col("event_type") == "error"
+        stream_events(spark, stage), F.col("event_type") == "error"
     )
     tbl = run_to_memory(
         out, "slo_burn_stream", output_mode="complete",
@@ -11401,10 +11280,16 @@ def zone_map_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned/full/partial class, exact integers + one unrounded share.
     At 100 TB the map is built once (or read from footers) and every
     subsequent predicate estimate is metadata-only."""
-    from sparkobs.io import ensure_zone_map_stage
+    from sparkobs.io import ZM16_STAGE
     from sparkobs.sources.listing import zone_map_build, zone_map_prune_estimate
 
-    stage = ensure_zone_map_stage(spark, sf_dir)
+    stage = ensure_stage(
+        stage_dir(sf_dir, *ZM16_STAGE),
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .repartitionByRange(16, "o_orderdate")
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     zmap = zone_map_build(spark, stage, "o_orderdate")
     return zone_map_prune_estimate(
         zmap,

@@ -335,11 +335,10 @@ def compaction_execute(
     ``src_root``: the directory that holds the listed files. The
     reader reads the WHOLE directory and the broadcast join prunes it
     to the listed files, so a million-file listing never becomes a
-    million reader paths on the driver. The caller vouches that every
-    Parquet file the directory read sees shares the listed files'
-    schema: without ``mergeSchema`` the read infers its schema from one
-    footer, so a narrower unlisted sibling could drop listed-only
-    columns from the rewrite.
+    million reader paths on the driver. The directory is read with the
+    schema of a listed file: inferred from the directory, the schema
+    would come from one footer that may be an unlisted sibling's, and
+    a narrower sibling would drop listed-only columns from the rewrite.
     """
     # scheme-insensitive path key: Hadoop listings say file:/x,
     # input_file_name says file:///x
@@ -347,8 +346,9 @@ def compaction_execute(
     assign = compaction_assign(listing, target_bytes).select(
         norm(F.col("path")).alias("__src"), "group_id"
     )
+    schema = spark.read.parquet(listing.select("path").first()["path"]).schema
     rows = (
-        spark.read.parquet(src_root)
+        spark.read.schema(schema).parquet(src_root)
         .withColumn("__src", norm(F.input_file_name()))
         .join(F.broadcast(assign), "__src")
     )

@@ -1282,6 +1282,58 @@ def test_compaction_execute_prunes_a_subset_listing(spark, tmp_path):
     assert all(r["n_files_out"] == 1 for r in rows)
 
 
+def test_compaction_execute_subset_keeps_columns_vs_schema_sibling(
+    spark, tmp_path
+):
+    """A subset listing in a directory whose unlisted sibling has a
+    NARROWER schema must keep every listed-file column in the rewrite:
+    a directory read that infers its schema can take the sibling's
+    footer and drop `v` silently."""
+    import os
+
+    from sparkobs.sources.listing import compaction_execute, list_files
+
+    src = os.path.join(str(tmp_path), "mixed")
+    out = os.path.join(str(tmp_path), "compacted")
+    os.makedirs(src)
+    spark.range(500).selectExpr("id", "id % 7 AS v").coalesce(1).write.parquet(
+        os.path.join(src, "wide")
+    )
+    spark.range(500).selectExpr("id").coalesce(1).write.parquet(
+        os.path.join(src, "narrow")
+    )
+    # flatten both data files into one directory
+    import glob as _glob
+    import shutil as _shutil
+
+    wide_name = None
+    for i, f in enumerate(
+        sorted(_glob.glob(os.path.join(src, "*", "*.parquet")))
+    ):
+        dest = f"part-{i}-{os.path.basename(f)}"
+        if os.path.basename(os.path.dirname(f)) == "wide":
+            wide_name = dest
+        _shutil.move(f, os.path.join(src, dest))
+    _shutil.rmtree(os.path.join(src, "wide"))
+    _shutil.rmtree(os.path.join(src, "narrow"))
+    wide = [
+        r["path"]
+        for r in list_files(spark, src).where("path LIKE '%.parquet'").collect()
+        if r["path"].endswith(wide_name)
+    ]
+    assert len(wide) == 1
+    listing = list_files(spark, src).where(F.col("path").isin(wide))
+    audit = compaction_execute(
+        spark, listing, target_bytes=1 << 30, out_dir=out, src_root=src
+    )
+    assert sum(r["n_rows"] for r in audit.collect()) == 500
+    got = spark.read.parquet(out)
+    assert "v" in got.columns, "subset rewrite dropped a listed-only column"
+    assert got.selectExpr("sum(v)").collect()[0][0] == sum(
+        i % 7 for i in range(500)
+    )
+
+
 def test_bm25_matches_hand_computation(spark):
     import math
 

@@ -1,9 +1,9 @@
-"""Full-registry oracle sweep as a (gated) test.
+"""Full-registry oracle sweep at sf0.01 as a (gated) test.
 
-The driver's correctness gate samples only the first 50 registry
-entries per round; this test runs EVERY registered query against its
-DuckDB oracle so entries outside the gate window cannot silently rot.
-It takes several minutes, so it only runs when explicitly requested:
+Tier-1 already checks every registry entry against its DuckDB oracle
+at sf0.001 (``tests/test_gate_head.py``); this test runs the same
+sweep at the driver's scale, sf0.01 by default. It takes several
+minutes, so it only runs when explicitly requested:
 
     SPARKOBS_FULL_SWEEP=1 python -m pytest tests/test_oracle_sweep.py -q
 

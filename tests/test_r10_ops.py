@@ -42,7 +42,7 @@ def _slow_build_and_stage(args):
                 fh.write(tag)
             time.sleep(0.01)
 
-    return ens(stage, _build, marker="_DONE")
+    return ens(stage, _build)
 
 
 def _dead_pid() -> int:
@@ -67,7 +67,7 @@ def test_ensure_stage_concurrent_builders_publish_atomically(tmp_path):
         deadline = time.time() + 60
         observed_complete = 0
         while not async_res.ready() and time.time() < deadline:
-            if os.path.exists(os.path.join(stage, "_DONE")):
+            if os.path.exists(os.path.join(stage, "_SUCCESS")):
                 names = sorted(
                     n for n in os.listdir(stage) if n.startswith("f")
                 )
@@ -83,7 +83,7 @@ def test_ensure_stage_concurrent_builders_publish_atomically(tmp_path):
             time.sleep(0.002)
         results = async_res.get(timeout=60)
     assert all(r == stage for r in results)
-    assert os.path.exists(os.path.join(stage, "_DONE"))
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
     assert observed_complete > 0, "poller never saw the published stage"
     # losers cleaned up after themselves (their owners are now dead,
     # but they rmtree'd their tmps on losing — no sweep needed)
@@ -103,8 +103,8 @@ def test_ensure_stage_skips_build_when_marker_present(tmp_path):
         calls.append(tmp)
         os.makedirs(tmp)
 
-    ensure_stage(stage, _build, marker="_M")
-    ensure_stage(stage, _build, marker="_M")
+    ensure_stage(stage, _build)
+    ensure_stage(stage, _build)
     assert len(calls) == 1, "complete stage was rebuilt"
 
 
@@ -122,9 +122,9 @@ def test_ensure_stage_replaces_partial_occupant(tmp_path):
         with open(os.path.join(tmp, "fresh"), "w") as fh:
             fh.write("ok")
 
-    out = ensure_stage(stage, _build, marker="_M")
+    out = ensure_stage(stage, _build)
     assert out == stage
-    assert os.path.exists(os.path.join(stage, "_M"))
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
     assert os.path.exists(os.path.join(stage, "fresh"))
     assert not os.path.exists(os.path.join(stage, "stale"))
     asides = [n for n in os.listdir(tmp_path) if ".aside" in n]
@@ -144,7 +144,7 @@ def test_ensure_stage_sweeps_dead_owner_leftovers(tmp_path):
     def _build(tmp):
         os.makedirs(tmp)
 
-    ensure_stage(stage, _build, marker="_M")
+    ensure_stage(stage, _build)
     assert not os.path.exists(stage + f".tmp{dead}")
     assert not os.path.exists(stage + f".aside{dead}")
     assert os.path.exists(live), "non-pid-suffixed sibling must survive"

@@ -72,15 +72,15 @@ def test_stage_format_tag_versions_the_resolved_conventions():
     cache tag, so a stage cached under the OLD conventions would be
     read back under the new reader defaults — nulls written as ''
     reading back as empty string. The resolved-convention version now
-    participates in the stage key."""
+    participates in the stage tag, so each convention names its own
+    source key in ``stage_dir``."""
     from sparkobs import queries as Q
+    from sparkobs.io import stage_dir
 
     assert Q._FMT_CONVENTION_V >= 2
-    tag_now = f"csv:2:v{Q._FMT_CONVENTION_V}:[]"
-    key_now = Q._stage_key("/x", "orders", tag_now)
-    key_v1 = Q._stage_key("/x", "orders", "csv:2:v1:[]")
-    key_untagged = Q._stage_key("/x", "orders", "csv:2:[]")
-    assert len({key_now, key_v1, key_untagged}) == 3
+    tags = (f"fmt:csv:2:v{Q._FMT_CONVENTION_V}:[]", "fmt:csv:2:v1:[]", "fmt:csv:2:[]")
+    dirs = [stage_dir("/x", ("orders",), t) for t in tags]
+    assert len({d.rsplit("_", 1)[0] for d in dirs}) == 3
 
 
 def test_sampled_join_agg_ci_exact_degeneracy(spark):

@@ -439,7 +439,8 @@ def test_zone_map_stage_prunes_predecessors_and_publishes_atomically(
     import os
     import time
 
-    from sparkobs.io import ensure_zone_map_stage, zone_map_stage_dir
+    from sparkobs.io import ZM16_STAGE, stage_dir
+    from sparkobs.queries import zone_map_prune_orders
 
     sf = os.path.join(str(tmp_path), "sfx")
     os.makedirs(sf)
@@ -447,44 +448,41 @@ def test_zone_map_stage_prunes_predecessors_and_publishes_atomically(
         "id AS o_orderkey",
         "timestampadd(DAY, CAST(id AS INT), TIMESTAMP '1995-01-01') AS o_orderdate",
     ).write.parquet(os.path.join(sf, "orders.parquet"))
-    s1 = ensure_zone_map_stage(spark, sf)
+    zone_map_prune_orders(spark, sf)
+    s1 = stage_dir(sf, *ZM16_STAGE)
     assert os.path.exists(os.path.join(s1, "_SUCCESS"))
     # regenerate the source: mtime changes -> new version key
     time.sleep(0.05)
     os.utime(os.path.join(sf, "orders.parquet"))
-    s2 = zone_map_stage_dir(sf)
+    s2 = stage_dir(sf, *ZM16_STAGE)
     assert s2 != s1
-    s2b = ensure_zone_map_stage(spark, sf)
-    assert s2b == s2 and os.path.exists(os.path.join(s2, "_SUCCESS"))
+    zone_map_prune_orders(spark, sf)
+    assert os.path.exists(os.path.join(s2, "_SUCCESS"))
     # predecessor pruned, no tmp/aside leftovers for this source
     prefix = os.path.basename(s2).rsplit("_", 1)[0]
     siblings = _glob.glob(os.path.join(os.path.dirname(s2), f"{prefix}_*"))
     assert siblings == [s2], siblings
     # idempotent re-entry
-    assert ensure_zone_map_stage(spark, sf) == s2
-    # r8 ADVICE crash paths: (a) a dead process's .aside/.tmp siblings
-    # of the CURRENT base are swept on the next staging pass (a live
-    # pid's — simulated by our own — survive); (b) legacy single-key
-    # sparkobs_zm16_<16hex> dirs from before the two-component format
-    # are swept too
-    tmpdir = os.path.dirname(s2)
-    # force a new version key so the next ensure() takes the staging
-    # path (the sweep only runs there), then plant leftovers that
-    # share the NEW base
+    zone_map_prune_orders(spark, sf)
+    assert stage_dir(sf, *ZM16_STAGE) == s2
+    # r8 ADVICE crash path: a dead process's .aside/.tmp siblings of
+    # the CURRENT base are swept on the next staging pass (a live
+    # pid's — simulated by pid 1 — survive)
+    # force a new version key so the next call takes the staging path
+    # (the sweep only runs there), then plant leftovers that share the
+    # NEW base
     time.sleep(0.05)
     os.utime(os.path.join(sf, "orders.parquet"))
-    s3 = zone_map_stage_dir(sf)
+    s3 = stage_dir(sf, *ZM16_STAGE)
     dead_aside = f"{s3}.aside999999"  # pid 999999: beyond pid_max
     # pid 1 = init: always alive, kill(1,0) raises EPERM -> "live"
     # (our own pid would collide with the stager's own tmp path)
     live_tmp = f"{s3}.tmp1"
-    legacy = os.path.join(tmpdir, "sparkobs_zm16_" + "ab12" * 4)
-    for d in (dead_aside, live_tmp, legacy):
+    for d in (dead_aside, live_tmp):
         os.makedirs(d, exist_ok=True)
-    assert ensure_zone_map_stage(spark, sf) == s3
+    zone_map_prune_orders(spark, sf)
     assert os.path.exists(os.path.join(s3, "_SUCCESS"))
     assert not os.path.exists(dead_aside), "dead-pid aside must be swept"
-    assert not os.path.exists(legacy), "legacy single-key stage must be swept"
     assert os.path.exists(live_tmp), "live-pid tmp must survive the sweep"
     os.rmdir(live_tmp)
 

@@ -221,7 +221,7 @@ def test_arrival_ordered_stage_handles_empty_events(spark, tmp_path):
         os.path.join(sf, "events.parquet")
     )
     stage = _stage_events_arrival_ordered(spark, sf)
-    assert os.path.exists(os.path.join(stage, "_STAGED"))
+    assert os.path.exists(os.path.join(stage, "_SUCCESS"))
     assert spark.read.schema(EVENTS_SCHEMA).parquet(stage).count() == 0
     assert _stage_events_arrival_ordered(spark, sf) == stage
     # no build/aside leftovers next to the published stage

@@ -22,10 +22,8 @@ from __future__ import annotations
 
 import argparse
 import functools
-import hashlib
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -90,16 +88,13 @@ def _copy(df, table: str, i: int, dim: int):
 
 def stage_mirror(spark, sf_dir: str, copies: int) -> str:
     """Stage ``copies``× of ``sf_dir`` as a complete sf-dir and return
-    its path. The stage is cached under the temp dir, keyed by the
-    resolved source dir, the grown tables' mtimes and ``copies``, and
-    published atomically by ``sparkobs.io.ensure_stage``."""
+    its path. The stage is a ``sparkobs.io.stage_dir`` of the grown
+    tables, tagged with ``copies``."""
     from pyspark.sql import DataFrame
 
-    from sparkobs.io import ensure_stage, load_table
+    from sparkobs.io import ensure_stage, load_table, stage_dir
 
     src = os.path.realpath(sf_dir)
-    mtimes = [os.stat(os.path.join(src, f"{t}.parquet")).st_mtime_ns for t in GROWN]
-    key = hashlib.sha256(f"{src}:{copies}:{mtimes}:v1".encode()).hexdigest()[:16]
 
     def build(tmp: str) -> None:
         for t in GROWN:
@@ -113,8 +108,7 @@ def stage_mirror(spark, sf_dir: str, copies: int) -> str:
             if f.endswith(".parquet") and f[: -len(".parquet")] not in GROWN:
                 os.symlink(os.path.join(src, f), os.path.join(tmp, f))
 
-    stage = os.path.join(tempfile.gettempdir(), f"sparkobs_mirror_{key}")
-    return ensure_stage(stage, build)
+    return ensure_stage(stage_dir(sf_dir, GROWN, f"mirror:{copies}"), build)
 
 
 def main(argv: list[str] | None = None) -> int:
