@@ -3,7 +3,7 @@
 # against its DuckDB oracle at sf0.001 (tests/test_gate_head.py),
 # and `make sweep` runs the full registry at sf0.01.
 
-.PHONY: test sweep gate bench bench-baseline smoke perfbench-test verify
+.PHONY: test sweep gate bench bench-baseline smoke verify
 
 # the tier-1 command ROADMAP.md names, so `make test` / `make verify`
 # run the same suite configuration as the gate
@@ -29,11 +29,10 @@ bench:
 bench-baseline:
 	cp BENCH_full.json BENCH_baseline.json
 
-# the benchmark harness's self-tests (perfbench wraps sparkobs.io)
-perfbench-test:
-	python3 -m pytest perfbench/tests -q -p no:cacheprovider
-
 smoke:
 	python -c "from sparkobs.session import get_spark; import __spark_entry__ as e; print(e.entry(get_spark('smoke')).count())"
 
-verify: test perfbench-test sweep smoke
+# verify also runs the benchmark harness's self-tests (perfbench wraps
+# sparkobs.io)
+verify: test sweep smoke
+	python3 -m pytest perfbench/tests -q -p no:cacheprovider

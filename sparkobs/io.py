@@ -175,13 +175,14 @@ def scratch_dir(prefix: str, key: str) -> str:
     concurrent drivers collision-free, while repeated runs in ONE
     process reuse a single path instead of leaking one per call: what
     an earlier call left there is removed. Dead owners' scratch of the
-    same (prefix, key) is swept here, bounding the leak to at most one
-    dir per live process."""
-    base = os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
-    for sib in glob.glob(f"{base}_p*"):
+    same prefix is swept here, whatever its key (a key that names a
+    stage changes with the stage's version), bounding the leak to one
+    dir per live process and key."""
+    tmp = tempfile.gettempdir()
+    for sib in glob.glob(os.path.join(tmp, f"{prefix}_*_p*")):
         if _stage_owner_dead(os.path.basename(sib)):
             shutil.rmtree(sib, ignore_errors=True)
-    out = f"{base}_p{os.getpid()}"
+    out = os.path.join(tmp, f"{prefix}_{key}_p{os.getpid()}")
     shutil.rmtree(out, ignore_errors=True)
     return out
 

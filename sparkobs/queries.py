@@ -17,7 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkobs.io import ensure_stage, load_table, scratch_dir, stage_dir
+from sparkobs.io import ZM16_STAGE, ensure_stage, load_table, scratch_dir, stage_dir
 from sparkobs.session import jvm_class
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -11280,7 +11280,6 @@ def zone_map_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned/full/partial class, exact integers + one unrounded share.
     At 100 TB the map is built once (or read from footers) and every
     subsequent predicate estimate is metadata-only."""
-    from sparkobs.io import ZM16_STAGE
     from sparkobs.sources.listing import zone_map_build, zone_map_prune_estimate
 
     stage = ensure_stage(

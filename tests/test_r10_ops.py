@@ -156,13 +156,20 @@ def test_scratch_dir_is_per_process_and_sweeps_dead_owners():
     base = os.path.join(tempfile.gettempdir(), f"sparkobs_t10_{key}")
     dead = _dead_pid()
     dead_dir = f"{base}_p{dead}"
-    os.makedirs(dead_dir, exist_ok=True)
+    # a dead owner's scratch under an older key of the same prefix
+    dead_old_key = os.path.join(
+        tempfile.gettempdir(), f"sparkobs_t10_{key}old_p{dead}"
+    )
+    for d in (dead_dir, dead_old_key):
+        os.makedirs(d, exist_ok=True)
     try:
         out = scratch_dir("sparkobs_t10", key)
         assert out == f"{base}_p{os.getpid()}"
         assert not os.path.exists(dead_dir), "dead owner's scratch kept"
+        assert not os.path.exists(dead_old_key), "dead owner's old key kept"
     finally:
         shutil.rmtree(dead_dir, ignore_errors=True)
+        shutil.rmtree(dead_old_key, ignore_errors=True)
         shutil.rmtree(f"{base}_p{os.getpid()}", ignore_errors=True)
 
 
